@@ -75,7 +75,7 @@ object Bench {
       // 1g executor heaps ON PURPOSE: the kernel needs little heap, and
       // 8 executors x 4g measured a catastrophic pass-2/3 anomaly (task
       // wall 15x, ~60s of first-touch/THP work across 32GB of young gen
-      // as the heaps grow — graft.tools.BenchOrderProbe); 1g heals it.
+      // as the heaps grow); 1g heals it.
       // throughput GC with a large young gen: the kernel's allocations
       // die young; ergonomic young-gen defaults caused 2x the minor-GC
       // copy traffic (measured +10% throughput from NewRatio=1).

@@ -9,7 +9,6 @@ import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.core.{HtmlExtract, Segmenter, Tokenizer}
 import graft.pipeline.TurnExtractor
 
 /** The extraction kernel as a native Catalyst expression returning ONLY
@@ -78,10 +77,7 @@ object ExtractStats {
     }
     val text = u.toString
     try {
-      val elements =
-        if (HtmlExtract.looksLikeHtml(text)) HtmlExtract.tokenize(text)
-        else Tokenizer.tokenize(text)
-      val md = Segmenter.segment(elements)
+      val md = TurnExtractor.segment(text)
       var nParas = 0
       var nSegs = 0
       var chars = 0L

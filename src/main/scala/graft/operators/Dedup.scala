@@ -401,8 +401,8 @@ object Dedup {
     * function's lambda re-evaluates the whole tree per element
     * (Catalyst does no cross-invocation CSE inside lambdas) — for a
     * tokenization tree under a per-token transform that is O(tokens^2)
-    * regex work, measured at ~1.7 ms/doc vs ~30 us bound
-    * (graft.tools.DecontProbe). The single-element transform binds the
+    * regex work, measured at ~1.7 ms/doc vs ~30 us bound on q41's
+    * shingling. The single-element transform binds the
     * value as a NamedLambdaVariable: inner references become variable
     * reads.
     */

@@ -50,7 +50,7 @@ object Similarity {
   /** Keyspace auto-sizing for the near-dup tables:
     * `ceil(log2(n / targetBucket))` clamped to [4, 28]. `targetBucket`
     * is the MEAN occupancy target with tail headroom built in: cells of
-    * random central hyperplanes are heavy-tailed ([[graft.tools.LshTailProbe]],
+    * random central hyperplanes are heavy-tailed (measured on
     * 10^6 gaussian vectors, cap 256: 14 bits drop 27% of rows into
     * capped buckets, 17 bits 4%, 22 bits 0%), and driving the tail to
     * ZERO costs ~log2(n)+2 bits, which collapses per-table recall at

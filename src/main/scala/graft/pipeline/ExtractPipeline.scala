@@ -4,40 +4,38 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
-/** The distributed extraction pipeline (SURVEY.md §3.4):
+/** The distributed extraction pipeline (SURVEY.md §3.4), as
+  * `runCheckpointed` runs it, once per batch of uncommitted buckets:
   *
-  *   read -> (anti-join vs committed manifest) -> salted repartition ->
-  *   sortWithinPartitions(conv_id, turn_idx) -> mapPartitions(extract) ->
-  *   write per bucket + manifest commit
+  *   read -> filter(bucket in batch) -> select(conv_id, turn_idx, text) ->
+  *   mapPartitions(extract) -> repartition(bucket) ->
+  *   sortWithinPartitions(conv_id, turn_idx) -> write per bucket +
+  *   manifest commit
   *
-  * Scale notes (the 100 TB argument):
-  *   - extraction is per-turn stateless, so the heavy stage is shuffled on
-  *     `pmod(hash(conv_id, turn_idx), N)` — perfectly balanced regardless
-  *     of conversation-length skew (no hot key can exist);
-  *   - conversation-level ordering (window) is a *separate, cheap* stage
-  *     over the already-extracted narrow columns, partitioned by conv_id —
-  *     the only stage where a 8000-turn conversation lands on one task,
-  *     and it only carries (conv_id, turn_idx, nBytes)-sized rows;
-  *   - resume is a partition-pruning filter (committed bucket list pushed
-  *     down as `!bucket.isin(...)`), not a data-scan anti-join, so a
-  *     restart reads only uncommitted input partitions.
+  * Scale notes:
+  *   - extraction is per-turn stateless, so it runs map-side on the scan
+  *     splits, which the source size-balances (`maxPartitionBytes`): the
+  *     kernel stage has no shuffle and no key that could skew;
+  *   - the one exchange is the write layout, keyed on `bucket`, a hash of
+  *     conv_id, so one conversation lands in one bucket file, sorted;
+  *   - conversation-level ordering (`withConvOrder`) is a separate, cheap
+  *     window stage over narrow columns only;
+  *   - resume skips committed buckets, but it is NOT partition pruning:
+  *     `bucket` is computed from conv_id, not a column of the input, so
+  *     every batch re-scans the whole input and filters it
+  *     (`pipeline.input_read_ratio` in perfbench reads batches-per-run).
+  *     Reading each input row once per run is ROADMAP item 2.
   */
 object ExtractPipeline {
 
-  /** Pure transform: one serde boundary per task, zero shuffles. */
-  def extract(turns: Dataset[Turn]): Dataset[ExtractedTurn] = {
-    import turns.sparkSession.implicits._
-    turns.mapPartitions(_.map(TurnExtractor.extract))
-  }
-
-  /** Zero-shuffle narrow path: project to the 3 columns the kernel reads
-    * BEFORE the typed boundary, so parquet scans only conv_id, turn_idx,
-    * text (pruning verified via .explain ReadSchema). This is the default
-    * heavy stage: per-turn statelessness means map-side extraction on
-    * scan partitions, which are size-balanced by the source
-    * (maxPartitionBytes), so no shuffle and no skew.
+  /** The extraction entry point: project to the 3 columns the kernel
+    * reads BEFORE the typed boundary, so parquet scans only conv_id,
+    * turn_idx, text (pruning verified via .explain ReadSchema), then run
+    * the kernel map-side on the input partitions — no shuffle. Takes any
+    * Dataset with those columns: a parquet DataFrame or an in-memory
+    * `Dataset[Turn]`.
     */
-  def extractNarrow(turns: DataFrame): Dataset[ExtractedTurn] = {
+  def extractNarrow(turns: Dataset[_]): Dataset[ExtractedTurn] = {
     import turns.sparkSession.implicits._
     turns.select(col("conv_id"), col("turn_idx"), col("text"))
       .as[TurnLite]
@@ -49,19 +47,6 @@ object ExtractPipeline {
     * stay balanced across thousands of conversations.
     */
   def bucketCol(nBuckets: Int) = pmod(xxhash64(col("conv_id")), lit(nBuckets))
-
-  /** The balanced heavy stage: salt on (conv_id, turn_idx) — per-turn
-    * statelessness makes this exact, defusing any conversation skew.
-    */
-  def extractBalanced(turns: Dataset[Turn], partitions: Int): Dataset[ExtractedTurn] = {
-    import turns.sparkSession.implicits._
-    turns
-      .select(col("conv_id"), col("turn_idx"), col("text"))
-      .repartition(partitions,
-        pmod(xxhash64(col("conv_id"), col("turn_idx")), lit(partitions)))
-      .as[TurnLite]
-      .mapPartitions(_.map(TurnExtractor.extract(_: TurnLite)))
-  }
 
   /** Stable conversation ordering + conversation-relative offsets: the
     * window stage the north rule names.
@@ -130,7 +115,8 @@ object ExtractPipeline {
     val withBucket = turns.withColumn("bucket", bucketCol(nBuckets))
 
     for (batch <- todo.grouped(batchBuckets)) {
-      // partition-pruning filter: only uncommitted buckets are read
+      // row filter, not partition pruning: `bucket` is computed, so each
+      // batch re-scans the whole input (ROADMAP item 2)
       val slice = withBucket
         .filter(col("bucket").isin(batch: _*))
         .drop("bucket")
@@ -172,21 +158,6 @@ object ExtractPipeline {
             inputFingerprint, graft.BuildInfo.version))
       }
     }
-  }
-
-  /** Anti-join resume variant: when the committed-partition list is too
-    * large for an isin filter (millions of partitions on a real table),
-    * the manifest becomes a broadcast left_anti join instead — same
-    * semantics, bounded driver memory (SURVEY.md §2.8).
-    */
-  def filterUncommitted(turns: Dataset[Turn], nBuckets: Int,
-                        committed: Seq[Int]): Dataset[Turn] = {
-    import turns.sparkSession.implicits._
-    val done = committed.toDF("bucket")
-    turns.withColumn("bucket", bucketCol(nBuckets))
-      .join(broadcast(done), Seq("bucket"), "left_anti")
-      .drop("bucket")
-      .as[Turn]
   }
 
   /** The lineage/metrics surface: one row per committed bucket manifest

@@ -54,6 +54,16 @@ object TurnExtractor {
     n
   }
 
+  /** The kernel's routing, shared by this typed path and the
+    * `ExtractStats` expression: HTML strip or line markup, then the
+    * segmentation state machine. Byte gate and error handling stay with
+    * each caller.
+    */
+  def segment(text: String): MultiDoc =
+    Segmenter.segment(
+      if (HtmlExtract.looksLikeHtml(text)) HtmlExtract.tokenize(text)
+      else Tokenizer.tokenize(text))
+
   def extract(turn: Turn): ExtractedTurn =
     extract(turn.conv_id, turn.turn_idx, turn.text)
 
@@ -70,10 +80,7 @@ object TurnExtractor {
         0, tooLargeBytes)
     } else {
       try {
-        val elements =
-          if (HtmlExtract.looksLikeHtml(text)) HtmlExtract.tokenize(text)
-          else Tokenizer.tokenize(text)
-        val md = Segmenter.segment(elements)
+        val md = segment(text)
         val extracted = Segmenter.extractedText(md)
         var nParas = 0
         var di = 0

@@ -129,9 +129,9 @@ object OoxmlDecode {
     * at several reader() calls per document it both dominated decode
     * wall time and GLOBALLY SERIALIZED the tier (measured: 8 decode
     * threads ran 1.9x one thread; with the thread-local factory the
-    * pure-thread pair scales with the host envelope —
-    * DecodeKernelProbe). XMLInputFactory is not specified thread-safe,
-    * so per-thread instances, not one shared one.
+    * pure-thread pair scales with the host envelope). XMLInputFactory
+    * is not specified thread-safe, so per-thread instances, not one
+    * shared one.
     */
   private val factories = new ThreadLocal[XMLInputFactory] {
     override def initialValue(): XMLInputFactory = {

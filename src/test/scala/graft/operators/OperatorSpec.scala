@@ -398,10 +398,10 @@ class OperatorSpec extends AnyFunSuite {
     assert(Similarity.autoBits(10L) == 4)
     // keying stage at 1e6: deterministic pseudo-gaussian vectors, one
     // table of autoBits hyperplanes, bounded buckets. Sign-pattern cells
-    // are heavy-tailed (graft.tools.LshTailProbe: zero-oversize costs
-    // ~log2(n)+2 bits = per-table recall collapse), so the sizing claim
-    // is: capped-and-COUNTED drops stay a small fraction per table that
-    // the remaining independent tables recover.
+    // are heavy-tailed (measured: zero-oversize costs ~log2(n)+2 bits =
+    // per-table recall collapse), so the sizing claim is:
+    // capped-and-COUNTED drops stay a small fraction per table that the
+    // remaining independent tables recover.
     val dim = 16
     val n = 1000000L
     val bits = Similarity.autoBits(n)

@@ -29,15 +29,22 @@ class ExtractPipelineSpec extends AnyFunSuite {
   }
 
   test("extraction output equals kernel output per turn (any parallelism)") {
-    import spark.implicits._
-    val turns = Transcripts.generate(spark, 40)
-    val viaSpark = ExtractPipeline.extractBalanced(turns, 8)
-      .collect().map(e => (e.conv_id, e.turn_idx) -> e).toMap
+    val turns = Transcripts.generate(spark, 40).repartition(8)
+    val dir = Files.createTempDirectory("graft-extract-in").toString + "/t"
+    turns.write.parquet(dir)
     val local = turns.collect().map(TurnExtractor.extract)
     assert(local.nonEmpty)
-    for (e <- local) {
-      assert(viaSpark((e.conv_id, e.turn_idx)) == e,
-        s"mismatch at ${e.conv_id}/${e.turn_idx}")
+    // the same turns in memory and as a parquet read (the column-pruned
+    // scan `runCheckpointed` and q26 take)
+    for ((input, viaSpark) <- Seq(
+        "in-memory Dataset[Turn]" -> ExtractPipeline.extractNarrow(turns),
+        "parquet read" -> ExtractPipeline.extractNarrow(spark.read.parquet(dir)))) {
+      val got = viaSpark.collect().map(e => (e.conv_id, e.turn_idx) -> e).toMap
+      assert(got.size == local.length, input)
+      for (e <- local) {
+        assert(got((e.conv_id, e.turn_idx)) == e,
+          s"$input: mismatch at ${e.conv_id}/${e.turn_idx}")
+      }
     }
     assert(local.forall(_.error == null))
   }
@@ -47,7 +54,7 @@ class ExtractPipelineSpec extends AnyFunSuite {
     val bad = Turn("c1", 0, "user", "x" * (TurnExtractor.maxTurnBytes + 1),
       null, new java.sql.Timestamp(0))
     val ok = Turn("c1", 1, "user", "hello world", null, new java.sql.Timestamp(0))
-    val out = ExtractPipeline.extract(spark.createDataset(Seq(bad, ok)))
+    val out = ExtractPipeline.extractNarrow(spark.createDataset(Seq(bad, ok)))
       .collect().sortBy(_.turn_idx)
     assert(out.length == 2)
     assert(out(0).error != null && out(0).documents.isEmpty)
@@ -57,7 +64,7 @@ class ExtractPipelineSpec extends AnyFunSuite {
   test("conversation window: stable ordering + running offsets") {
     import spark.implicits._
     val turns = Transcripts.generate(spark, 10)
-    val df = ExtractPipeline.withConvOrder(ExtractPipeline.extract(turns))
+    val df = ExtractPipeline.withConvOrder(ExtractPipeline.extractNarrow(turns))
     val rows = df.select("conv_id", "turn_idx", "turn_rank", "conv_char_offset")
       .collect()
       .groupBy(_.getString(0))
@@ -115,20 +122,6 @@ class ExtractPipelineSpec extends AnyFunSuite {
       ExtractPipeline.readCommitted(spark, clean)
         .agg(org.apache.spark.sql.functions.sum("nBytes")).head.getLong(0))
     assert(manifest.forall(_.getAs[String]("inputFingerprint") == "seed=42/n=30"))
-  }
-
-  test("anti-join resume filter equals the isin filter") {
-    import spark.implicits._
-    import org.apache.spark.sql.functions.col
-    val turns = Transcripts.generate(spark, 25)
-    val committed = Seq(0, 2)
-    val viaAnti = ExtractPipeline.filterUncommitted(turns, 4, committed)
-      .collect().map(t => (t.conv_id, t.turn_idx)).toSet
-    val viaIsin = turns.withColumn("bucket", ExtractPipeline.bucketCol(4))
-      .filter(!col("bucket").isin(committed: _*))
-      .collect().map(r => (r.getString(0), r.getInt(1))).toSet
-    assert(viaAnti == viaIsin && viaAnti.nonEmpty)
-    assert(viaAnti.size < turns.count())
   }
 
   test("re-run over fully committed output is a no-op") {

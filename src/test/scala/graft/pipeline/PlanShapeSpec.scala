@@ -62,7 +62,7 @@ class PlanShapeSpec extends AnyFunSuite {
   test("conv-order window carries only narrow columns below its exchange") {
     import org.apache.spark.sql.catalyst.plans.logical.{Window => LWindow}
     val turns = Transcripts.generate(spark, 5)
-    val df = ExtractPipeline.withConvOrder(ExtractPipeline.extract(turns))
+    val df = ExtractPipeline.withConvOrder(ExtractPipeline.extractNarrow(turns))
     val wins = df.queryExecution.optimizedPlan.collect { case w: LWindow => w }
     assert(wins.nonEmpty, "plan must contain a Window node")
     for (w <- wins) {
@@ -85,7 +85,7 @@ class PlanShapeSpec extends AnyFunSuite {
     // a materialized table input must NOT be cached
     val dir = java.nio.file.Files.createTempDirectory("graft-convorder")
       .toString + "/t"
-    ExtractPipeline.extract(Transcripts.generate(spark, 3))
+    ExtractPipeline.extractNarrow(Transcripts.generate(spark, 3))
       .write.mode("overwrite").parquet(dir)
     import spark.implicits._
     val fromTable = ExtractPipeline.withConvOrder(

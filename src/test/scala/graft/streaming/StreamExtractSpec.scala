@@ -101,7 +101,7 @@ class StreamExtractSpec extends AnyFunSuite {
     val streamed = spark.table("stream_out")
       .collect().map(r => (r.getString(0), r.getInt(1)) ->
         (r.getInt(2), r.getLong(3))).toMap
-    val batch = graft.pipeline.ExtractPipeline.extract(turns).collect()
+    val batch = graft.pipeline.ExtractPipeline.extractNarrow(turns).collect()
     assert(batch.nonEmpty)
     for (e <- batch) {
       assert(streamed((e.conv_id, e.turn_idx)) == ((e.nParas, e.nBytes)))
