@@ -75,6 +75,20 @@ object SparkEntry {
       .select(cols.map(c => col("_r." + c).as(c)): _*)
   }
 
+  /** One glob over sibling directories: `parent/{a,b}`. Basenames are
+    * restricted to `[A-Za-z0-9_]+` so none can carry a glob
+    * metacharacter (`,` `{` `}` `*` ...) that would change the file set.
+    */
+  private[graft] def braceGlob(dirs: Seq[String]): String = {
+    val parents = dirs.map(d => d.substring(0, d.lastIndexOf('/')))
+    require(parents.distinct.size == 1,
+      "corpus dirs must share a parent for the glob source")
+    val names = dirs.map(_.substring(parents.head.length + 1))
+    names.foreach(n => require(n.matches("[A-Za-z0-9_]+"),
+      s"corpus dir name '$n' is not a plain [A-Za-z0-9_]+ name"))
+    parents.head + names.mkString("/{", ",", "}")
+  }
+
   /** Persisted deterministic transcript table for the q26/q27 oracles:
     * BOTH sides read the same parquet — Spark runs the extraction kernel
     * over it, DuckDB independently re-derives the extracted text from the
@@ -1125,12 +1139,8 @@ object SparkEntry {
       // file set, but one directory listing + one file-source log per
       // micro-batch instead of five (guide §6 — listing cost scales
       // with source count; the union form paid it 5x per trigger)
-      val parents = dirs.map(d => d.substring(0, d.lastIndexOf('/')))
-      require(parents.distinct.size == 1,
-        "corpus dirs must share a parent for the glob source")
-      val glob = parents.head + dirs.map(_.substring(parents.head.length + 1))
-        .mkString("/{", ",", "}")
-      val files = s.readStream.format("binaryFile").schema(schema).load(glob)
+      val files = s.readStream.format("binaryFile").schema(schema)
+        .load(braceGlob(dirs))
       val sink: (DataFrame, Long) => Unit =
         (batch, _) => batch.write.mode("append").parquet(out)
       val q = graft.streaming.StreamExtract.decodeStream(files)

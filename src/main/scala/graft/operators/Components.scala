@@ -109,9 +109,9 @@ object Components {
       // (threshold is clamped to Int.MaxValue-2: a larger local-path
       // budget would not fit an Array anyway)
       val effT = math.min(threshold, (Int.MaxValue - 2).toLong).toInt
-      val probe = edges.limit(effT + 1).collect()
-      if (probe.length <= effT) localLabels(spark, probe.map(r =>
-        (r.getLong(0), r.getLong(1))))
+      import spark.implicits._
+      val probe = edges.as[(Long, Long)].limit(effT + 1).collect()
+      if (probe.length <= effT) localLabels(spark, probe)
       else distributedLabels(edges, maxRounds)._1
     } finally edges.unpersist()
   }

@@ -5,12 +5,12 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
 /** The distributed extraction pipeline (SURVEY.md §3.4), as
-  * `runCheckpointed` runs it, once per batch of uncommitted buckets:
+  * `runCheckpointed` runs it, once per run over all uncommitted buckets:
   *
-  *   read -> filter(bucket in batch) -> select(conv_id, turn_idx, text) ->
+  *   read -> filter(bucket in todo) -> select(conv_id, turn_idx, text) ->
   *   mapPartitions(extract) -> repartition(bucket) ->
-  *   sortWithinPartitions(conv_id, turn_idx) -> write per bucket +
-  *   manifest commit
+  *   sortWithinPartitions(bucket, conv_id, turn_idx) -> write per bucket ->
+  *   exact per-bucket aggregate of the written files -> manifest commits
   *
   * Scale notes:
   *   - extraction is per-turn stateless, so it runs map-side on the scan
@@ -22,9 +22,9 @@ import org.apache.spark.sql.expressions.Window
   *     window stage over narrow columns only;
   *   - resume skips committed buckets, but it is NOT partition pruning:
   *     `bucket` is computed from conv_id, not a column of the input, so
-  *     every batch re-scans the whole input and filters it
-  *     (`pipeline.input_read_ratio` in perfbench reads batches-per-run).
-  *     Reading each input row once per run is ROADMAP item 2.
+  *     a run reads the whole input once and filters it; the metrics
+  *     read-back prunes to the run's buckets, which are a real partition
+  *     column of the output.
   */
 object ExtractPipeline {
 
@@ -92,71 +92,59 @@ object ExtractPipeline {
     df.join(narrow, Seq("conv_id", "turn_idx"))
   }
 
-  /** Checkpointed run: processes only uncommitted buckets, committing a
-    * manifest entry per bucket batch. Killing the job between batches and
-    * re-running converges to the same table (idempotent resume).
-    *
-    * @param batchBuckets buckets per write job (an Iceberg snapshot analog)
+  /** Checkpointed run: one write job over every uncommitted bucket, then
+    * one manifest commit per bucket, with `rows`/`bytes` from an exact
+    * aggregate over the files that job wrote. A bucket that got no rows
+    * is committed with `rows = 0, bytes = 0`. Re-running converges to the
+    * same table (idempotent resume), at run granularity:
+    *   - a run killed before its write job commits keeps nothing from
+    *     that run;
+    *   - a run killed between the job and the manifest commits redoes
+    *     those buckets on resume; dynamic partition overwrite makes the
+    *     redo idempotent;
+    *   - task-level retries inside the job are Spark's.
     */
   def runCheckpointed(
       spark: SparkSession,
       turns: Dataset[Turn],
       outDir: String,
       nBuckets: Int,
-      batchBuckets: Int = 8,
       inputFingerprint: String = ""): Unit = {
-    import spark.implicits._
     val catalog = new HadoopManifestCatalog(
       outDir, spark.sparkContext.hadoopConfiguration)
     val done = catalog.committedBuckets()
     val todo = (0 until nBuckets).filterNot(done.contains)
     if (todo.isEmpty) return
 
-    val withBucket = turns.withColumn("bucket", bucketCol(nBuckets))
+    val extracted =
+      extractNarrow(turns.filter(bucketCol(nBuckets).isin(todo: _*)))
+      .withColumn("bucket", bucketCol(nBuckets))
+      // deterministic layout: one conversation per bucket, sorted. The
+      // partitioned write sorts by `bucket` itself and the optimizer
+      // drops an earlier sort that does not lead with it
+      .repartition(todo.size, col("bucket"))
+      .sortWithinPartitions("bucket", "conv_id", "turn_idx")
+    extracted.write
+      .mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy("bucket")
+      .parquet(outDir)
 
-    for (batch <- todo.grouped(batchBuckets)) {
-      // row filter, not partition pruning: `bucket` is computed, so each
-      // batch re-scans the whole input (ROADMAP item 2)
-      val slice = withBucket
-        .filter(col("bucket").isin(batch: _*))
-        .drop("bucket")
-      val extracted = extractNarrow(slice)
-        .withColumn("bucket", bucketCol(nBuckets))
-        // deterministic layout: one conversation per bucket, sorted
-        .repartition(batch.size, col("bucket"))
-        .sortWithinPartitions("conv_id", "turn_idx")
-      // per-bucket metrics ride the write job itself (observe = task-side
-      // accumulators): zero extra jobs vs the old per-bucket read-back
-      // loop, which was a driver bottleneck at 10^5+ buckets. `bytes` is
-      // the extracted-payload byte count (sum of nBytes) — stable across
-      // file compression, which is the lineage-relevant quantity.
-      // BEST-EFFORT caveat (ADVICE r02): observe metrics are accumulator
-      // semantics — a stage re-execution (fetch-failure retry, speculative
-      // task) can double-apply, overstating counts vs what was committed.
-      // Validate rows against a footer count when retries were detected.
-      val obs = org.apache.spark.sql.Observation(
-        s"commit-metrics-${batch.head}")
-      val metricExprs = batch.flatMap { b =>
-        Seq(
-          count(when(col("bucket") === b, 1)).as(s"rows_$b"),
-          coalesce(sum(when(col("bucket") === b, col("nBytes"))), lit(0L))
-            .as(s"bytes_$b"))
-      }
-      extracted
-        .observe(obs, metricExprs.head, metricExprs.tail: _*)
-        .write
-        .mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("bucket")
-        .parquet(outDir)
-      val m = obs.get
-      for (b <- batch) {
-        catalog.commit(
-          ManifestEntry(b,
-            m(s"rows_$b").asInstanceOf[Long],
-            m(s"bytes_$b").asInstanceOf[Long],
-            inputFingerprint, graft.BuildInfo.version))
-      }
+    // `bytes` is the extracted-payload byte count (sum of nBytes): stable
+    // across file compression, which is the lineage-relevant quantity.
+    // The schema is given, so the read-back infers nothing and an empty
+    // write reads as no rows.
+    val written = spark.read.schema(extracted.schema).parquet(outDir)
+      .filter(col("bucket").isin(todo: _*))
+      .groupBy("bucket")
+      .agg(count(lit(1)), sum("nBytes"))
+      .collect()
+      .map(r => r.getLong(0).toInt -> (r.getLong(1), r.getLong(2)))
+      .toMap
+    for (b <- todo) {
+      val (rows, bytes) = written.getOrElse(b, (0L, 0L))
+      catalog.commit(ManifestEntry(b, rows, bytes, inputFingerprint,
+        graft.BuildInfo.version))
     }
   }
 

@@ -19,13 +19,9 @@ trait TranscriptCatalog {
   def commit(entry: ManifestEntry): Unit
 }
 
-/** One committed bucket's lineage record. `rows`/`bytes` come from
-  * `Dataset.observe` on the write job and are BEST-EFFORT: Spark metric
-  * accumulators in transformations can be applied more than once under
-  * stage re-execution (fetch-failure retries, speculation), so counts can
-  * overstate what was committed (ADVICE r02). Exact-count consumers
-  * should re-count from footers; the manifest's commit/resume semantics
-  * do not depend on the metric values.
+/** One committed bucket's lineage record. `rows`/`bytes` are an exact
+  * aggregate over the bucket's written files (`bytes` = sum of the
+  * extracted payload's `nBytes`).
   */
 final case class ManifestEntry(
     bucket: Int,

@@ -4,6 +4,7 @@ import graft.SparkTestSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 
 class ExtractPipelineSpec extends AnyFunSuite {
 
@@ -77,20 +78,56 @@ class ExtractPipelineSpec extends AnyFunSuite {
     }
   }
 
-  test("checkpointed run resumes idempotently (kill between batches)") {
+  /** Rows that break (conv_id, turn_idx) order within their own file. */
+  private def outOfOrder(dir: String): Long = {
     import spark.implicits._
-    val turns = Transcripts.generate(spark, 30)
+    spark.read.parquet(dir)
+      .select(input_file_name(), col("conv_id"), col("turn_idx"))
+      .as[(String, String, Int)]
+      .mapPartitions { it =>
+        var file = ""
+        var conv = ""
+        var idx = Int.MinValue
+        var bad = 0L
+        it.foreach { case (f, c, i) =>
+          if (f == file) {
+            val cmp = c.compareTo(conv)
+            if (cmp < 0 || (cmp == 0 && i <= idx)) bad += 1
+          }
+          file = f; conv = c; idx = i
+        }
+        Iterator(bad)
+      }
+      .collect().sum
+  }
+
+  /** bucket -> (rows, bytes), as the manifests record it and as the
+    * committed table holds it (a bucket with no rows reads (0, 0)).
+    */
+  private def manifestVsTable(dir: String, nBuckets: Int)
+      : (Map[Int, (Long, Long)], Map[Int, (Long, Long)]) = {
+    val recorded = ExtractPipeline.readManifest(spark, dir).collect()
+      .map(r => r.getAs[Int]("bucket") ->
+        (r.getAs[Long]("rows"), r.getAs[Long]("bytes"))).toMap
+    val held = ExtractPipeline.readCommitted(spark, dir)
+      .groupBy("bucket").agg(count(lit(1)), sum("nBytes")).collect()
+      .map(r => r.getInt(0) -> (r.getLong(1), r.getLong(2))).toMap
+    (recorded, (0 until nBuckets).map(b => b -> held.getOrElse(b, (0L, 0L))).toMap)
+  }
+
+  test("checkpointed run resumes idempotently (lost bucket rebuilt)") {
+    // round-robin repartition scrambles the generator's (conv_id,
+    // turn_idx) order, so file order must come from the write's own sort
+    val turns = Transcripts.generate(spark, 30).repartition(8)
     val clean = Files.createTempDirectory("graft-clean").toString
     val resumed = Files.createTempDirectory("graft-resumed").toString
 
     ExtractPipeline.runCheckpointed(spark, turns, clean, nBuckets = 4,
-      batchBuckets = 4, inputFingerprint = "seed=42/n=30")
-
-    // simulate a kill after the first batch: process only 2 buckets...
+      inputFingerprint = "seed=42/n=30")
     ExtractPipeline.runCheckpointed(spark, turns, resumed, nBuckets = 4,
-      batchBuckets = 2, inputFingerprint = "seed=42/n=30")
-    // (runCheckpointed completes all batches; emulate partial state by
-    // deleting one bucket's manifest + data, then resuming)
+      inputFingerprint = "seed=42/n=30")
+    // emulate a run that lost one bucket: delete its manifest + data,
+    // then resume
     val fs = org.apache.hadoop.fs.FileSystem.getLocal(
       spark.sparkContext.hadoopConfiguration)
     val victim = new org.apache.hadoop.fs.Path(s"$resumed/_manifest/bucket-00003.json")
@@ -99,7 +136,7 @@ class ExtractPipelineSpec extends AnyFunSuite {
     fs.delete(new org.apache.hadoop.fs.Path(s"$resumed/bucket=3"), true)
     // resume: must rebuild exactly the missing bucket
     ExtractPipeline.runCheckpointed(spark, turns, resumed, nBuckets = 4,
-      batchBuckets = 2, inputFingerprint = "seed=42/n=30")
+      inputFingerprint = "seed=42/n=30")
 
     def snap(dir: String) =
       ExtractPipeline.readCommitted(spark, dir)
@@ -109,28 +146,55 @@ class ExtractPipelineSpec extends AnyFunSuite {
         .sortBy(t => (t._1, t._2)).toSeq
     assert(snap(clean) == snap(resumed))
     assert(snap(clean).nonEmpty)
-    // manifests carry metrics
     val cat = new HadoopManifestCatalog(clean, spark.sparkContext.hadoopConfiguration)
     assert(cat.committedBuckets() == Set(0, 1, 2, 3))
-    // lineage surface: manifest rows sum to the table's row count
+    for (dir <- Seq(clean, resumed)) {
+      // every written file holds its rows in (conv_id, turn_idx) order
+      assert(outOfOrder(dir) == 0L, dir)
+      // lineage surface: each bucket's manifest rows/bytes equal that
+      // bucket's own count / sum(nBytes) in the committed table
+      val (recorded, held) = manifestVsTable(dir, 4)
+      assert(recorded == held, dir)
+    }
     val manifest = ExtractPipeline.readManifest(spark, clean).collect()
-    assert(manifest.map(_.getAs[Int]("bucket")).toSet == Set(0, 1, 2, 3))
-    assert(manifest.map(_.getAs[Long]("rows")).sum == snap(clean).size)
-    // bytes metric = extracted-payload byte sum, collected by the write
-    // job's observe() (no per-bucket read-back jobs)
-    assert(manifest.map(_.getAs[Long]("bytes")).sum ==
-      ExtractPipeline.readCommitted(spark, clean)
-        .agg(org.apache.spark.sql.functions.sum("nBytes")).head.getLong(0))
     assert(manifest.forall(_.getAs[String]("inputFingerprint") == "seed=42/n=30"))
   }
 
-  test("re-run over fully committed output is a no-op") {
+  test("checkpointed run reads each input row once") {
     import spark.implicits._
+    val in = Files.createTempDirectory("graft-read-once-in").toString + "/t"
+    Transcripts.generate(spark, 30).write.parquet(in)
+    val nTurns = spark.read.parquet(in).count()
+    val reads = spark.sparkContext.longAccumulator("input-rows-read")
+    val turns = spark.read.parquet(in).as[Turn].map { t => reads.add(1); t }
+    val out = Files.createTempDirectory("graft-read-once-out").toString
+    ExtractPipeline.runCheckpointed(spark, turns, out, nBuckets = 16)
+    assert(reads.value == nTurns)
+  }
+
+  test("re-run over fully committed output is a no-op") {
     val turns = Transcripts.generate(spark, 10)
     val dir = Files.createTempDirectory("graft-noop").toString
-    ExtractPipeline.runCheckpointed(spark, turns, dir, nBuckets = 2)
-    val before = ExtractPipeline.readCommitted(spark, dir).count()
-    ExtractPipeline.runCheckpointed(spark, turns, dir, nBuckets = 2)
-    assert(ExtractPipeline.readCommitted(spark, dir).count() == before)
+    // 64 buckets over 10 conversations: most buckets get no rows
+    ExtractPipeline.runCheckpointed(spark, turns, dir, nBuckets = 64)
+    val cat = new HadoopManifestCatalog(dir, spark.sparkContext.hadoopConfiguration)
+    assert(cat.committedBuckets() == (0 until 64).toSet)
+    val (recorded, held) = manifestVsTable(dir, 64)
+    val empty = held.collect { case (b, (0L, _)) => b }.toSet
+    assert(empty.size >= 54)
+    assert(empty.forall(b => recorded(b) == ((0L, 0L))))
+    assert(recorded == held)
+
+    // every file under the table (data and manifests), with size + mtime
+    def state() = {
+      val walk = Files.walk(java.nio.file.Paths.get(dir))
+      try walk.iterator().asScala.filter(Files.isRegularFile(_))
+        .map(p => (p.toString, Files.size(p), Files.getLastModifiedTime(p)))
+        .toSet
+      finally walk.close()
+    }
+    val before = state()
+    ExtractPipeline.runCheckpointed(spark, turns, dir, nBuckets = 64)
+    assert(state() == before)
   }
 }

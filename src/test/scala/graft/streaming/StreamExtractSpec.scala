@@ -41,6 +41,13 @@ class StreamExtractSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
+  test("q79 brace glob: one parent, plain basenames only") {
+    import graft.SparkEntry.braceGlob
+    assert(braceGlob(Seq("/tmp/graft_a_v1", "/tmp/b2")) == "/tmp/{graft_a_v1,b2}")
+    intercept[IllegalArgumentException](braceGlob(Seq("/tmp/a,b", "/tmp/c")))
+    intercept[IllegalArgumentException](braceGlob(Seq("/tmp/a{b", "/tmp/c")))
+  }
+
   test("q79 stream-decode entry: AvailableNow + foreachBatch lands the " +
     "q69 closed form and terminates") {
     // the oracle-surface streaming path (VERDICT r04 #8): run the REAL
