@@ -54,6 +54,9 @@ object Components {
   final case class CcStats(rounds: Int, inputEdges: Long,
                            edgeCounts: Seq[Long])
 
+  /** Largest edge count [[connectedComponents]] labels on the driver. */
+  private val LocalEdgeThreshold = 1 << 22
+
   /** Connected components of an undirected pair graph.
     *
     * Input: a DataFrame with two long-castable id columns (self-loops
@@ -67,20 +70,23 @@ object Components {
     * is the lever): one bounded limit-collect probes the canonical
     * distinct edge set (delivering it whole when it fits, terminating
     * early when it does not — no separate count job), and a graph
-    * at-or-under `spark.graft.cc.localEdgeThreshold` edges
-    * (default 2^22 ≈ 67 MB of (long, long) rows — comfortably
-    * driver-sized, the same bounded-collect discipline as broadcast
-    * joins and [[Similarity.samplePivots]]) is labeled by one driver
+    * at-or-under [[LocalEdgeThreshold]] edges is labeled by one driver
     * union-find over the collected edges instead of 2-4 alternation
     * rounds of 2 shuffles + checkpoint + checksum each (~25 Spark jobs
     * at smoke scale, measured: q45 wall 4.1 s → the local path removes
-    * the whole loop). Dedup pair graphs sit far below the threshold
-    * even at corpus scale (edges ≈ verified near-dup pairs of
-    * *representatives*); a graph beyond it takes the distributed
-    * alternation unchanged. Set the threshold conf to 0 to force the
-    * distributed path everywhere. Labels are identical on both paths
-    * (union-by-min + path compression ⇒ root = component minimum;
-    * pinned by ComponentsSpec's local-vs-distributed test).
+    * the whole loop). The driver-heap bound is the collected
+    * `Array[(Long, Long)]`: the encoder builds a generic `Tuple2` of two
+    * boxed `java.lang.Long`s per edge, ~76 B per edge with the array
+    * slot (measured 76.7 B on a compressed-oops heap), so ~320 MB at
+    * 2^22 + 1 edges — the same bounded-collect discipline as broadcast
+    * joins and [[Similarity.samplePivots]]; the union-find's map adds
+    * at most two entries per edge on top. Dedup pair graphs sit far
+    * below the threshold even at corpus scale (edges ≈ verified
+    * near-dup pairs of *representatives*); a graph beyond it takes the
+    * distributed alternation unchanged. Labels are identical on both
+    * paths (union-by-min + path compression ⇒ root = component minimum;
+    * pinned by ComponentsSpec's local-vs-distributed test against
+    * [[connectedComponentsWithStats]], which is always distributed).
     *
     * `maxRounds` bounds the distributed alternation; on non-convergence
     * the call THROWS rather than returning a partially-contracted
@@ -92,11 +98,6 @@ object Components {
                           idBCol: String = "id_b",
                           maxRounds: Int = 30): DataFrame = {
     val spark = pairs.sparkSession
-    val threshold = spark.conf
-      .getOption("spark.graft.cc.localEdgeThreshold")
-      .map(_.toLong).getOrElse(1L << 22)
-    if (threshold <= 0)
-      return connectedComponentsWithStats(pairs, idACol, idBCol, maxRounds)._1
     val edges = canonicalEdges(pairs, idACol, idBCol)
       .persist(StorageLevel.MEMORY_AND_DISK)
     try {
@@ -106,12 +107,10 @@ object Components {
       // way) and exactly threshold+1 rows when it does not — the old
       // count()-then-collect() shape paid a full count job first, which
       // at scale is strictly more work than an early-terminating limit.
-      // (threshold is clamped to Int.MaxValue-2: a larger local-path
-      // budget would not fit an Array anyway)
-      val effT = math.min(threshold, (Int.MaxValue - 2).toLong).toInt
       import spark.implicits._
-      val probe = edges.as[(Long, Long)].limit(effT + 1).collect()
-      if (probe.length <= effT) localLabels(spark, probe)
+      val probe = edges.as[(Long, Long)].limit(LocalEdgeThreshold + 1)
+        .collect()
+      if (probe.length <= LocalEdgeThreshold) localLabels(spark, probe)
       else distributedLabels(edges, maxRounds)._1
     } finally edges.unpersist()
   }
@@ -301,12 +300,8 @@ object Components {
     * quadratic blowup.
     */
   def dropNearDups(df: DataFrame, pairs: DataFrame, idCol: String,
-                   idACol: String = "id_a", idBCol: String = "id_b"): DataFrame = {
-    val labels = dupGroups(pairs, idACol, idBCol)
-      .filter(col("id") =!= col("group_id"))
-      .select(col("id").as("_drop_id"))
-    df.join(labels, df(idCol) === col("_drop_id"), "left_anti")
-  }
+                   idACol: String = "id_a", idBCol: String = "id_b"): DataFrame =
+    dropByGroupLabels(df, dupGroups(pairs, idACol, idBCol), idCol)
 
   /** Keep one representative per group from a `(id, group_id)` labeling
     * (any `*Groups` surface): drop every labeled doc that is not its

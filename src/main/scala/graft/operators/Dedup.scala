@@ -5,9 +5,19 @@ import org.apache.spark.sql.functions._
 
 /** Deduplication operators for web-scale corpora.
   *
-  * Scale design, shared by every near-dup variant (MinHash LSH here,
-  * SimHash here, winnowing in [[Winnow]], embedding-cosine in
-  * [[Similarity]]):
+  * One near-dup skeleton, four legs: MinHash LSH and SimHash here,
+  * winnowing in [[Winnow]], embedding cosine in [[Similarity]]. A leg
+  * supplies only its group key, its bucket keys and its metric; the
+  * rest is shared here:
+  *
+  *   - [[collapse]] exact duplicates to one representative;
+  *   - [[bucketPairs]] (or the co-occurrence count over the same
+  *     [[inBucketPairs]]) finds candidate pairs in bounded buckets;
+  *   - [[verifyPairs]] scores candidates at representative level;
+  *   - the leg returns a [[RepPairs]], which [[memberPairs]] expands
+  *     back to member pairs and [[nearDupGroups]] labels as groups.
+  *
+  * Scale design, shared by every leg:
   *
   *   1. candidates meet only inside an LSH/band/chunk bucket — never an
   *      all-pairs product; the shuffle key is the bucket hash;
@@ -30,8 +40,8 @@ import org.apache.spark.sql.functions._
   *
   * Note on output size: the pair contract is inherently quadratic in
   * cluster size (a verified 10^4-member cluster IS ~5*10^7 pairs). When a
-  * summarized report is enough, use [[exactDupGroups]] + the rep-level
-  * pairs instead of the expanded output.
+  * summarized report is enough, use the `*Groups` surfaces, which label
+  * members without expanding their pairs.
   */
 object Dedup {
 
@@ -182,10 +192,12 @@ object Dedup {
     }
   }
 
-  /** Distinct candidate pairs from (id, bkey) rows via [[boundedBuckets]].
-    * Output: distinct (id_a < id_b) pairs.
+  /** Every (id_a < id_b) pair inside each bucket of [[boundedBuckets]],
+    * one row per bucket the pair shares — the one in-bucket enumeration
+    * behind [[bucketPairs]] (distinct pairs) and [[Winnow]]'s
+    * co-occurrence count.
     */
-  private[operators] def bucketPairs(banded: DataFrame, maxBucket: Int,
+  private[operators] def inBucketPairs(banded: DataFrame, maxBucket: Int,
       statsObs: Option[Observation]): DataFrame =
     boundedBuckets(banded, maxBucket, statsObs)
       .select(explode(expr(
@@ -193,23 +205,79 @@ object Dedup {
              transform(slice(ids, i + 2, size(ids)), b ->
                struct(a as id_a, b as id_b))))""")).as("p"))
       .select(col("p.id_a"), col("p.id_b"))
+
+  /** Distinct candidate pairs from (id, bkey) rows via [[boundedBuckets]].
+    * Output: distinct (id_a < id_b) pairs.
+    */
+  private[operators] def bucketPairs(banded: DataFrame, maxBucket: Int,
+      statsObs: Option[Observation]): DataFrame =
+    inBucketPairs(banded, maxBucket, statsObs)
       // guard against a caller-produced bucket holding one id twice (e.g.
       // two band keys of a doc colliding to one 64-bit bkey): a self-pair
       // would survive every verify at similarity 1.0
       .filter(col("id_a") =!= col("id_b"))
       .dropDuplicates("id_a", "id_b")
 
+  /** Exact verify of candidate pairs at representative level: the
+    * `payload` of both reps rejoins by id (narrow, checkpointed — see
+    * [[Collapsed]]), `score` computes the metric, `keep` filters on it.
+    * Only candidates pay the rejoin: projecting shingles or vectors
+    * before the join would ship every rep's array through the join
+    * shuffle. The candidate set is small, so AQE turns both joins into
+    * broadcast joins. Output: (id_a, id_b, metric).
+    */
+  private[operators] def verifyPairs(cand: DataFrame, reps: DataFrame,
+      metric: String, score: (Column, Column) => Column,
+      keep: Column => Column): DataFrame = {
+    val pa = reps.select(col("id").as("id_a"), col("payload").as("_p_a"))
+    val pb = reps.select(col("id").as("id_b"), col("payload").as("_p_b"))
+    cand.join(pa, "id_a").join(pb, "id_b")
+      .withColumn(metric, score(col("_p_a"), col("_p_b")))
+      .filter(keep(col(metric)))
+      .select("id_a", "id_b", metric)
+  }
+
+  /** One leg's representative-level result, the input of both output
+    * surfaces. `verified` is (id_a, id_b, metric) between reps;
+    * `eligible` is (rep, metric), one row per rep whose exact group's
+    * internal pairs qualify, holding the metric those pairs carry
+    * (identical inputs: jaccard 1.0, hamming 0, cos 1.0, or the group's
+    * fingerprint count for n_shared). The gate lives in the leg's front,
+    * once, so the pair and group surfaces cannot drift apart on it.
+    */
+  private[operators] final case class RepPairs(collapsed: Collapsed,
+      verified: DataFrame, eligible: DataFrame)
+
+  /** The pair surface of every leg: verified rep pairs expanded to
+    * member pairs (cross pairs inherit the reps' metric exactly, since
+    * identical inputs score identically; internal pairs of an eligible
+    * exact group carry `eligible`'s metric). Skipped entirely when the
+    * corpus has no exact duplicates.
+    */
+  private[operators] def memberPairs(rp: RepPairs): DataFrame =
+    rp.collapsed.dupMapping match {
+      case None => rp.verified
+      case Some(mapping) =>
+        expandCross(rp.verified, mapping, rp.verified.columns(2))
+          .unionByName(expandInternal(mapping, rp.eligible))
+    }
+
+  /** The group surface of every leg: [[groupsFromRepPairs]] over the
+    * verified rep pairs and the eligible reps.
+    */
+  private[operators] def nearDupGroups(rp: RepPairs): DataFrame =
+    groupsFromRepPairs(rp.collapsed, rp.verified.select("id_a", "id_b"),
+      rp.eligible.select("rep"))
+
   /** Expand verified representative pairs to member pairs: every member
     * of rep_a's exact group pairs with every member of rep_b's, carrying
-    * the verified payload column (identical inputs have identical
-    * shingles/vectors, so the metric transfers exactly). `mapping` is
-    * the DUP-ONLY mapping of [[collapse]], so the joins are left joins
-    * with identity fallback — singleton reps stream through the (usually
-    * broadcast) join unexpanded instead of shuffling through a
-    * full-corpus mapping.
+    * the verified metric column. `mapping` is the DUP-ONLY mapping of
+    * [[collapse]], so the joins are left joins with identity fallback —
+    * singleton reps stream through the (usually broadcast) join
+    * unexpanded instead of shuffling through a full-corpus mapping.
     */
-  private[operators] def expandCross(repPairs: DataFrame, mapping: DataFrame,
-      payloadCol: String): DataFrame =
+  private def expandCross(repPairs: DataFrame, mapping: DataFrame,
+      metric: String): DataFrame =
     repPairs
       .join(mapping.select(col("rep").as("id_a"), col("id").as("_ma")),
         Seq("id_a"), "left")
@@ -220,23 +288,25 @@ object Dedup {
           coalesce(col("_mb"), col("id_b"))).as("id_a"),
         greatest(coalesce(col("_ma"), col("id_a")),
           coalesce(col("_mb"), col("id_b"))).as("id_b"),
-        col(payloadCol))
+        col(metric))
 
-  /** Internal pairs of each exact group restricted to eligible reps
-    * (single-column `rep` DataFrame): (id_a < id_b) member pairs.
-    * `mapping` is dup-only, so singleton groups never reach the
-    * self-join; rep-member pairs come straight off the dup rows since
-    * rep = min(id) < member id.
+  /** Internal pairs of each exact group restricted to eligible reps:
+    * (id_a < id_b, metric) member pairs, the metric taken from
+    * `eligible` (rep, metric). `eligible` has one row per rep, so the
+    * inner join multiplies no rows. `mapping` is dup-only, so singleton
+    * groups never reach the self-join; rep-member pairs come straight
+    * off the dup rows since rep = min(id) < member id.
     */
-  private[operators] def expandInternal(mapping: DataFrame,
-      eligibleReps: DataFrame): DataFrame = {
-    val dups = mapping.filter(col("id") =!= col("rep"))
-      .join(eligibleReps, Seq("rep"), "left_semi")
-    val repPairs = dups.select(col("rep").as("id_a"), col("id").as("id_b"))
-    val dupPairs = dups.select(col("rep"), col("id").as("id_a"))
+  private def expandInternal(mapping: DataFrame,
+      eligible: DataFrame): DataFrame = {
+    val metric = eligible.columns(1)
+    val dups = mapping.filter(col("id") =!= col("rep")).join(eligible, "rep")
+    val repPairs = dups.select(col("rep").as("id_a"), col("id").as("id_b"),
+      col(metric))
+    val dupPairs = dups.select(col("rep"), col("id").as("id_a"), col(metric))
       .join(dups.select(col("rep"), col("id").as("id_b")), "rep")
       .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b")
+      .select("id_a", "id_b", metric)
     repPairs.unionByName(dupPairs)
   }
 
@@ -543,16 +613,13 @@ object Dedup {
 
   /** Near-duplicate pairs via MinHash LSH, verified with exact Jaccard.
     *
-    * Pipeline (scale rules 1-4 above):
-    * exact-collapse (persisted aggregate, [[collapse]]) -> per-rep
-    * signatures -> (id, bandKey)-only banding -> bounded in-bucket
-    * candidate pairs ([[boundedBuckets]]) -> text rejoin + exact Jaccard
-    * verify on candidates -> member-pair expansion (skipped outright when
-    * the corpus has no exact dups).
+    * Pipeline (scale rules 1-4 above): the MinHash front
+    * ([[minhashRepPairs]]) then [[memberPairs]]; internal pairs of an
+    * exact group carry Jaccard 1.0.
     *
-    * The persisted collapse aggregate means every downstream scan (band
-    * signatures, both verify rejoins, the eligibility gate) reads the
-    * cache instead of recomputing the collapse shuffle; the one extra
+    * The checkpointed collapse aggregate means every downstream scan
+    * (band signatures, both verify rejoins, the eligibility gate) reads
+    * it instead of recomputing the collapse shuffle; the one extra
     * input scan is the dup-mapping join, and only when dups exist.
     *
     * @param maxBucket per-bucket candidate cap AFTER exact-collapse: an
@@ -564,20 +631,9 @@ object Dedup {
       df: DataFrame, textCol: String, idCol: String,
       shingleK: Int = 3, numHashes: Int = 64, bands: Int = 16,
       threshold: Double = 0.7, maxBucket: Int = 64,
-      statsObs: Option[Observation] = None): DataFrame = {
-    val (collapsed, _, verified, eligible) = minhashRepPairs(df, textCol,
-      idCol, shingleK, numHashes, bands, threshold, maxBucket, statsObs)
-    // expansion: member pairs + internal pairs of exact groups
-    //    (identical texts have Jaccard exactly 1.0). Skipped entirely
-    //    when the corpus had no exact duplicates.
-    collapsed.dupMapping match {
-      case None => verified
-      case Some(mapping) =>
-        val internal = expandInternal(mapping, eligible)
-          .withColumn("jaccard", lit(1.0))
-        expandCross(verified, mapping, "jaccard").unionByName(internal)
-    }
-  }
+      statsObs: Option[Observation] = None): DataFrame =
+    memberPairs(minhashRepPairs(df, textCol, idCol, shingleK, numHashes,
+      bands, threshold, maxBucket, statsObs))
 
   /** Transitive near-dup GROUP labeling `(id, group_id)` WITHOUT the
     * quadratic member-pair expansion: connected components run over the
@@ -597,11 +653,9 @@ object Dedup {
       df: DataFrame, textCol: String, idCol: String,
       shingleK: Int = 3, numHashes: Int = 64, bands: Int = 16,
       threshold: Double = 0.7, maxBucket: Int = 64,
-      statsObs: Option[Observation] = None): DataFrame = {
-    val (collapsed, _, verified, eligible) = minhashRepPairs(df, textCol,
-      idCol, shingleK, numHashes, bands, threshold, maxBucket, statsObs)
-    groupsFromRepPairs(collapsed, verified.select("id_a", "id_b"), eligible)
-  }
+      statsObs: Option[Observation] = None): DataFrame =
+    nearDupGroups(minhashRepPairs(df, textCol, idCol, shingleK, numHashes,
+      bands, threshold, maxBucket, statsObs))
 
   /** Shared labeling tail for every near-dup `*Groups` variant:
     * connected components over the verified representative pairs, then
@@ -639,32 +693,28 @@ object Dedup {
     }
   }
 
-  /** Shared front of the MinHash pipeline: collapse -> band -> bounded
-    * candidate pairs -> exact-Jaccard verify at REPRESENTATIVE level.
-    * Returns (collapsed, reps(id, text), verified(id_a, id_b, jaccard),
-    * eligible(rep)) — eligibility (>=1 shingle, the banding-stage gate)
-    * is computed HERE, once, so the pair and group surfaces can never
-    * drift apart on it.
+  /** The MinHash leg's front: collapse on the normalized text's md5 ->
+    * per-rep signatures -> (id, bandKey)-only banding -> bounded
+    * candidate pairs -> exact-Jaccard [[verifyPairs]] on the rep texts.
+    * Eligible reps have >= 1 shingle (the banding-stage gate); their
+    * internal pairs carry jaccard 1.0.
     */
   private def minhashRepPairs(
       df: DataFrame, textCol: String, idCol: String,
       shingleK: Int, numHashes: Int, bands: Int,
       threshold: Double, maxBucket: Int,
-      statsObs: Option[Observation]): (Collapsed, DataFrame, DataFrame, DataFrame) = {
+      statsObs: Option[Observation]): RepPairs = {
     val rowsPerBand = numHashes / bands
     val spark = df.sparkSession
     import spark.implicits._
-    val base = df.select(col(idCol).cast("long").as("id"),
-      col(textCol).as("text"))
-
-    // 1. exact-dup collapse (128-bit key: no false merges); the text
+    // exact-dup collapse (128-bit key: no false merges); the text
     // payload rides the collapse agg, so reps need no recovery join
-    val collapsed = collapse(
-      base.select(col("id"), md5(TextStats.normalize(col("text"))).as("gk"),
-        col("text").as("payload")))
-    val reps = collapsed.reps.withColumnRenamed("payload", "text")
+    val collapsed = collapse(df.select(col(idCol).cast("long").as("id"),
+      md5(TextStats.normalize(col(textCol))).as("gk"),
+      col(textCol).as("payload")))
+    val reps = collapsed.reps
 
-    // 2. banding: (id, bandKey) rows ONLY through the shuffle
+    // banding: (id, bandKey) rows ONLY through the shuffle
     val banded = reps.as[(Long, String)]
       .mapPartitions(_.flatMap { case (id, text) =>
         val sh = shingleSet(text, shingleK)
@@ -676,28 +726,15 @@ object Dedup {
       })
       .toDF("id", "bkey")
 
-    // 3. bounded candidate pairs between representatives
-    val candPairs = bucketPairs(banded, maxBucket, statsObs)
-
-    // 4. exact verify: rejoin TEXTS by id (narrow, cached), and only then
-    // — after the join has filtered to actual candidates — expand to
-    // shingle sets: projecting shingles before the join would ship every
-    // rep's shingle array through the join shuffle (the r01 defect,
-    // moved). candPairs is small, so AQE turns these into broadcast joins.
-    val ta = reps.select(col("id").as("id_a"), col("text").as("_t_a"))
-    val tb = reps.select(col("id").as("id_b"), col("text").as("_t_b"))
-    val verified = candPairs
-      .join(ta, "id_a").join(tb, "id_b")
-      .withColumn("jaccard", round(jaccard(
-        wordShingles(col("_t_a"), shingleK),
-        wordShingles(col("_t_b"), shingleK)), 6))
-      .filter(col("jaccard") >= threshold)
-      .select("id_a", "id_b", "jaccard")
-
+    val verified = verifyPairs(bucketPairs(banded, maxBucket, statsObs),
+      reps, "jaccard",
+      (a, b) => round(jaccard(wordShingles(a, shingleK),
+        wordShingles(b, shingleK)), 6),
+      _ >= threshold)
     val eligible = reps
-      .filter(size(wordShingles(col("text"), shingleK)) >= 1)
-      .select(col("id").as("rep"))
-    (collapsed, reps, verified, eligible)
+      .filter(size(wordShingles(col("payload"), shingleK)) >= 1)
+      .select(col("id").as("rep"), lit(1.0).as("jaccard"))
+    RepPairs(collapsed, verified, eligible)
   }
 
   // ---------- SimHash ----------
@@ -770,20 +807,9 @@ object Dedup {
     */
   def simhashNearDups(df: DataFrame, textCol: String, idCol: String,
                       maxHamming: Int = 3, maxBucket: Int = 64,
-                      statsObs: Option[Observation] = None): DataFrame = {
-    val (collapsed, _, verified, eligible) =
-      simhashRepPairs(df, textCol, idCol, maxHamming, maxBucket, statsObs)
-    // expansion: cross pairs inherit the reps' hamming exactly (identical
-    // sig); internal pairs of a sig group have hamming 0. Skipped when no
-    // two docs share a signature.
-    collapsed.dupMapping match {
-      case None => verified
-      case Some(mapping) =>
-        val internal = expandInternal(mapping, eligible)
-          .withColumn("hamming", lit(0))
-        expandCross(verified, mapping, "hamming").unionByName(internal)
-    }
-  }
+                      statsObs: Option[Observation] = None): DataFrame =
+    memberPairs(
+      simhashRepPairs(df, textCol, idCol, maxHamming, maxBucket, statsObs))
 
   /** Transitive SimHash GROUP labeling `(id, group_id)` — the
     * [[minhashNearDupGroups]] construction for the signature leg:
@@ -793,22 +819,18 @@ object Dedup {
     */
   def simhashNearDupGroups(df: DataFrame, textCol: String, idCol: String,
                            maxHamming: Int = 3, maxBucket: Int = 64,
-                           statsObs: Option[Observation] = None): DataFrame = {
-    val (collapsed, _, verified, eligible) =
-      simhashRepPairs(df, textCol, idCol, maxHamming, maxBucket, statsObs)
-    groupsFromRepPairs(collapsed, verified.select("id_a", "id_b"), eligible)
-  }
+                           statsObs: Option[Observation] = None): DataFrame =
+    nearDupGroups(
+      simhashRepPairs(df, textCol, idCol, maxHamming, maxBucket, statsObs))
 
-  /** Shared front of the SimHash pipeline: signature map -> exact
-    * collapse -> chunk-pair keys -> bounded candidate pairs -> exact
-    * hamming verify at REPRESENTATIVE level. Returns (collapsed,
-    * reps(id, sig), verified(id_a, id_b, hamming), eligible(rep)) —
-    * every signature group is internally eligible (hamming 0), and the
-    * shared gate lives here so the surfaces cannot drift.
+  /** The SimHash leg's front: signature map -> exact collapse on the
+    * signature -> chunk-pair keys -> bounded candidate pairs -> exact
+    * hamming [[verifyPairs]] on the rep signatures. Every signature
+    * group is eligible; its internal pairs carry hamming 0.
     */
   private def simhashRepPairs(df: DataFrame, textCol: String, idCol: String,
       maxHamming: Int, maxBucket: Int,
-      statsObs: Option[Observation]): (Collapsed, DataFrame, DataFrame, DataFrame) = {
+      statsObs: Option[Observation]): RepPairs = {
     require(maxHamming <= 3,
       "chunk-pair keying guarantees recall only for hamming <= 3 " +
         "(5 chunks - maxHamming flipped must leave >= 2 clean)")
@@ -825,10 +847,10 @@ object Dedup {
       .toDF("id", "sig")
 
     // exact collapse on the full signature (hamming 0 — exact semantics;
-    // the group key IS the payload); persisted aggregate, dup-only mapping
+    // the group key IS the payload)
     val collapsed = collapse(
       sigs.select(col("id"), col("sig").as("gk"), col("sig").as("payload")))
-    val reps = collapsed.reps.withColumnRenamed("payload", "sig")
+    val reps = collapsed.reps
 
     // (id, tableKey) rows only through the shuffle
     val keyed = reps.as[(Long, Long)]
@@ -836,17 +858,10 @@ object Dedup {
         simhashPairKeys(sig).iterator.map(k => (id, k))
       })
       .toDF("id", "bkey")
-    val candPairs = bucketPairs(keyed, maxBucket, statsObs)
-
-    // exact hamming verify on candidates (sig rejoin by id, cached)
-    val sa = reps.select(col("id").as("id_a"), col("sig").as("_sig_a"))
-    val sb = reps.select(col("id").as("id_b"), col("sig").as("_sig_b"))
-    val verified = candPairs
-      .join(sa, "id_a").join(sb, "id_b")
-      .withColumn("hamming",
-        bit_count(col("_sig_a").bitwiseXOR(col("_sig_b"))))
-      .filter(col("hamming") <= maxHamming)
-      .select("id_a", "id_b", "hamming")
-    (collapsed, reps, verified, reps.select(col("id").as("rep")))
+    val verified = verifyPairs(bucketPairs(keyed, maxBucket, statsObs),
+      reps, "hamming", (a, b) => bit_count(a.bitwiseXOR(b)),
+      _ <= maxHamming)
+    RepPairs(collapsed, verified,
+      reps.select(col("id").as("rep"), lit(0).as("hamming")))
   }
 }

@@ -329,7 +329,7 @@ object Similarity {
   /** Embedding-cosine near-duplicate pairs via multi-table hyperplane
     * LSH + exact verify (the embedding leg of the dedup suite).
     *
-    * Scale rules shared with [[Dedup]] (see its scaladoc): identical
+    * The [[Dedup]] near-dup skeleton (see its scaladoc): identical
     * vectors collapse to one representative before bucketing; the bucket
     * shuffle carries (id, tableKey) only — vectors rejoin by id for the
     * exact cosine of the candidate set; an oversized bucket contributes
@@ -354,20 +354,9 @@ object Similarity {
                      threshold: Double = 0.95, bits: Int = 0,
                      tables: Int = 4, maxBucket: Int = 256,
                      seed: Long = 7L,
-                     statsObs: Option[Observation] = None): DataFrame = {
-    val (collapsed, _, verified, eligible) = cosineRepPairs(df, vecCol,
-      idCol, threshold, bits, tables, maxBucket, seed, statsObs)
-    // expansion: cross pairs inherit the reps' cosine exactly (identical
-    // vectors); internal pairs of a non-zero vector group have cosine 1.
-    // Skipped when no two vectors are byte-identical.
-    collapsed.dupMapping match {
-      case None => verified
-      case Some(mapping) =>
-        val internal = Dedup.expandInternal(mapping, eligible)
-          .withColumn("cos", lit(1.0))
-        Dedup.expandCross(verified, mapping, "cos").unionByName(internal)
-    }
-  }
+                     statsObs: Option[Observation] = None): DataFrame =
+    Dedup.memberPairs(cosineRepPairs(df, vecCol, idCol, threshold, bits,
+      tables, maxBucket, seed, statsObs))
 
   /** Transitive embedding-cosine GROUP labeling `(id, group_id)` — the
     * [[Dedup.minhashNearDupGroups]] construction for the vector leg:
@@ -380,12 +369,9 @@ object Similarity {
                           threshold: Double = 0.95, bits: Int = 0,
                           tables: Int = 4, maxBucket: Int = 256,
                           seed: Long = 7L,
-                          statsObs: Option[Observation] = None): DataFrame = {
-    val (collapsed, _, verified, eligible) = cosineRepPairs(df, vecCol,
-      idCol, threshold, bits, tables, maxBucket, seed, statsObs)
-    Dedup.groupsFromRepPairs(collapsed, verified.select("id_a", "id_b"),
-      eligible)
-  }
+                          statsObs: Option[Observation] = None): DataFrame =
+    Dedup.nearDupGroups(cosineRepPairs(df, vecCol, idCol, threshold, bits,
+      tables, maxBucket, seed, statsObs))
 
   /** SemDeDup (Abbas et al. 2023, arXiv:2303.09540): semantic dedup
     * scoped to embedding clusters. Each vector is assigned to its
@@ -445,16 +431,14 @@ object Similarity {
     df.join(drops, Seq(idCol), "left_anti")
   }
 
-  /** Shared front of the embedding pipeline: collapse -> multi-table
-    * sign-pattern keys -> bounded candidate pairs -> exact cosine verify
-    * at REPRESENTATIVE level. Returns (collapsed, reps(id, v),
-    * verified(id_a, id_b, cos), eligible(rep)) — eligibility (non-zero
-    * vectors) is computed HERE, once, so the pair and group surfaces
-    * cannot drift apart on it.
+  /** The embedding leg's front: collapse on identical vectors ->
+    * multi-table sign-pattern keys -> bounded candidate pairs -> exact
+    * cosine [[Dedup.verifyPairs]] on the rep vectors. Eligible reps are
+    * non-zero vectors; their internal pairs carry cos 1.0.
     */
   private def cosineRepPairs(df: DataFrame, vecCol: String, idCol: String,
       threshold: Double, bits: Int, tables: Int, maxBucket: Int,
-      seed: Long, statsObs: Option[Observation]): (Dedup.Collapsed, DataFrame, DataFrame, DataFrame) = {
+      seed: Long, statsObs: Option[Observation]): Dedup.RepPairs = {
     require(bits <= 32, "bits must fit the per-table key")
     val base = df.select(col(idCol).cast("long").as("id"),
       col(vecCol).cast("array<double>").as("v"))
@@ -465,7 +449,7 @@ object Similarity {
     val collapsed = Dedup.collapse(
       base.select(col("id"), md5(to_json(col("v"))).as("gk"),
         col("v").as("payload")))
-    val reps = collapsed.reps.withColumnRenamed("payload", "v")
+    val reps = collapsed.reps
     val effBits =
       if (bits > 0) bits
       else autoBits(collapsed.nReps, math.max(1, maxBucket / 32))
@@ -473,21 +457,14 @@ object Similarity {
     // (id, tableKey) rows only through the shuffle
     val keyCols = (0 until tables).map { t =>
       lit(t.toLong << 33) +
-        lshBucket(col("v"), hyperplanes(dim, effBits, seed + t))
+        lshBucket(col("payload"), hyperplanes(dim, effBits, seed + t))
     }
     val keyed = reps.select(col("id"), explode(array(keyCols: _*)).as("bkey"))
-    val candPairs = Dedup.bucketPairs(keyed, maxBucket, statsObs)
-
-    // exact cosine verify on candidates (vector rejoin by id, cached)
-    val va = reps.select(col("id").as("id_a"), col("v").as("_v_a"))
-    val vb = reps.select(col("id").as("id_b"), col("v").as("_v_b"))
-    val verified = candPairs
-      .join(va, "id_a").join(vb, "id_b")
-      .withColumn("cos", round(cosine(col("_v_a"), col("_v_b")), 6))
-      .filter(col("cos") >= threshold)
-      .select("id_a", "id_b", "cos")
-    val eligible = reps.filter(l2norm(col("v")) > 0)
-      .select(col("id").as("rep"))
-    (collapsed, reps, verified, eligible)
+    val verified = Dedup.verifyPairs(
+      Dedup.bucketPairs(keyed, maxBucket, statsObs), reps, "cos",
+      (a, b) => round(cosine(a, b), 6), _ >= threshold)
+    val eligible = reps.filter(l2norm(col("payload")) > 0)
+      .select(col("id").as("rep"), lit(1.0).as("cos"))
+    Dedup.RepPairs(collapsed, verified, eligible)
   }
 }

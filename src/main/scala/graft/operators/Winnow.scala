@@ -70,42 +70,26 @@ object Winnow {
     * (bucket join on the fingerprint — same scale shape as MinHash LSH),
     * scored by the count of shared fingerprints.
     *
-    * Scale rules shared with [[Dedup]]: exact duplicates (identical
+    * The [[Dedup]] near-dup skeleton: exact duplicates (identical
     * lowercased text => identical fingerprint set) collapse to one
     * representative before bucketing, so boilerplate mega-clusters can't
     * blow the bucket cap; a hot fingerprint bucket larger than
     * `maxBucket` contributes a deterministic sample (ids sorted, first
     * maxBucket) instead of silently vanishing, with the cap counted into
     * `statsObs` (n_buckets / n_oversized_buckets / n_docs_dropped).
-    * Member pairs are expanded back at the end: cross pairs inherit the
-    * representative pair's n_shared exactly (identical fingerprint
-    * sets); internal pairs of an exact group share ALL fingerprints, so
-    * n_shared = the group's distinct fingerprint count.
+    * Member pairs are expanded back by [[Dedup.memberPairs]]: cross
+    * pairs inherit the representative pair's n_shared exactly (identical
+    * fingerprint sets); internal pairs of an exact group share ALL
+    * fingerprints, so n_shared = the group's fingerprint count, and a
+    * group qualifies iff that count reaches minShared.
     */
   def sharedFingerprintPairs(df: DataFrame, textCol: String, idCol: String,
                              k: Int = 8, w: Int = 16,
                              minShared: Int = 2,
                              maxBucket: Int = 64,
-                             statsObs: Option[Observation] = None): DataFrame = {
-    val (collapsed, _, verified, eligible) =
-      winnowRepPairs(df, textCol, idCol, k, w, minShared, maxBucket, statsObs)
-
-    // expansion (see scaladoc): internal groups qualify iff their
-    // fingerprint count reaches minShared. mapping is DUP-ONLY
-    // (Dedup.collapse), so singleton docs never enter the self-join
-    // (VERDICT r02 #6) and the whole branch is skipped without dups.
-    collapsed.dupMapping match {
-      case None => verified
-      case Some(mapping) =>
-        val members = mapping.join(eligible, "rep")
-        val internal = members
-          .select(col("rep"), col("_gn"), col("id").as("id_a"))
-          .join(members.select(col("rep"), col("id").as("id_b")), "rep")
-          .filter(col("id_a") < col("id_b"))
-          .select(col("id_a"), col("id_b"), col("_gn").as("n_shared"))
-        Dedup.expandCross(verified, mapping, "n_shared").unionByName(internal)
-    }
-  }
+                             statsObs: Option[Observation] = None): DataFrame =
+    Dedup.memberPairs(
+      winnowRepPairs(df, textCol, idCol, k, w, minShared, maxBucket, statsObs))
 
   /** Transitive winnowing GROUP labeling `(id, group_id)` — the
     * [[Dedup.minhashNearDupGroups]] construction for the fingerprint
@@ -118,59 +102,45 @@ object Winnow {
                               k: Int = 8, w: Int = 16,
                               minShared: Int = 2,
                               maxBucket: Int = 64,
-                              statsObs: Option[Observation] = None): DataFrame = {
-    val (collapsed, _, verified, eligible) =
-      winnowRepPairs(df, textCol, idCol, k, w, minShared, maxBucket, statsObs)
-    Dedup.groupsFromRepPairs(collapsed,
-      verified.select("id_a", "id_b"), eligible.select("rep"))
-  }
+                              statsObs: Option[Observation] = None): DataFrame =
+    Dedup.nearDupGroups(
+      winnowRepPairs(df, textCol, idCol, k, w, minShared, maxBucket, statsObs))
 
-  /** Shared front: collapse -> fingerprint emission -> bounded buckets
-    * -> co-occurrence-counted pairs at REPRESENTATIVE level. Returns
-    * (collapsed, fps(id, fp, nfp), verified(id_a, id_b, n_shared),
-    * eligible(rep, _gn)) — the internal-group gate (fingerprint count
-    * >= minShared) is computed HERE, once, so the pair and group
-    * surfaces cannot drift apart on it.
+  /** The winnowing leg's front: collapse on the lowercased text's md5 ->
+    * fingerprint emission -> bounded buckets -> pairs counted by the
+    * buckets (fingerprints) they share, at representative level. No
+    * payload rejoin: the count IS the verify. Eligible reps have at
+    * least minShared fingerprints; their internal pairs carry that count.
     */
   private def winnowRepPairs(df: DataFrame, textCol: String, idCol: String,
       k: Int, w: Int, minShared: Int, maxBucket: Int,
-      statsObs: Option[Observation]): (Dedup.Collapsed, DataFrame, DataFrame, DataFrame) = {
+      statsObs: Option[Observation]): Dedup.RepPairs = {
     val spark = df.sparkSession
     import spark.implicits._
-    val base = df.select(col(idCol).cast("long").as("id"),
-      col(textCol).as("text"))
-
     // exact collapse (fingerprints depend on lowercased text only); the
-    // text payload rides the PERSISTED collapse agg — no recovery join,
-    // and every downstream scan of reps hits the cache
-    val collapsed = Dedup.collapse(
-      base.select(col("id"), md5(lower(col("text"))).as("gk"),
-        col("text").as("payload")))
-    val reps = collapsed.reps.withColumnRenamed("payload", "text")
+    // text payload rides the checkpointed collapse agg — no recovery join
+    val collapsed = Dedup.collapse(df.select(
+      col(idCol).cast("long").as("id"), md5(lower(col(textCol))).as("gk"),
+      col(textCol).as("payload")))
 
     // (id, fp, nfp) rows; nfp rides along for the internal-pair score
-    val fps = reps.as[(Long, String)]
+    val fps = collapsed.reps.as[(Long, String)]
       .mapPartitions(_.flatMap { case (id, text) =>
         val f = fingerprints(text, k, w)
         f.iterator.map(fp => (id, fp, f.length))
       })
       .toDF("id", "fp", "nfp")
 
-    // bounded buckets (cap enforced pre-materialization, Dedup scale rule
-    // 4); pairs are NOT deduped here — n_shared is the count of buckets
+    // pairs are NOT deduped here — n_shared is the count of buckets
     // (fingerprints) a pair co-occurs in
-    val verified = Dedup.boundedBuckets(
+    val verified = Dedup.inBucketPairs(
         fps.select(col("id"), col("fp").as("bkey")), maxBucket, statsObs)
-      .select(explode(expr(
-        """flatten(transform(ids, (a, i) ->
-             transform(slice(ids, i + 2, size(ids)), b ->
-               struct(a as id_a, b as id_b))))""")).as("p"))
-      .groupBy(col("p.id_a").as("id_a"), col("p.id_b").as("id_b"))
+      .groupBy("id_a", "id_b")
       .agg(count(lit(1)).as("n_shared"))
       .filter(col("n_shared") >= minShared)
-    val eligible = fps.select(col("id").as("rep"), col("nfp"))
-      .groupBy("rep").agg(max("nfp").cast("long").as("_gn"))
-      .filter(col("_gn") >= minShared)
-    (collapsed, fps, verified, eligible)
+    val eligible = fps.groupBy(col("id").as("rep"))
+      .agg(max("nfp").cast("long").as("n_shared"))
+      .filter(col("n_shared") >= minShared)
+    Dedup.RepPairs(collapsed, verified, eligible)
   }
 }

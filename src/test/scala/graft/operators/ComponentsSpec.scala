@@ -207,17 +207,11 @@ class ComponentsSpec extends AnyFunSuite {
     val n = 800
     val es = Seq.fill(1200)(
       (rnd.nextInt(n).toLong, rnd.nextInt(n).toLong)).filter(e => e._1 != e._2)
-    // default threshold: local union-find path
+    // under the edge threshold: local union-find path
     val local = labelsOf(Components.connectedComponents(pairs(es: _*)))
     // WithStats is always the distributed alternation
     val dist = labelsOf(Components.connectedComponentsWithStats(pairs(es: _*))._1)
     assert(local == dist)
-    // threshold 0 forces the distributed path through the plain surface
-    spark.conf.set("spark.graft.cc.localEdgeThreshold", "0")
-    try {
-      val forced = labelsOf(Components.connectedComponents(pairs(es: _*)))
-      assert(forced == local)
-    } finally spark.conf.unset("spark.graft.cc.localEdgeThreshold")
   }
 
   test("dropNearDups keeps one per transitive group plus untouched rows") {
