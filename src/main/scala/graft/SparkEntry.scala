@@ -16,42 +16,28 @@ import graft.pipeline.{ExtractPipeline, Transcripts}
   */
 object SparkEntry {
 
-  /** Table scan with size-adaptive input spreading (guide §2.5, input
-    * skew): a small single-file parquet table scans as ONE split (file
-    * size < the openCost packing floor), so every pre-shuffle map stage
-    * — exactly where the regex/tokenize/vector kernels run — executes
-    * on one core no matter how many the session has. Such inputs are
-    * repartitioned right after the read (round-robin, to the session's
-    * default parallelism — scale-adaptive, not a constant). The spread
-    * is gated on TOTAL INPUT BYTES, so a production-scale table (many
-    * files / many row groups, already split-parallel) never pays a
-    * payload shuffle: only inputs small enough that the shuffle is
-    * trivially cheap (< 32 MB) qualify.
-    *
-    * `lineitem` is EXCLUDED: q01's `round(sum(price*(1-disc)), 2)` is a
-    * float sum whose 2dp-rounded value changes with summation order
-    * (measured: one cent at sf0.001 — Spark then disagrees with the
-    * DuckDB oracle), so that scan must keep its deterministic
-    * single-split order. Every other table × query surface was proven
-    * order-insensitive by exact result-hash equality at sf0.001 /
-    * sf0.01 / sf0.1 plus the DuckDB compare (FAILURES: 0).
+  /** Plain table read: `dir/name.parquet`, partitioned by the scan. */
+  private def t(s: SparkSession, dir: String, name: String): DataFrame =
+    s.read.parquet(s"$dir/$name.parquet")
+
+  /** Input spread for the kernel queries: a scan with fewer partitions
+    * than the session's default parallelism (a small single-file table
+    * scans as ONE split) is round-robined to that parallelism, so a
+    * per-row kernel in the first stage (regex, tokenize, shingle, hash,
+    * vector math) runs on every core instead of one. A scan already that
+    * wide passes through with no exchange. The partition count is the
+    * scan's physical plan's (planned, no job runs), so pass a scan, not
+    * a frame with exchanges. Only the queries whose first stage runs
+    * such a kernel before any exchange call this, and only where
+    * dropping the spread measured slower (1.1-2x at sf0.1 on 4 cores);
+    * every other query reads plainly and lets its first exchange do the
+    * spreading. Read order is not a correctness dependency: the oracle
+    * compare is green with and without it.
     */
-  private def t(s: SparkSession, dir: String, name: String): DataFrame = {
-    val path = s"$dir/$name.parquet"
-    val df = s.read.parquet(path)
-    if (name == "lineitem") return df
-    val bytes =
-      try {
-        val p = java.nio.file.Paths.get(path)
-        if (java.nio.file.Files.isDirectory(p)) {
-          import scala.jdk.CollectionConverters._
-          java.nio.file.Files.list(p).iterator().asScala
-            .filter(java.nio.file.Files.isRegularFile(_))
-            .map(java.nio.file.Files.size(_)).sum
-        } else java.nio.file.Files.size(p)
-      } catch { case _: Exception => Long.MaxValue }
-    if (bytes < (32L << 20)) df.repartition(s.sparkContext.defaultParallelism)
-    else df
+  private[graft] def spread(df: DataFrame): DataFrame = {
+    val p = df.sparkSession.sparkContext.defaultParallelism
+    val scanned = df.queryExecution.executedPlan.execute().getNumPartitions
+    if (scanned < p) df.repartition(p) else df
   }
 
   /** One-scan self-duplication of a table head — the planted-dup fixture
@@ -61,7 +47,7 @@ object SparkEntry {
     * `df.unionByName(df.filter(idCol < n).select(mutated...))` form
     * (oracle hash match at all SFs), but the source is scanned ONCE
     * instead of twice (guide §2.4 — the union form paid a second scan
-    * plus a second small-input spread exchange in every query using it).
+    * in every query using it).
     * `mut` overrides columns for the mutated copy; unlisted columns copy
     * through.
     */
@@ -87,6 +73,17 @@ object SparkEntry {
     names.foreach(n => require(n.matches("[A-Za-z0-9_]+"),
       s"corpus dir name '$n' is not a plain [A-Za-z0-9_]+ name"))
     parents.head + names.mkString("/{", ",", "}")
+  }
+
+  /** Recursive delete of a local directory (absent is fine). */
+  private def deleteTree(dir: String): Unit = {
+    val root = java.nio.file.Paths.get(dir)
+    if (java.nio.file.Files.exists(root)) {
+      val walk = java.nio.file.Files.walk(root)
+      try walk.sorted(java.util.Comparator.reverseOrder())
+        .forEach(p => java.nio.file.Files.delete(p))
+      finally walk.close()
+    }
   }
 
   /** Persisted deterministic transcript table for the q26/q27 oracles:
@@ -189,25 +186,13 @@ object SparkEntry {
     }),
 
     "q02_top_customers" -> ((s, dir) => {
-      // lineitem is exempt from t()'s spread for q01's sake (global-sum
-      // order); q02's per-customer sums survive reordering (proven by
-      // exact result-hash equality at all three SFs + the DuckDB
-      // compare), so this scan spreads explicitly — the 11 MB
-      // single-split file otherwise runs scan+joins+partial agg on one
-      // core. The spread is keyed ON THE JOIN KEY (guide §2.4: a
-      // repartition("k") followed by a join on k shares one exchange),
-      // which also skips round-robin's sort-before-repartition; and the
-      // orders side takes a SHUFFLE_HASH hint (guide §3.1): at any real
-      // scale orders is not broadcastable next to lineitem, and locally
-      // the hint replaces a serial 1.5M-row driver broadcast build with
-      // a per-partition parallel hash build.
-      val p = s.sparkContext.defaultParallelism
-      val li = t(s, dir, "lineitem").repartition(p, col("l_orderkey"))
-      val o = s.read.parquet(s"$dir/orders.parquet")
-      // broadcast sides read RAW: t()'s small-input spread is a wasted
-      // exchange inside a broadcast build (the relation is collected
-      // driver-side regardless of its partitioning)
-      val c = s.read.parquet(s"$dir/customer.parquet")
+      // the orders side takes a SHUFFLE_HASH hint: at any real scale
+      // orders is not broadcastable next to lineitem, and locally the
+      // hint replaces a serial 1.5M-row driver broadcast build with a
+      // per-partition parallel hash build
+      val li = t(s, dir, "lineitem")
+      val o = t(s, dir, "orders")
+      val c = t(s, dir, "customer")
       li.join(o.hint("shuffle_hash"), col("l_orderkey") === col("o_orderkey"))
         .join(broadcast(c), col("o_custkey") === col("c_custkey"))
         .groupBy(col("c_custkey"), col("c_name"))
@@ -219,10 +204,9 @@ object SparkEntry {
 
     "q03_region_revenue" -> ((s, dir) => {
       val o = t(s, dir, "orders")
-      // broadcast sides read raw (no spread exchange inside the build)
-      val c = s.read.parquet(s"$dir/customer.parquet")
-      val n = s.read.parquet(s"$dir/nation.parquet")
-      val r = s.read.parquet(s"$dir/region.parquet")
+      val c = t(s, dir, "customer")
+      val n = t(s, dir, "nation")
+      val r = t(s, dir, "region")
       o.join(broadcast(c), col("o_custkey") === col("c_custkey"))
         .join(broadcast(n), col("c_nationkey") === col("n_nationkey"))
         .join(broadcast(r), col("n_regionkey") === col("r_regionkey"))
@@ -233,8 +217,7 @@ object SparkEntry {
 
     "q04_semi_join" -> ((s, dir) => {
       val c = t(s, dir, "customer")
-      // the semi join's build side broadcasts: raw read, no spread
-      val o = s.read.parquet(s"$dir/orders.parquet")
+      val o = t(s, dir, "orders")
       c.join(o, col("c_custkey") === col("o_custkey"), "left_semi")
         .groupBy(col("c_mktsegment"))
         .agg(count(lit(1)).as("n_customers"),
@@ -243,10 +226,8 @@ object SparkEntry {
 
     "q05_anti_join" -> ((s, dir) => {
       val c = t(s, dir, "customer")
-      // the anti join's build side broadcasts: raw read, no spread
-      val hi = s.read.parquet(s"$dir/orders.parquet")
-        .filter(col("o_totalprice") > 300000)
-      val n = s.read.parquet(s"$dir/nation.parquet") // broadcast side: raw
+      val hi = t(s, dir, "orders").filter(col("o_totalprice") > 300000)
+      val n = t(s, dir, "nation")
       c.join(hi, col("c_custkey") === col("o_custkey"), "left_anti")
         .join(broadcast(n), col("c_nationkey") === col("n_nationkey"))
         .groupBy(col("n_name"))
@@ -254,11 +235,7 @@ object SparkEntry {
     }),
 
     "q06_window_top3" -> ((s, dir) => {
-      // the window needs hash(o_custkey): key the small-input spread on
-      // that (guide §2.4 — the window reuses the exchange) instead of
-      // t()'s round-robin spread followed by the window's own shuffle
-      val o = s.read.parquet(s"$dir/orders.parquet")
-        .repartition(s.sparkContext.defaultParallelism, col("o_custkey"))
+      val o = t(s, dir, "orders")
       val w = Window.partitionBy("o_custkey")
         .orderBy(col("o_totalprice").desc, col("o_orderkey"))
       o.withColumn("rk", row_number().over(w))
@@ -268,9 +245,8 @@ object SparkEntry {
 
     "q07_rollup" -> ((s, dir) => {
       val c = t(s, dir, "customer")
-      // broadcast sides read raw (no spread exchange inside the build)
-      val n = s.read.parquet(s"$dir/nation.parquet")
-      val r = s.read.parquet(s"$dir/region.parquet")
+      val n = t(s, dir, "nation")
+      val r = t(s, dir, "region")
       c.join(broadcast(n), col("c_nationkey") === col("n_nationkey"))
         .join(broadcast(r), col("n_regionkey") === col("r_regionkey"))
         .rollup(col("r_name"), col("n_name"))
@@ -388,7 +364,7 @@ object SparkEntry {
     }),
 
     "q16_quality" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
+      val d = spread(t(s, dir, "documents"))
       d.groupBy(col("source"))
         .agg(
           round(avg(TextStats.alphaRatio(col("text"))), 4).as("avg_alpha"),
@@ -398,13 +374,13 @@ object SparkEntry {
     }),
 
     "q17_langid_script" -> ((s, dir) => {
-      t(s, dir, "documents")
+      spread(t(s, dir, "documents"))
         .groupBy(TextStats.langIdScript(col("text")).as("lang_guess"))
         .agg(count(lit(1)).as("n_docs"))
     }),
 
     "q21_ngram_jaccard" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
+      val d = spread(t(s, dir, "documents"))
       val sh = d.select(col("doc_id"),
         Dedup.wordShingles(col("text"), 3).as("sh"))
       val a = sh.select(col("doc_id").as("a_id"), col("sh").as("a_sh"))
@@ -477,7 +453,8 @@ object SparkEntry {
     }),
 
     "q24_cosine_neardups" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings").select("vec_id", "embedding", "label")
+      val emb = spread(t(s, dir, "embeddings"))
+        .select("vec_id", "embedding", "label")
       Similarity.cosineNearDups(
         selfDup(emb, "vec_id", 20,
           Map("vec_id" -> (col("vec_id") + 1000000))),
@@ -609,7 +586,7 @@ object SparkEntry {
     }),
 
     "q38_quality_score" -> ((s, dir) => {
-      t(s, dir, "documents")
+      spread(t(s, dir, "documents"))
         .groupBy(col("source"))
         .agg(round(avg(TextStats.qualityScore(col("text"))), 4)
           .as("avg_quality"),
@@ -655,14 +632,14 @@ object SparkEntry {
     // ---------- corpus curation (the training-pipeline stages beyond
     // dedup: decontamination, repetition gate, deterministic sampling) --
     "q41_decontaminate" -> ((s, dir) => {
-      val corpus = t(s, dir, "documents").select("doc_id", "text")
+      val corpus = spread(t(s, dir, "documents")).select("doc_id", "text")
       val benchmark = corpus.filter(col("doc_id") < 15).select("text")
       operators.Curation.decontaminate(corpus, benchmark, "text", "doc_id")
         .select("doc_id")
     }),
 
     "q42_repetition_ratio" -> ((s, dir) =>
-      t(s, dir, "documents").select(col("doc_id"),
+      spread(t(s, dir, "documents")).select(col("doc_id"),
         round(operators.Curation.repetitionRatio(col("text")), 4)
           .as("rep_ratio"))),
 
@@ -694,7 +671,7 @@ object SparkEntry {
       // threshold) without the quadratic member-pair expansion
       // (equivalence with the pair-based construction pinned by
       // ComponentsSpec)
-      val d = t(s, dir, "documents").select("doc_id", "text")
+      val d = spread(t(s, dir, "documents")).select("doc_id", "text")
       Dedup.minhashNearDupGroups(
         selfDup(d, "doc_id", 50, Map(
           "doc_id" -> (col("doc_id") + 1000000),
@@ -729,7 +706,7 @@ object SparkEntry {
     "q55_drop_exact_dups" -> ((s, dir) => {
       // keep one representative per normalized text (min id wins) —
       // aggregate-then-join, mega-group-safe (no fingerprint window)
-      val d = t(s, dir, "documents").select("doc_id", "text")
+      val d = spread(t(s, dir, "documents")).select("doc_id", "text")
       Dedup.dropExactDups(
           selfDup(d, "doc_id", 30,
             Map("doc_id" -> (col("doc_id") + 1000000))),
@@ -759,7 +736,7 @@ object SparkEntry {
       // int8 scalar quantization audit: per vector, the scale, the max
       // reconstruction error (bounded by scale/2) and the cosine between
       // the original and its dequantized form
-      val e = t(s, dir, "embeddings")
+      val e = spread(t(s, dir, "embeddings"))
       val q = e.select(col("vec_id"),
         col("embedding").cast("array<double>").as("v"),
         Similarity.quantizeInt8(col("embedding")).as("qz"))
@@ -785,7 +762,7 @@ object SparkEntry {
     "q51_repeated_windows" -> ((s, dir) => {
       // substring-level dup detection (Lee et al. ACL'22 reporting
       // half): positional 8-gram windows occurring in >1 document
-      val d = t(s, dir, "documents").select("doc_id", "text")
+      val d = spread(t(s, dir, "documents")).select("doc_id", "text")
       Dedup.crossDocRepeatedWindows(
           selfDup(d, "doc_id", 50, Map(
             "doc_id" -> (col("doc_id") + 1000000),
@@ -809,7 +786,7 @@ object SparkEntry {
       // MassiveText-style unigram quality stat: mean ln p(token) under
       // the corpus's own top-4096 unigram distribution, OOV floored
       operators.Curation.unigramLogProb(
-          t(s, dir, "documents"), "text", "doc_id", vocab = 4096)
+          spread(t(s, dir, "documents")), "text", "doc_id", vocab = 4096)
         .select(col("doc_id"), round(col("logprob"), 6).as("logprob"),
           col("n_tokens"))),
 
@@ -830,7 +807,7 @@ object SparkEntry {
       // derived-text recipe (the q36/q37 pattern): plant deterministic
       // PII around the real document text, then scrub + count — one
       // map-side codegen'd scan, no shuffle
-      val d = t(s, dir, "documents").select("doc_id", "text")
+      val d = spread(t(s, dir, "documents")).select("doc_id", "text")
       val derived = concat(
         lit("reach user"), col("doc_id").cast("string"),
         lit("@example.com or visit https://docs.example.org/item/"),
@@ -1043,8 +1020,8 @@ object SparkEntry {
       // derived projection; at 100 TB this is the cheapest full-corpus
       // job there is (one scan, one shuffle of partial aggregates keyed
       // by ~|lang x source| groups)
-      val d73 = t(s, dir, "documents").select("doc_id", "lang", "source",
-        "text")
+      val d73 = spread(t(s, dir, "documents"))
+        .select("doc_id", "lang", "source", "text")
       selfDup(d73, "doc_id", 30,
           Map("doc_id" -> (col("doc_id") + 1000000)))
         .select(col("lang"), col("source"),
@@ -1077,7 +1054,8 @@ object SparkEntry {
       // already-oracled operator; the oracle replays the whole chain,
       // pinning the COMPOSITION (stage order matters: domain verdicts
       // aggregate over the deduped corpus)
-      val docs = t(s, dir, "documents").select("doc_id", "source", "text")
+      val docs = spread(t(s, dir, "documents"))
+        .select("doc_id", "source", "text")
       val deduped = Dedup.dropExactDups(
         selfDup(docs, "doc_id", 30,
           Map("doc_id" -> (col("doc_id") + 1000000))),
@@ -1109,19 +1087,6 @@ object SparkEntry {
         graft.sources.OoxmlCorpus.ensureCorruptZip(),
         graft.sources.OoxmlCorpus.ensureGarbage(),
         graft.sources.OoxmlCorpus.ensureDocx())
-      // scratch output + checkpoint on /dev/shm (the same RAM-backed
-      // scratch the bench's spark.local.dir uses): the micro-batch's
-      // parquet append + commit-log fsyncs are the stream's I/O floor,
-      // and /tmp is disk-backed here (guide §6). Result content is
-      // unaffected — these dirs are per-invocation scratch.
-      val shm = java.nio.file.Paths.get("/dev/shm")
-      val scratch =
-        if (java.nio.file.Files.isDirectory(shm)) shm
-        else java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
-      val out = java.nio.file.Files
-        .createTempDirectory(scratch, "graft_q79_out").toString
-      val ckpt = java.nio.file.Files
-        .createTempDirectory(scratch, "graft_q79_ckpt").toString
       // file streaming sources need an explicit schema; binaryFile's is
       // FIXED by the format (path, modificationTime, length, content —
       // BinaryFileFormat.schema), so state it literally instead of
@@ -1141,26 +1106,47 @@ object SparkEntry {
       // with source count; the union form paid it 5x per trigger)
       val files = s.readStream.format("binaryFile").schema(schema)
         .load(braceGlob(dirs))
-      val sink: (DataFrame, Long) => Unit =
-        (batch, _) => batch.write.mode("append").parquet(out)
-      val q = graft.streaming.StreamExtract.decodeStream(files)
-        .writeStream
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .foreachBatch(sink)
-        .start()
-      q.awaitTermination()
-      val seg = element_at(split(col("path"), "/"), -2)
-      s.read.parquet(out).select(
-        when(seg.startsWith("graft_badpdf_corpus"), "bad_pdf")
-          .when(seg.startsWith("graft_badcfb_corpus"), "bad_cfb")
-          .when(seg.startsWith("graft_badzip_corpus"), "bad_zip")
-          .when(seg.startsWith("graft_garbage_corpus"), "garbage")
-          .otherwise("clean").as("kind"),
-        regexp_extract(element_at(split(col("path"), "/"), -1),
-          "doc_(\\d+)", 1).cast("int").as("file_id"),
-        col("format"), col("status"))
+      // scratch output + checkpoint on /dev/shm (the same RAM-backed
+      // scratch the bench's spark.local.dir uses): the micro-batch's
+      // parquet append + commit-log fsyncs are the stream's I/O floor,
+      // and /tmp may be disk-backed. Both dirs live only for this call:
+      // the result (80 rows) is collected into a local frame, then they
+      // are deleted.
+      val shm = java.nio.file.Paths.get("/dev/shm")
+      val scratch =
+        if (java.nio.file.Files.isDirectory(shm)) shm
+        else java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
+      val out = java.nio.file.Files
+        .createTempDirectory(scratch, "graft_q79_out").toString
+      val ckpt = java.nio.file.Files
+        .createTempDirectory(scratch, "graft_q79_ckpt").toString
+      try {
+        val sink: (DataFrame, Long) => Unit =
+          (batch, _) => batch.write.mode("append").parquet(out)
+        val q = graft.streaming.StreamExtract.decodeStream(files)
+          .writeStream
+          .outputMode("append")
+          .option("checkpointLocation", ckpt)
+          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+          .foreachBatch(sink)
+          .start()
+        q.awaitTermination()
+        val seg = element_at(split(col("path"), "/"), -2)
+        val landed = s.read.parquet(out).select(
+          when(seg.startsWith("graft_badpdf_corpus"), "bad_pdf")
+            .when(seg.startsWith("graft_badcfb_corpus"), "bad_cfb")
+            .when(seg.startsWith("graft_badzip_corpus"), "bad_zip")
+            .when(seg.startsWith("graft_garbage_corpus"), "garbage")
+            .otherwise("clean").as("kind"),
+          regexp_extract(element_at(split(col("path"), "/"), -1),
+            "doc_(\\d+)", 1).cast("int").as("file_id"),
+          col("format"), col("status"))
+        s.createDataFrame(java.util.Arrays.asList(landed.collect(): _*),
+          landed.schema)
+      } finally {
+        deleteTree(out)
+        deleteTree(ckpt)
+      }
     }),
 
     "q78_gopher_rules" -> ((s, dir) => {
@@ -1171,7 +1157,7 @@ object SparkEntry {
       // the word-count bound (>= 50) discriminates naturally. Ratios
       // are single int/int IEEE divisions — bit-identical in DuckDB,
       // no rounding (see gopherFlags scaladoc).
-      val d = t(s, dir, "documents").select("doc_id", "text")
+      val d = spread(t(s, dir, "documents")).select("doc_id", "text")
       val corpus = d.select(col("doc_id"),
         when(col("doc_id") % 5 === 0,
           concat(col("text"), lit("\n• bullet item one\n• bullet item one" +
@@ -1207,7 +1193,7 @@ object SparkEntry {
       // exactly the plant, so the rebuilt text is the original document
       // (normalized) — but the oracle replays the full algorithm rather
       // than assuming that closed form
-      val d = t(s, dir, "documents").select("doc_id", "text")
+      val d = spread(t(s, dir, "documents")).select("doc_id", "text")
       val sentence =
         "Shared eval question sentence for the span decontamination test. "
       val corpus = d.select(col("doc_id"),
@@ -1243,7 +1229,7 @@ object SparkEntry {
       // the verdict boundary is exercised, not vacuous (the rounded-mean
       // compare keeps it engine-stable, as q38's hash match proves)
       operators.Curation.dropLowQualityDomains(
-          t(s, dir, "documents"), "source",
+          spread(t(s, dir, "documents")), "source",
           TextStats.qualityScore(col("text")), 0.8215, 10L)
         .select("doc_id", "source")
     }),
@@ -1371,7 +1357,7 @@ object SparkEntry {
       // oracle replays the whole algorithm in DuckDB and byte-checks
       // text_clean (any incidental cross-doc 8-grams between the real
       // document texts are mirrored identically on both sides)
-      val d = t(s, dir, "documents").select("doc_id", "text")
+      val d = spread(t(s, dir, "documents")).select("doc_id", "text")
       val planted = d.select(col("doc_id"),
         when(col("doc_id") < 20,
           concat(lit("Shared boilerplate header sentence common to " +

@@ -22,8 +22,8 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Why native: the HOF form pays |tokens| interpreted closure
   * dispatches each allocating a slice array and an array_join buffer —
-  * after [[MinhashSig]] it was the remaining per-row term of the
-  * q20/q41/q45/q48 shingle family (~160 us/doc measured at sf0.1).
+  * the dominant per-row term of the q20/q41/q45/q48 shingle family
+  * (~160 us/doc measured at sf0.1).
   */
 case class WordShingles(child: Expression, k: Int)
     extends UnaryExpression {

@@ -74,13 +74,17 @@ object Components {
     * union-find over the collected edges instead of 2-4 alternation
     * rounds of 2 shuffles + checkpoint + checksum each (~25 Spark jobs
     * at smoke scale, measured: q45 wall 4.1 s → the local path removes
-    * the whole loop). The driver-heap bound is the collected
-    * `Array[(Long, Long)]`: the encoder builds a generic `Tuple2` of two
-    * boxed `java.lang.Long`s per edge, ~76 B per edge with the array
-    * slot (measured 76.7 B on a compressed-oops heap), so ~320 MB at
-    * 2^22 + 1 edges — the same bounded-collect discipline as broadcast
-    * joins and [[Similarity.samplePivots]]; the union-find's map adds
-    * at most two entries per edge on top. Dedup pair graphs sit far
+    * the whole loop). The driver-heap bound is the collect: the edges
+    * arrive packed as primitive longs, 16 B per edge each in the decoded
+    * result rows, the collected arrays and the flattened interleaved
+    * array (measured 16.0-16.6 B per edge each over 1M edges on a 2 GB
+    * compressed-oops heap; a collect of `(Long, Long)` tuples kept
+    * 76.4 B per edge and decoded 84.6 B per edge of rows first), so
+    * ~48 B per edge, ~200 MB at 2^22 + 1 edges, at its peak — the same
+    * bounded-collect discipline as broadcast joins and
+    * [[Similarity.samplePivots]]. The union-find then holds the
+    * interleaved array, a sorted id copy (16 B per edge) and one `Int`
+    * parent per node. Dedup pair graphs sit far
     * below the threshold even at corpus scale (edges ≈ verified
     * near-dup pairs of *representatives*); a graph beyond it takes the
     * distributed alternation unchanged. Labels are identical on both
@@ -107,48 +111,62 @@ object Components {
       // way) and exactly threshold+1 rows when it does not — the old
       // count()-then-collect() shape paid a full count job first, which
       // at scale is strictly more work than an early-terminating limit.
+      // Each partition of the limited edge set is packed into ONE
+      // interleaved primitive array (hi0, lo0, hi1, lo1, ...) on the
+      // executor, so the driver decodes 16 B per edge instead of one
+      // row object per edge.
       import spark.implicits._
-      val probe = edges.as[(Long, Long)].limit(LocalEdgeThreshold + 1)
-        .collect()
-      if (probe.length <= LocalEdgeThreshold) localLabels(spark, probe)
+      val flat = edges.limit(LocalEdgeThreshold + 1).as[(Long, Long)]
+        .mapPartitions { it =>
+          val b = new scala.collection.mutable.ArrayBuilder.ofLong
+          it.foreach { case (hi, lo) => b += hi; b += lo }
+          Iterator.single(b.result())
+        }.collect().flatten
+      if (flat.length <= 2 * LocalEdgeThreshold) localLabels(spark, flat)
       else distributedLabels(edges, maxRounds)._1
     } finally edges.unpersist()
   }
 
-  /** Driver union-find labeling of a bounded canonical edge list —
-    * union-by-min roots + path compression, so every root IS its
+  /** Driver union-find labeling of a bounded canonical edge list given
+    * as interleaved `(hi, lo)` longs. Ids are mapped to dense indices in
+    * id order (sorted distinct copy + binary search), so union-by-min
+    * over `Int` parents with path halving leaves every root at its
     * component's minimum id (the same canonical label as the
     * distributed alternation). Output schema matches the distributed
     * path: (id LONG, component LONG).
     */
   private def localLabels(spark: org.apache.spark.sql.SparkSession,
-                          edges: Array[(Long, Long)]): DataFrame = {
-    val parent = new scala.collection.mutable.LongMap[Long](
-      math.max(16, edges.length * 2))
-    def find(x0: Long): Long = {
+                          flat: Array[Long]): DataFrame = {
+    val ids = flat.clone()
+    java.util.Arrays.sort(ids)
+    var n = 0
+    var i = 0
+    while (i < ids.length) {
+      if (n == 0 || ids(i) != ids(n - 1)) { ids(n) = ids(i); n += 1 }
+      i += 1
+    }
+    val parent = Array.tabulate(n)(identity)
+    def find(x0: Int): Int = {
       var x = x0
-      var p = parent(x)
-      while (p != x) { // path halving
-        val gp = parent(p)
-        parent(x) = gp
-        x = gp
-        p = parent(x)
+      while (parent(x) != x) { // path halving
+        parent(x) = parent(parent(x))
+        x = parent(x)
       }
       x
     }
-    edges.foreach { case (hi, lo) =>
-      parent.getOrElseUpdate(hi, hi)
-      parent.getOrElseUpdate(lo, lo)
-      val rh = find(hi)
-      val rl = find(lo)
-      if (rh != rl) { // union by min: the smaller root wins
-        if (rh < rl) parent(rl) = rh else parent(rh) = rl
-      }
+    def index(id: Long): Int = java.util.Arrays.binarySearch(ids, 0, n, id)
+    i = 0
+    while (i < flat.length) {
+      val a = find(index(flat(i)))
+      val b = find(index(flat(i + 1)))
+      // union by min: the smaller index (= smaller id) stays the root
+      if (a < b) parent(b) = a else if (b < a) parent(a) = b
+      i += 2
     }
-    val out = new Array[org.apache.spark.sql.Row](parent.size)
-    var i = 0
-    parent.foreachKey { id =>
-      out(i) = org.apache.spark.sql.Row(id, find(id))
+    val out = new Array[org.apache.spark.sql.Row](n)
+    i = 0
+    while (i < n) {
+      out(i) = org.apache.spark.sql.Row(ids(i), ids(find(i)))
       i += 1
     }
     spark.createDataFrame(

@@ -510,40 +510,6 @@ object Dedup {
 
   // ---------- MinHash + LSH ----------
 
-  /** MinHash signature of a shingle array: sig[i] = min over shingles of
-    * xxhash64(shingle, i) — the native codegen'd
-    * [[graft.functions.MinhashSig]] (bit-identical hash values to the
-    * interpreted HOF form [[minhashSignatureHof]] it replaced in r05;
-    * that form cost numHashes x |shingles| boxed closure dispatches per
-    * document, the dominant per-row term of the minhash family).
-    */
-  def minhashSignature(shingles: Column, numHashes: Int): Column =
-    graft.functions.MinhashSig.minhashSig(shingles, numHashes)
-
-  /** The pre-r05 higher-order-function form, kept as the executable
-    * parity reference for MinhashSigSpec (interpreted — do not use on
-    * hot paths).
-    */
-  private[graft] def minhashSignatureHof(shingles: Column,
-                                         numHashes: Int): Column =
-    bindOnce(shingles, sh =>
-      transform(sequence(lit(0), lit(numHashes - 1)), i =>
-        coalesce(
-          array_min(transform(sh, s => xxhash64(s, i))),
-          lit(Long.MaxValue))))
-
-  /** LSH band keys: split the signature into `bands` rows of
-    * `numHashes/bands`, hash each band. Docs sharing any band key are
-    * candidates (standard banding: P(candidate) = 1-(1-j^r)^b).
-    */
-  def bandKeys(sig: Column, bands: Int, rowsPerBand: Int): Column =
-    bindOnce(sig, sg =>
-      transform(sequence(lit(0), lit(bands - 1)), b =>
-        struct(b.as("band"),
-          xxhash64(array_join(
-            transform(slice(sg, b * rowsPerBand + 1, lit(rowsPerBand)),
-              x => x.cast("string")), ",")).as("bkey"))))
-
   // deterministic seeded hash family parameters (odd multipliers)
   private lazy val hashFamily: Array[Long] = {
     val rnd = new scala.util.Random(0x5eed5eedL)
@@ -573,9 +539,7 @@ object Dedup {
 
   /** One-pass MinHash signature: one strong base hash per shingle, the
     * family derived by multiply-xorshift mixing — O(shingles x numHashes)
-    * cheap long ops instead of numHashes string rehashes (the Catalyst
-    * higher-order variant above is kept for SQL-surface parity but the
-    * typed path is ~20x faster).
+    * cheap long ops instead of numHashes string rehashes.
     */
   def minhashSig(shingles: Array[String], numHashes: Int): Array[Long] = {
     val sig = Array.fill(numHashes)(Long.MaxValue)

@@ -92,26 +92,6 @@ class OperatorSpec extends AnyFunSuite {
     assert(math.abs(j - 1.0 / 3.0) < 1e-9)
   }
 
-  test("SQL-surface minhash signature/band columns behave like LSH") {
-    // the Catalyst higher-order variants (kept for SQL-surface parity
-    // with the typed fast path): identical shingle sets -> identical
-    // signatures and band keys; disjoint sets -> different signatures
-    val s = spark
-    import s.implicits._
-    val df = Seq(
-      (1L, Seq("a b", "b c", "c d")),
-      (2L, Seq("a b", "b c", "c d")),
-      (3L, Seq("x y", "y z", "z w"))).toDF("id", "sh")
-    val sigs = df.select(col("id"),
-        Dedup.minhashSignature(col("sh"), 16).as("sig"))
-      .withColumn("bands", Dedup.bandKeys(col("sig"), 4, 4))
-      .collect().map(r => (r.getLong(0),
-        r.getSeq[Long](1), r.getSeq[org.apache.spark.sql.Row](2)))
-    assert(sigs(0)._2 == sigs(1)._2 && sigs(0)._3 == sigs(1)._3)
-    assert(sigs(0)._2 != sigs(2)._2)
-    assert(sigs(0)._2.length == 16 && sigs(0)._3.length == 4)
-  }
-
   test("minhash LSH finds near-dups, skips distinct docs") {
     val base = "the quick brown fox jumps over the lazy dog and runs far away into the woods tonight"
     val near = base + " extra"

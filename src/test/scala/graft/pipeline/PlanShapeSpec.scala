@@ -51,6 +51,29 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(anti.contains("LeftAnti"), anti)
   }
 
+  test("only kernel queries spread their input: q13 reads plainly, " +
+    "q16 round-robins its single-split scan") {
+    def plan(q: String) = graft.SparkEntry.queries(q)(spark, sf)
+      .queryExecution.executedPlan.toString
+    val q13 = plan("q13_doc_stats")
+    assert(!q13.contains("RoundRobinPartitioning"), q13)
+    val q16 = plan("q16_quality")
+    assert(q16.contains(
+      s"RoundRobinPartitioning(${spark.sparkContext.defaultParallelism})"),
+      q16)
+  }
+
+  test("spread passes a frame with >= defaultParallelism partitions " +
+    "through unchanged") {
+    val p = spark.sparkContext.defaultParallelism
+    val wide = spark.range(0, 1000, 1, p).toDF("id")
+    val out = graft.SparkEntry.spread(wide)
+    assert(out eq wide)
+    assert(!out.queryExecution.executedPlan.toString.contains("Exchange"))
+    val narrow = spark.range(0, 1000, 1, 1).toDF("id")
+    assert(graft.SparkEntry.spread(narrow).rdd.getNumPartitions == p)
+  }
+
   test("pricing summary is one pass: partial agg before the exchange") {
     val plan = graft.SparkEntry.queries("q01_pricing_summary")(spark, sf)
       .queryExecution.executedPlan.toString

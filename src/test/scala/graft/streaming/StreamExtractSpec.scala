@@ -57,10 +57,26 @@ class StreamExtractSpec extends AnyFunSuite {
     // garbage-ok, 40 clean-docx-ok). awaitTermination inside the entry
     // doubles as the termination assertion: a corrupt file that killed
     // the stream would hang or throw here, not mis-count.
+    val shm = java.nio.file.Paths.get("/dev/shm")
+    val scratch =
+      if (Files.isDirectory(shm)) shm
+      else java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
+    def q79Dirs(): Set[String] = {
+      val ls = Files.list(scratch)
+      try {
+        import scala.jdk.CollectionConverters._
+        ls.iterator().asScala.map(_.getFileName.toString)
+          .filter(_.startsWith("graft_q79_")).toSet
+      } finally ls.close()
+    }
+    val before = q79Dirs()
     val rows = graft.SparkEntry.queries("q79_stream_decode")(spark, "")
       .collect()
       .map(r => (r.getString(0), r.getInt(1), r.getString(2),
         r.getString(3)))
+    // the stream's output and checkpoint dirs are gone once the result
+    // is collected
+    assert((q79Dirs() -- before).isEmpty, q79Dirs() -- before)
     assert(rows.length == 80)
     val byKind = rows.groupBy(_._1)
     assert(byKind("bad_pdf").forall(r => r._3 == "pdf" && r._4 == "error"))
