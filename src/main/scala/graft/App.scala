@@ -58,7 +58,8 @@ object App {
       .append("\",\"length\":").append(s.length).append('}')
   }
 
-  private def escape(s: String): String = {
+  /** JSON string-body escaping (quotes, backslashes, control chars). */
+  private[graft] def escape(s: String): String = {
     val sb = new java.lang.StringBuilder(s.length + 8)
     var i = 0
     while (i < s.length) {

@@ -39,11 +39,4 @@ object DocDates {
     }
     monthString.toInt
   }
-
-  /** All dates in a text (the multi-match surface of the same dialect). */
-  def findAllDates(text: String): Seq[java.time.LocalDate] =
-    dateRegex.findAllMatchIn(text.toLowerCase).map { m =>
-      java.time.LocalDate.of(
-        m.group("year").toInt, month(m.group("month")), m.group("day").toInt)
-    }.toSeq
 }

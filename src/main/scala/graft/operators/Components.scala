@@ -296,30 +296,14 @@ object Components {
 
   /** Near-dup group labeling straight off a verified pair set:
     * `(id, group_id)` for every document in at least one pair, group_id =
-    * min member id. Compose with an anti-join (keep `id == group_id` or
-    * ids absent from the labeling) to drop all-but-one per transitive
-    * group.
+    * min member id. Compose with [[dropByGroupLabels]] to drop
+    * all-but-one per transitive group; a family's `*Groups` surface gives
+    * the same labeling without the pair surface's quadratic expansion.
     */
   def dupGroups(pairs: DataFrame, idACol: String = "id_a",
                 idBCol: String = "id_b"): DataFrame =
     connectedComponents(pairs, idACol, idBCol)
       .withColumnRenamed("component", "group_id")
-
-  /** Keep one representative per transitive near-dup group (the minimum
-    * id), passing through every document in no pair: the last stage of
-    * the dedup pipeline. One broadcast-or-shuffle left join against the
-    * (small) labeling — the corpus itself is scanned once.
-    *
-    * NOTE: this pair-based form pays the pair surface's quadratic
-    * member-pair expansion upstream. When a family's `*Groups` surface
-    * exists (`Dedup.minhashNearDupGroups`, `Similarity.cosineNearDupGroups`,
-    * `Winnow.sharedFingerprintGroups`, `Dedup.simhashNearDupGroups`),
-    * prefer [[dropByGroupLabels]] over its labeling — same result, no
-    * quadratic blowup.
-    */
-  def dropNearDups(df: DataFrame, pairs: DataFrame, idCol: String,
-                   idACol: String = "id_a", idBCol: String = "id_b"): DataFrame =
-    dropByGroupLabels(df, dupGroups(pairs, idACol, idBCol), idCol)
 
   /** Keep one representative per group from a `(id, group_id)` labeling
     * (any `*Groups` surface): drop every labeled doc that is not its

@@ -418,10 +418,8 @@ object Curation {
     * form runs one global `ntile` window — a single-task sort, valid
     * over the NARROW (id, score) projection the caller passes (payload
     * columns rejoin on the id afterwards, the [[packSequences]]
-    * discipline) — and is the oracled test-scale form. At corpus scale
-    * run one `percentile_approx` aggregate for the k-1 thresholds and
-    * assign with [[qualityBucketsByThreshold]]: a per-row codegen CASE,
-    * no window, no shuffle.
+    * discipline) — and is the oracled test-scale form. The form that
+    * scales is [[qualityBucketsBy]], which ranks within each stratum.
     */
   def qualityBuckets(df: DataFrame, scoreCol: Column, idCol: String,
                      k: Int): DataFrame = {
@@ -444,50 +442,6 @@ object Curation {
     require(k >= 2, "need at least 2 buckets")
     df.withColumn("bucket", ntile(k).over(
       Window.partitionBy(col(stratumCol)).orderBy(scoreCol.desc, col(idCol))))
-  }
-
-  /** Shuffle-free bucket assignment against precomputed thresholds
-    * (strictly descending; k = thresholds.size + 1): bucket i+1 is the
-    * first i with score >= thresholds(i), else bucket k. Pairs with a
-    * `percentile_approx` (or exact, at test scale) threshold job; the
-    * assignment itself is a pushable whole-stage-codegen CASE — at
-    * 100 TB it rides whatever scan already reads the score.
-    */
-  def qualityBucketsByThreshold(df: DataFrame, scoreCol: Column,
-                                thresholds: Seq[Double]): DataFrame = {
-    require(thresholds.nonEmpty &&
-      thresholds.sliding(2).forall(w => w.size < 2 || w(0) > w(1)),
-      "thresholds must be strictly descending")
-    val k = thresholds.size + 1
-    val bucket = thresholds.zipWithIndex.reverse
-      .foldLeft(lit(k)) { case (acc, (t, i)) =>
-        when(scoreCol >= t, lit(i + 1)).otherwise(acc)
-      }
-    df.withColumn("bucket", bucket)
-  }
-
-  /** The k-1 descending thresholds for [[qualityBucketsByThreshold]]
-    * from ONE `percentile_approx` aggregate (map-side-combinable
-    * KLL-style sketch, driver gets k-1 doubles) — the corpus-scale
-    * threshold source: at 100 TB this is a single cheap pass, after
-    * which bucket assignment costs nothing beyond the scan that reads
-    * the score. Exactness is the sketch's `accuracy` parameter; bucket
-    * POPULATIONS are then approximately (not exactly) equal, which is
-    * the standard CCNet trade.
-    */
-  def scoreThresholds(df: DataFrame, scoreCol: Column, k: Int,
-                      accuracy: Int = 10000): Seq[Double] = {
-    require(k >= 2, "need at least 2 buckets")
-    val ps = array((1 until k).map(i => lit(1.0 - i.toDouble / k)): _*)
-    val row = df.agg(percentile_approx(scoreCol, ps, lit(accuracy)).as("t"))
-      .first()
-    if (row.isNullAt(0)) Seq.empty // empty/all-null input: no thresholds
-    else
-      // skewed or low-cardinality scores (e.g. rounded ones) produce
-      // TIED quantiles; collapse them so the result always satisfies
-      // [[qualityBucketsByThreshold]]'s strictly-descending contract
-      // (tied buckets merge — fewer, bigger buckets, never a throw)
-      row.getSeq[Double](0).distinct.toSeq
   }
 
   /** Domain-level curation — the per-domain gate of web-scale pipelines

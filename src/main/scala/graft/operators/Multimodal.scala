@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Multimodal columns: image/audio/video as opaque `binary` with typed
@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
   *
   * The Spark-side plumbing (schema, partitioning by modality, batch
   * shape, error capture) is real and tested. Codec status (r04):
-  * IMAGE decode/resize is REAL (JDK `javax.imageio` — PNG/JPEG) and
+  * IMAGE decode is REAL (JDK `javax.imageio` — PNG/JPEG) and
   * AUDIO decode is REAL (a manual RIFF/PCM16 WAV parser — deterministic
   * and library-free); both are oracled end-to-end by q66 over
   * synthesized media whose decoded statistics are closed-form. VIDEO
@@ -91,24 +91,6 @@ object Multimodal {
     (w, h, r / n, g / n, b / n)
   }
 
-  /** Real image resize (Graphics2D bilinear) re-encoded as PNG — the
-    * feature-extraction pre-step a vision pipeline runs per row.
-    */
-  def resizeImage(bytes: Array[Byte], w: Int, h: Int): Array[Byte] = {
-    val src = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(bytes))
-    require(src != null, "not a decodable image")
-    val dst = new java.awt.image.BufferedImage(w, h,
-      java.awt.image.BufferedImage.TYPE_INT_RGB)
-    val gfx = dst.createGraphics()
-    gfx.setRenderingHint(java.awt.RenderingHints.KEY_INTERPOLATION,
-      java.awt.RenderingHints.VALUE_INTERPOLATION_BILINEAR)
-    gfx.drawImage(src, 0, 0, w, h, null)
-    gfx.dispose()
-    val out = new java.io.ByteArrayOutputStream()
-    javax.imageio.ImageIO.write(dst, "png", out)
-    out.toByteArray
-  }
-
   /** Real WAV decode: RIFF chunk walk (unknown chunks skipped) to the
     * `fmt `/`data` pair; PCM16 mono only (the synthesized corpus form —
     * other encodings raise, captured as error rows). Returns
@@ -161,40 +143,6 @@ object Multimodal {
     (rate, n, if (n == 0) 0.0 else acc / n / 32768.0)
   }
 
-  /** Real-codec feature extraction: image -> [w, h, meanR, meanG,
-    * meanB]; audio -> [sampleRate, nSamples, meanAbs]; video -> the
-    * documented stub features (no JDK video codec). Same distributed
-    * shape as [[extractFeatures]] (modality+hash repartition, one serde
-    * boundary, per-row error capture).
-    */
-  def extractFeaturesReal(assets: Dataset[MediaAsset],
-                          partitions: Int): Dataset[MediaFeatures] = {
-    import assets.sparkSession.implicits._
-    assets
-      .repartition(partitions, col("meta.modality"),
-        pmod(xxhash64(col("asset_id")), lit(partitions)))
-      .mapPartitions(_.map { a =>
-        try {
-          val feats: Array[Float] = a.meta.modality match {
-            case "image" =>
-              val (w, h, r, g, b) = decodeImage(a.bytes)
-              Array(w.toFloat, h.toFloat, r.toFloat, g.toFloat, b.toFloat)
-            case "audio" =>
-              val (rate, n, meanAbs) = decodeWavPcm16(a.bytes)
-              Array(rate.toFloat, n.toFloat, meanAbs.toFloat)
-            case _ => decodeStub(a.bytes, a.meta)
-          }
-          MediaFeatures(a.asset_id, a.meta.modality,
-            if (a.bytes == null) 0L else a.bytes.length.toLong,
-            if (a.bytes == null) 0L else checksum(a.bytes), feats, null)
-        } catch {
-          case e: Exception =>
-            MediaFeatures(a.asset_id, a.meta.modality, 0L, 0L,
-              Array.empty[Float], s"${e.getClass.getSimpleName}: ${e.getMessage}")
-        }
-      })
-  }
-
   /** Deterministic 8x8 RGB PNG for asset id: pixel (x, y) has channels
     * ((id*17 + x*3 + y*5) % 256, (id*29 + x*7 + y*11) % 256,
     * (id*43 + x*13 + y*17) % 256) — decoded means are closed-form (the
@@ -240,16 +188,6 @@ object Multimodal {
     out.write("data".getBytes("US-ASCII")); w32(data.length.toLong)
     out.write(data)
     out.toByteArray
-  }
-
-  /** Deterministic frame sampling for video bytes: every k-th window —
-    * the real pipeline samples frames; the byte windows stand in.
-    */
-  def frameSample(bytes: Array[Byte], frameBytes: Int, everyK: Int): Seq[Array[Byte]] = {
-    if (bytes == null || frameBytes <= 0 || everyK <= 0) return Nil
-    val frames = bytes.grouped(frameBytes).zipWithIndex
-      .collect { case (f, i) if i % everyK == 0 => f }
-    frames.toSeq
   }
 
   private def checksum(bytes: Array[Byte]): Long = {

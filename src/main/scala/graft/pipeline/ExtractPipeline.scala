@@ -149,7 +149,9 @@ object ExtractPipeline {
   }
 
   /** The lineage/metrics surface: one row per committed bucket manifest
-    * (bucket, rows, bytes, inputFingerprint, version).
+    * (bucket, rows, bytes, inputFingerprint, version). It is the lineage
+    * reader of SURVEY row S10 and §8 row 5, the job-level counterpart of
+    * the reference's `{status, version}` endpoint.
     */
   def readManifest(spark: SparkSession, outDir: String): DataFrame =
     spark.read

@@ -33,13 +33,16 @@ final case class ManifestEntry(
 object ManifestEntry {
   def toJson(e: ManifestEntry): String =
     s"""{"bucket":${e.bucket},"rows":${e.rows},"bytes":${e.bytes},""" +
-      s""""inputFingerprint":"${e.inputFingerprint}","version":"${e.version}"}"""
+      s""""inputFingerprint":"${graft.App.escape(e.inputFingerprint)}",""" +
+      s""""version":"${graft.App.escape(e.version)}"}"""
 }
 
 /** Hadoop-FS manifest: one JSON file per bucket under `_manifest/`,
   * committed by atomic rename (write to `_tmp`, then rename — the same
   * commit primitive Hadoop output committers rely on). Works on local FS
   * here and on HDFS/object stores with atomic rename semantics at scale.
+  * Nothing is removed before the rename, so no crash point leaves a
+  * committed bucket without its manifest file.
   */
 final class HadoopManifestCatalog(outDir: String, conf: Configuration)
     extends TranscriptCatalog {
@@ -67,7 +70,10 @@ final class HadoopManifestCatalog(outDir: String, conf: Configuration)
     val out = f.create(tmp, true)
     try out.write(ManifestEntry.toJson(entry).getBytes(StandardCharsets.UTF_8))
     finally out.close()
-    if (f.exists(dst)) f.delete(dst, false) // idempotent re-commit
+    // `runCheckpointed` commits only uncommitted buckets. On a re-commit
+    // the rename decides: Hadoop's LocalFileSystem replaces `dst`; HDFS
+    // and the Hive local FS on Spark's classpath refuse, and the
+    // IOException below reports it with the old record intact.
     if (!f.rename(tmp, dst)) {
       throw new java.io.IOException(s"manifest commit failed for $dst")
     }

@@ -793,12 +793,6 @@ object PdfDecode {
     (contents.toSeq, displayWidth)
   }
 
-  /** Page content streams + media box width (fonts dropped). */
-  def pageStreams(bytes: Array[Byte]): (Seq[Array[Byte]], Float) = {
-    val (pd, w) = pageData(bytes)
-    (pd.map(_.content), w)
-  }
-
   // ---------- content-stream interpreter ----------
 
   private sealed trait Tok

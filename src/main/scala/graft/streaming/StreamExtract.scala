@@ -1,71 +1,32 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
 
-import graft.pipeline.{ExtractPipeline, ExtractedTurn, Turn}
+import graft.pipeline.Turn
 
-/** Structured Streaming surface of the extraction engine.
+/** Structured Streaming operators of the extraction engine.
   *
   * The reference is strictly synchronous request/response (SURVEY.md
-  * §2.8) — per-turn extraction is stateless, so the streaming variant is
-  * the same `mapPartitions` kernel under `readStream`, with an optional
-  * watermarked per-conversation aggregate and a stateful
-  * conversation-progress tracker (`mapGroupsWithState`) as the
-  * cross-turn extension a transcript firehose needs.
+  * §2.8). Per-turn extraction is stateless, so streaming extraction is
+  * `ExtractPipeline.extractNarrow` applied to a `readStream` frame; this
+  * object holds only what a stream adds on top: a watermark-evicting
+  * per-conversation progress tracker, exact dedup bounded by the
+  * watermark, and a binary decode stream whose corrupt files become
+  * error rows.
   */
 object StreamExtract {
 
-  /** Streaming extraction: same kernel, no state, append mode. */
-  def extractStream(turns: DataFrame): Dataset[ExtractedTurn] =
-    ExtractPipeline.extractNarrow(turns)
-
-  /** Watermarked tumbling-window bytes/turn counts per role. */
-  def throughputByRole(turns: DataFrame): DataFrame =
-    turns
-      .withWatermark("ts", "10 minutes")
-      .groupBy(window(col("ts"), "5 minutes"), col("role"))
-      .agg(count(lit(1)).as("n_turns"),
-        sum(length(col("text"))).as("n_chars"))
-
-  /** Per-conversation running progress (turns seen, bytes extracted) via
-    * mapGroupsWithState — the stateful-op surface (KeyValueGroupedDataset).
-    * NoTimeout: a processing-time timeout keeps scheduling wake-up batches
-    * forever, which live-locks bounded smoke runs. For an unbounded
-    * firehose use [[conversationProgressEvicting]], which bounds state by
-    * the event-time watermark.
-    */
+  /** Running progress of one conversation: turns seen, bytes extracted. */
   final case class ConvProgress(conv_id: String, nTurns: Long, nBytes: Long)
 
-  def conversationProgress(turns: Dataset[Turn])
-      (implicit enc1: org.apache.spark.sql.Encoder[ConvProgress])
-      : Dataset[ConvProgress] = {
-    import turns.sparkSession.implicits._
-    turns
-      .groupByKey(_.conv_id)
-      .mapGroupsWithState(GroupStateTimeout.NoTimeout) {
-        (convId: String, rows: Iterator[Turn], state: GroupState[ConvProgress]) =>
-          var n = 0L
-          var bytes = 0L
-          rows.foreach { t =>
-            n += 1
-            val e = graft.pipeline.TurnExtractor.extract(t)
-            bytes += e.nBytes
-          }
-          val prev = state.getOption.getOrElse(ConvProgress(convId, 0L, 0L))
-          val next = ConvProgress(convId, prev.nTurns + n, prev.nBytes + bytes)
-          state.update(next)
-          next
-      }
-  }
-
-  /** Watermark-evicting variant of [[conversationProgress]] — the
-    * production-firehose policy the NoTimeout scaladoc defers (VERDICT
-    * r02 #9): a conversation's state times out `gapMs` of EVENT TIME
-    * after its last seen turn, emits its final progress row once, and is
-    * REMOVED — total state is bounded by the number of conversations
-    * active inside one watermark horizon, independent of stream length.
+  /** Per-conversation progress under `mapGroupsWithState` with state
+    * evicted by the event-time watermark (SURVEY §10 row 9): a
+    * conversation's state times out `gapMs` of EVENT TIME after its last
+    * seen turn, emits its final progress row once, and is REMOVED — total
+    * state is bounded by the number of conversations active inside one
+    * watermark horizon, independent of stream length.
     */
   def conversationProgressEvicting(turns: Dataset[Turn],
       watermark: String = "10 minutes", gapMs: Long = 60000L)
@@ -181,22 +142,5 @@ object StreamExtract {
       .select(col("path"), lit("oversize").as("format"),
         lit("error").as("status"), lit(0L).as("n_units"))
     decoded.unionByName(oversized)
-  }
-
-  /** Convenience: run the streaming extraction over a parquet directory
-    * source into an in-memory sink (test/smoke path) or parquet sink.
-    */
-  def startParquetToMemory(spark: SparkSession, inputDir: String,
-                           queryName: String): StreamingQuery = {
-    val schema = spark.read.parquet(inputDir).schema
-    val turns = spark.readStream.schema(schema).parquet(inputDir)
-    extractStream(turns)
-      .select("conv_id", "turn_idx", "nParas", "nBytes", "error")
-      .writeStream
-      .outputMode(OutputMode.Append)
-      .format("memory")
-      .queryName(queryName)
-      .trigger(Trigger.ProcessingTime("1 second"))
-      .start()
   }
 }

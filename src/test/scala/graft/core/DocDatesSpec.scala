@@ -24,9 +24,4 @@ class DocDatesSpec extends AnyFunSuite {
       Some(LocalDate.of(2022, 7, 7)))
     assert(DocDates.findDate("без даты") == None)
   }
-
-  test("findAllDates returns every match in order") {
-    assert(DocDates.findAllDates("01.01.2020 и 2 февраля 2021") ==
-      Seq(LocalDate.of(2020, 1, 1), LocalDate.of(2021, 2, 2)))
-  }
 }

@@ -214,13 +214,15 @@ class ComponentsSpec extends AnyFunSuite {
     assert(local == dist)
   }
 
-  test("dropNearDups keeps one per transitive group plus untouched rows") {
+  test("dropByGroupLabels over dupGroups keeps one per transitive group " +
+    "plus untouched rows") {
     val s = spark
     import s.implicits._
     val corpus = Seq(1L -> "a", 2L -> "b", 3L -> "c", 4L -> "d", 5L -> "e")
       .toDF("doc_id", "text")
     // 1~2, 2~3 transitively groups {1,2,3} even though (1,3) never paired
-    val kept = Components.dropNearDups(corpus, pairs(1L -> 2L, 2L -> 3L), "doc_id")
+    val kept = Components.dropByGroupLabels(corpus,
+      Components.dupGroups(pairs(1L -> 2L, 2L -> 3L)), "doc_id")
       .select("doc_id").collect().map(_.getLong(0)).sorted
     assert(kept.toSeq == Seq(1L, 4L, 5L))
   }

@@ -377,27 +377,6 @@ class CurationSpec extends AnyFunSuite {
     assert(got.values.groupBy(identity).values.forall(_.size == 2))
   }
 
-  test("qualityBucketsByThreshold matches the rank form on its exact " +
-    "quantile cuts and stays shuffle-free") {
-    val s = spark
-    import s.implicits._
-    val scored = (1L to 12L).map(i => (i, i.toDouble)).toDF("doc_id", "s")
-    // exact tertile thresholds for scores 1..12: buckets {12..9},{8..5},{4..1}
-    val byThr = Curation.qualityBucketsByThreshold(
-      scored, col("s"), Seq(9.0, 5.0))
-    val byRank = Curation.qualityBuckets(scored, col("s"), "doc_id", 3)
-    val a = byThr.select("doc_id", "bucket").collect()
-      .map(r => r.getLong(0) -> r.getInt(1)).toMap
-    val b = byRank.select("doc_id", "bucket").collect()
-      .map(r => r.getLong(0) -> r.getInt(1)).toMap
-    assert(a == b, s"$a vs $b")
-    val plan = byThr.queryExecution.executedPlan.toString
-    assert(!plan.contains("Exchange"), plan)
-    intercept[IllegalArgumentException] {
-      Curation.qualityBucketsByThreshold(scored, col("s"), Seq(1.0, 5.0))
-    }
-  }
-
   test("qualityBucketsBy ranks inside each stratum over a hash-" +
     "partitioned window (no single-task global sort)") {
     val s = spark
@@ -418,38 +397,6 @@ class CurationSpec extends AnyFunSuite {
     assert(got.find(_._1 == 11L).get._3 == 1)
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("hashpartitioning(lang"), plan)
-  }
-
-  test("scoreThresholds feeds the threshold form: one aggregate, " +
-    "near-equal buckets") {
-    val s = spark
-    import s.implicits._
-    val scored = (1L to 100L).map(i => (i, i.toDouble)).toDF("doc_id", "s")
-    val thr = Curation.scoreThresholds(scored, col("s"), 4)
-    assert(thr.size == 3 && thr.sliding(2).forall(w => w(0) > w(1)), thr)
-    val sizes = Curation.qualityBucketsByThreshold(scored, col("s"), thr)
-      .groupBy("bucket").count().collect()
-      .map(r => r.getInt(0) -> r.getLong(1)).toMap
-    assert(sizes.keySet == Set(1, 2, 3, 4), sizes)
-    // KLL sketch at accuracy 10^4 over 100 distinct values: near-exact
-    assert(sizes.values.forall(n => n >= 20 && n <= 30), sizes)
-  }
-
-  test("scoreThresholds collapses tied quantiles and is empty on " +
-    "empty input") {
-    val s = spark
-    import s.implicits._
-    // 90% of rows share one score: quantile ties collapse to fewer,
-    // strictly-descending thresholds byThreshold still accepts
-    val skewed = ((1L to 90L).map(i => (i, 5.0)) ++
-      (91L to 100L).map(i => (i, i.toDouble))).toDF("doc_id", "s")
-    val thr = Curation.scoreThresholds(skewed, col("s"), 10)
-    assert(thr.nonEmpty &&
-      thr.sliding(2).forall(w => w.size < 2 || w(0) > w(1)), thr)
-    Curation.qualityBucketsByThreshold(skewed, col("s"), thr).count()
-    val empty = Curation.scoreThresholds(
-      skewed.filter(col("s") < 0), col("s"), 4)
-    assert(empty.isEmpty, empty)
   }
 
   test("dropLowQualityDomains judges the NULL-domain group too") {

@@ -41,7 +41,7 @@ class MultimodalSpec extends AnyFunSuite {
   }
 
   test("REAL image codec: PNG round-trip recovers the exact pixel " +
-    "formula; resize produces a decodable image of the target size") {
+    "formula") {
     val id = 7L
     val (w, h, r, g, b) = Multimodal.decodeImage(Multimodal.pngBytes(id))
     assert(w == 8 && h == 8)
@@ -52,9 +52,6 @@ class MultimodalSpec extends AnyFunSuite {
     assert(math.abs(r - mean((x, y) => id * 17 + x * 3 + y * 5)) < 1e-12)
     assert(math.abs(g - mean((x, y) => id * 29 + x * 7 + y * 11)) < 1e-12)
     assert(math.abs(b - mean((x, y) => id * 43 + x * 13 + y * 17)) < 1e-12)
-    val resized = Multimodal.resizeImage(Multimodal.pngBytes(id), 4, 4)
-    val (w2, h2, _, _, _) = Multimodal.decodeImage(resized)
-    assert(w2 == 4 && h2 == 4)
   }
 
   test("REAL wav codec: RIFF parse recovers rate, count and mean " +
@@ -115,32 +112,5 @@ class MultimodalSpec extends AnyFunSuite {
       try Multimodal.decodeWavPcm16(b)
       catch { case _: IllegalArgumentException | _: IndexOutOfBoundsException => }
     }
-  }
-
-  test("extractFeaturesReal: real codecs per modality, error capture " +
-    "on undecodable bytes") {
-    import spark.implicits._
-    val assets = Seq(
-      Multimodal.MediaAsset(1L, Multimodal.pngBytes(1),
-        Multimodal.MediaMeta("image", "image/png", 8, 8, -1, -1L)),
-      Multimodal.MediaAsset(2L, Multimodal.wavBytes(2),
-        Multimodal.MediaMeta("audio", "audio/wav", -1, -1, 16000, 100L)),
-      Multimodal.MediaAsset(3L, Array[Byte](1, 2, 3),
-        Multimodal.MediaMeta("image", "image/png", 8, 8, -1, -1L)))
-    val out = Multimodal.extractFeaturesReal(spark.createDataset(assets), 4)
-      .collect().sortBy(_.asset_id)
-    assert(out(0).error == null && out(0).features.length == 5 &&
-      out(0).features(0) == 8f)
-    assert(out(1).error == null && out(1).features.length == 3 &&
-      out(1).features(0) == 16000f)
-    assert(out(2).error != null, "garbage image bytes must yield an error row")
-  }
-
-  test("frame sampling windows") {
-    val bytes = Array.tabulate[Byte](100)(_.toByte)
-    val frames = Multimodal.frameSample(bytes, 10, 3)
-    assert(frames.size == 4) // windows 0,3,6,9
-    assert(frames.head.toSeq == (0 until 10).map(_.toByte))
-    assert(Multimodal.frameSample(null, 10, 3).isEmpty)
   }
 }

@@ -197,4 +197,67 @@ class ExtractPipelineSpec extends AnyFunSuite {
     ExtractPipeline.runCheckpointed(spark, turns, dir, nBuckets = 64)
     assert(state() == before)
   }
+
+  test("manifest re-commit: a POSIX rename replaces the bucket file, a " +
+    "contract rename refuses it, and neither loses the record") {
+    // commits bucket 5 twice (rows 10, then 20) through a local FS built
+    // from `impl`; returns the dir and whether the second commit threw
+    def twice(impl: Class[_]): (String, Boolean) = {
+      val conf = new org.apache.hadoop.conf.Configuration(
+        spark.sparkContext.hadoopConfiguration)
+      conf.set("fs.file.impl", impl.getName)
+      conf.setBoolean("fs.file.impl.disable.cache", true)
+      val dir = Files.createTempDirectory("graft-recommit").toString
+      val cat = new HadoopManifestCatalog(dir, conf)
+      cat.commit(ManifestEntry(5, 10L, 100L, "fp", "v"))
+      val refused =
+        try { cat.commit(ManifestEntry(5, 20L, 200L, "fp", "v")); false }
+        catch { case _: java.io.IOException => true }
+      (dir, refused)
+    }
+    def files(dir: String): Seq[String] = {
+      val ls = Files.list(java.nio.file.Paths.get(dir, "_manifest"))
+      try ls.iterator().asScala.map(_.getFileName.toString)
+        .filterNot(_.startsWith(".")).toSeq.sorted // checksum sidecars
+      finally ls.close()
+    }
+    def rows(dir: String): Seq[Long] =
+      ExtractPipeline.readManifest(spark, dir).collect()
+        .map(_.getAs[Long]("rows")).toSeq
+
+    // Hadoop's LocalFileSystem renames with File.renameTo (POSIX rename)
+    val (replaced, refused) =
+      twice(classOf[org.apache.hadoop.fs.LocalFileSystem])
+    assert(!refused)
+    assert(files(replaced) == Seq("bucket-00005.json"))
+    assert(rows(replaced) == Seq(20L))
+    // HDFS, and the Hive local FS on Spark's classpath, follow the
+    // FileSystem contract: no rename onto an existing file
+    val (kept, refusedContract) =
+      twice(classOf[ExtractPipelineSpec.ContractLocalFileSystem])
+    assert(refusedContract)
+    assert(files(kept).filter(_.endsWith(".json")) == Seq("bucket-00005.json"))
+    assert(rows(kept) == Seq(10L))
+  }
+
+  test("manifest JSON escapes quotes and backslashes in the fingerprint") {
+    val fp = "a\"b\\c"
+    val dir = Files.createTempDirectory("graft-escape").toString
+    ExtractPipeline.runCheckpointed(spark, Transcripts.generate(spark, 5),
+      dir, nBuckets = 4, inputFingerprint = fp)
+    val got = ExtractPipeline.readManifest(spark, dir).collect()
+      .map(_.getAs[String]("inputFingerprint")).toSeq
+    assert(got == Seq.fill(4)(fp), got)
+  }
+}
+
+object ExtractPipelineSpec {
+  /** A local FS whose rename refuses an existing destination, as the
+    * Hadoop FileSystem contract (and HDFS) has it.
+    */
+  final class ContractLocalFileSystem extends org.apache.hadoop.fs.LocalFileSystem {
+    override def rename(src: org.apache.hadoop.fs.Path,
+                        dst: org.apache.hadoop.fs.Path): Boolean =
+      !isFile(dst) && super.rename(src, dst)
+  }
 }
