@@ -1,13 +1,13 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
 import graft.operators.{Components, Dedup, EventOps, Similarity, TextStats}
 import graft.pipeline.{ExtractPipeline, Transcripts}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** Harness contract: `entry`, `queries` and `oracleSql` (SURVEY.md §7.0).
   *
   * Every SQL-expressible operator registers a DuckDB oracle with column
   * names aliased identically on both sides; non-SQL-expressible operators
@@ -38,6 +38,54 @@ object SparkEntry {
     val p = df.sparkSession.sparkContext.defaultParallelism
     val scanned = df.queryExecution.executedPlan.execute().getNumPartitions
     if (scanned < p) df.repartition(p) else df
+  }
+
+  /** The batch decode queries' binaryFile reader: every file under
+    * `dirs` whose name matches `glob`, as `(path, fileId, bytes)`.
+    * Corpus files are named `doc_<n>.<ext>`, and `fileId` is `n`.
+    */
+  private def binaryFiles(s: SparkSession, glob: String,
+      dirs: String*): Dataset[(String, Int, Array[Byte])] = {
+    import s.implicits._
+    s.read.format("binaryFile").option("pathGlobFilter", glob)
+      .load(dirs: _*)
+      .select("path", "content").as[(String, Array[Byte])]
+      .map { case (path, bytes) =>
+        val base = path.substring(path.lastIndexOf('/') + 1)
+        (path, base.stripPrefix("doc_").takeWhile(_.isDigit).toInt, bytes)
+      }
+  }
+
+  /** One row per decoded paragraph (q58, q62):
+    * `(file_id, doc_idx, para_idx, header, body)`.
+    */
+  private def paragraphRows(files: Dataset[(String, Int, Array[Byte])],
+      decode: Array[Byte] => graft.core.MultiDoc): DataFrame = {
+    val spark = files.sparkSession
+    import spark.implicits._
+    files.flatMap { case (_, fileId, bytes) =>
+      decode(bytes).documents.iterator.zipWithIndex.flatMap { case (d, di) =>
+        d.paragraphs.iterator.zipWithIndex.map { case (p, pi) =>
+          (fileId, di, pi, p.header.text, p.body.text)
+        }
+      }
+    }.toDF("file_id", "doc_idx", "para_idx", "header", "body")
+  }
+
+  /** One row per beneficiary of a decoded workbook, dated by its first
+    * sheet's name (q60, q63): `(file_id, sheet_date, name, name_person)`.
+    */
+  private def beneficiaryRows(files: Dataset[(String, Int, Array[Byte])],
+      decode: Array[Byte] => Seq[graft.core.SheetTable.Sheet]): DataFrame = {
+    val spark = files.sparkSession
+    import spark.implicits._
+    files.flatMap { case (_, fileId, bytes) =>
+      val sheets = decode(bytes)
+      val date = graft.core.SheetTable
+        .parseDateFromSheetName(sheets.head.name).map(_.toString).orNull
+      graft.core.SheetTable.parseBeneficiaries(sheets)
+        .map(b => (fileId, date, b.name, b.namePerson))
+    }.toDF("file_id", "sheet_date", "name", "name_person")
   }
 
   /** One-scan self-duplication of a table head — the planted-dup fixture
@@ -846,24 +894,9 @@ object SparkEntry {
       // is a binaryFile scan over an object store. The oracle states
       // the expected (header, body) segmentation in closed form over
       // range(nDocx) — content is a pure function of the doc index.
-      val corpus = graft.sources.OoxmlCorpus.ensureDocx()
-      val s2 = s
-      import s2.implicits._
-      s.read.format("binaryFile")
-        .option("pathGlobFilter", "doc_*.docx").load(corpus)
-        .select("path", "content")
-        .as[(String, Array[Byte])]
-        .flatMap { case (path, bytes) =>
-          val base = path.substring(path.lastIndexOf('/') + 1)
-          val fileId = base.stripPrefix("doc_").stripSuffix(".docx").toInt
-          val md = graft.sources.OoxmlDecode.decodeDocx(bytes)
-          md.documents.iterator.zipWithIndex.flatMap { case (d, di) =>
-            d.paragraphs.iterator.zipWithIndex.map { case (p, pi) =>
-              (fileId, di, pi, p.header.text, p.body.text)
-            }
-          }
-        }
-        .toDF("file_id", "doc_idx", "para_idx", "header", "body")
+      paragraphRows(binaryFiles(s, "doc_*.docx",
+        graft.sources.OoxmlCorpus.ensureDocx()),
+        graft.sources.OoxmlDecode.decodeDocx)
     }),
 
     "q61_ivf_layout" -> ((s, dir) => {
@@ -903,13 +936,8 @@ object SparkEntry {
         graft.sources.OoxmlCorpus.ensurePdf())
       val s2 = s
       import s2.implicits._
-      s.read.format("binaryFile")
-        .option("pathGlobFilter", "doc_*").load(dirs: _*)
-        .select("path", "content")
-        .as[(String, Array[Byte])]
-        .flatMap { case (path, bytes) =>
-          val base = path.substring(path.lastIndexOf('/') + 1)
-          val fileId = base.stripPrefix("doc_").takeWhile(_.isDigit).toInt
+      binaryFiles(s, "doc_*", dirs: _*)
+        .flatMap { case (_, fileId, bytes) =>
           import graft.sources.BinaryDispatch._
           decode(bytes) match {
             case DecodedDoc(f, md) =>
@@ -959,11 +987,8 @@ object SparkEntry {
         graft.sources.OoxmlCorpus.ensureDocx())
       val s2 = s
       import s2.implicits._
-      s.read.format("binaryFile")
-        .option("pathGlobFilter", "doc_*").load(dirs: _*)
-        .select("path", "content")
-        .as[(String, Array[Byte])]
-        .map { case (path, bytes) =>
+      binaryFiles(s, "doc_*", dirs: _*)
+        .map { case (path, fileId, bytes) =>
           val segs = path.split('/')
           val kind = segs(segs.length - 2) match {
             case d if d.startsWith("graft_badpdf_corpus") => "bad_pdf"
@@ -972,8 +997,6 @@ object SparkEntry {
             case d if d.startsWith("graft_garbage_corpus") => "garbage"
             case _ => "clean"
           }
-          val fileId =
-            segs.last.stripPrefix("doc_").takeWhile(_.isDigit).toInt
           val r = graft.sources.BinaryDispatch.safeDecode(bytes)
           (kind, fileId, r.format, r.status)
         }
@@ -1275,16 +1298,10 @@ object SparkEntry {
       // kernel P2-P8 (grid selection, cell assignment, skip-row title
       // quirk, cross-page row stitch) -> stakeholders. Even-id files
       // are FlateDecode-compressed, odd uncompressed — same answer.
-      val corpus = graft.sources.OoxmlCorpus.ensurePdf()
       val s2 = s
       import s2.implicits._
-      s.read.format("binaryFile")
-        .option("pathGlobFilter", "doc_*.pdf").load(corpus)
-        .select("path", "content")
-        .as[(String, Array[Byte])]
-        .flatMap { case (path, bytes) =>
-          val base = path.substring(path.lastIndexOf('/') + 1)
-          val fileId = base.stripPrefix("doc_").stripSuffix(".pdf").toInt
+      binaryFiles(s, "doc_*.pdf", graft.sources.OoxmlCorpus.ensurePdf())
+        .flatMap { case (_, fileId, bytes) =>
           val (pages, w) = graft.sources.PdfDecode.pagesWithWidth(bytes)
           graft.core.PdfTable.parseStakeholderPages(pages, w)
             .zipWithIndex.map { case (st, si) =>
@@ -1303,24 +1320,9 @@ object SparkEntry {
       // Workbook stream -> SST/BoundSheet8 -> per-sheet LabelSst cells
       // -> the same beneficiary projection as q60; oracle = q60's
       // closed form (same content, different binary container)
-      val corpus = graft.sources.OoxmlCorpus.ensureXls()
-      val s2 = s
-      import s2.implicits._
-      s.read.format("binaryFile")
-        .option("pathGlobFilter", "doc_*.xls").load(corpus)
-        .select("path", "content")
-        .as[(String, Array[Byte])]
-        .flatMap { case (path, bytes) =>
-          val base = path.substring(path.lastIndexOf('/') + 1)
-          val fileId = base.stripPrefix("doc_").stripSuffix(".xls").toInt
-          val sheets = graft.sources.XlsDecode.decodeXls(bytes)
-          val date = graft.core.SheetTable
-            .parseDateFromSheetName(sheets.head.name)
-            .map(_.toString).orNull
-          graft.core.SheetTable.parseBeneficiaries(sheets)
-            .map(b => (fileId, date, b.name, b.namePerson))
-        }
-        .toDF("file_id", "sheet_date", "name", "name_person")
+      beneficiaryRows(binaryFiles(s, "doc_*.xls",
+        graft.sources.OoxmlCorpus.ensureXls()),
+        graft.sources.XlsDecode.decodeXls)
     }),
 
     "q62_doc_decode" -> ((s, dir) => {
@@ -1330,24 +1332,9 @@ object SparkEntry {
       // states the expected (header, body) rows in closed form over
       // range(nDoc62) — including the DocumentParser.java:179
       // unconditional leading-space quirk.
-      val corpus = graft.sources.OoxmlCorpus.ensureDoc62()
-      val s2 = s
-      import s2.implicits._
-      s.read.format("binaryFile")
-        .option("pathGlobFilter", "doc_*.doc").load(corpus)
-        .select("path", "content")
-        .as[(String, Array[Byte])]
-        .flatMap { case (path, bytes) =>
-          val base = path.substring(path.lastIndexOf('/') + 1)
-          val fileId = base.stripPrefix("doc_").stripSuffix(".doc").toInt
-          val md = graft.sources.DocDecode.decodeDoc(bytes)
-          md.documents.iterator.zipWithIndex.flatMap { case (d, di) =>
-            d.paragraphs.iterator.zipWithIndex.map { case (p, pi) =>
-              (fileId, di, pi, p.header.text, p.body.text)
-            }
-          }
-        }
-        .toDF("file_id", "doc_idx", "para_idx", "header", "body")
+      paragraphRows(binaryFiles(s, "doc_*.doc",
+        graft.sources.OoxmlCorpus.ensureDoc62()),
+        graft.sources.DocDecode.decodeDoc)
     }),
 
     "q59_remove_repeated_windows" -> ((s, dir) => {
@@ -1369,24 +1356,9 @@ object SparkEntry {
     "q60_xlsx_decode" -> ((s, dir) => {
       // REAL XLSX decode (S5 + E1/E2/X2): workbook -> sheets -> cell
       // model -> beneficiary projection + sheet-name date, per file
-      val corpus = graft.sources.OoxmlCorpus.ensureXlsx()
-      val s2 = s
-      import s2.implicits._
-      s.read.format("binaryFile")
-        .option("pathGlobFilter", "doc_*.xlsx").load(corpus)
-        .select("path", "content")
-        .as[(String, Array[Byte])]
-        .flatMap { case (path, bytes) =>
-          val base = path.substring(path.lastIndexOf('/') + 1)
-          val fileId = base.stripPrefix("doc_").stripSuffix(".xlsx").toInt
-          val sheets = graft.sources.OoxmlDecode.decodeXlsx(bytes)
-          val date = graft.core.SheetTable
-            .parseDateFromSheetName(sheets.head.name)
-            .map(_.toString).orNull
-          graft.core.SheetTable.parseBeneficiaries(sheets)
-            .map(b => (fileId, date, b.name, b.namePerson))
-        }
-        .toDF("file_id", "sheet_date", "name", "name_person")
+      beneficiaryRows(binaryFiles(s, "doc_*.xlsx",
+        graft.sources.OoxmlCorpus.ensureXlsx()),
+        graft.sources.OoxmlDecode.decodeXlsx)
     })
   )
 
@@ -1482,7 +1454,11 @@ object SparkEntry {
        )
     """
 
-  /** Driver contract surface: oracles at the correctness-gate scale. */
+  /** Oracles at the correctness-gate scale (sf0.01). Part of the
+    * harness contract with [[entry]] and [[queries]] (SURVEY.md §7.0):
+    * an external correctness harness calls it, so no file in this
+    * repository names it. Keep it.
+    */
   def oracleSql: Map[String, String] = oracleSqlFor("/root/testdata/sf0.01")
 
   /** Oracles with the extraction derivation pinned to the conv count

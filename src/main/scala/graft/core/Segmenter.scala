@@ -555,32 +555,11 @@ object Segmenter {
     while (it.hasNext && (allBold || allCapitalized)) { // :839-858
       val run = it.next()
       if (!SegBuilder.blankTrim(run.text)) {
-        if (!runIsUpperWithRun(run.text)) allCapitalized = false
+        if (!isAllUpperWithRun(run.text)) allCapitalized = false
         if (!run.bold.getOrElse(run.styleBold)) allBold = false
       }
     }
     allBold || allCapitalized
-  }
-
-  /** Per-run caps test of the DOC dialect (:849-852): the run equals its
-    * own toUpperCase AND (after uppercasing — which is a no-op given the
-    * first condition) contains a >=5 sequence of [A-ZА-Я]. Allocation-free
-    * scan with the same string-level fallback as [[isAllUpperWithRun]].
-    */
-  private def runIsUpperWithRun(text: String): Boolean = {
-    var run = 0
-    var hasRun = false
-    var i = 0
-    val n = text.length
-    while (i < n) {
-      val c = text.charAt(i)
-      if (Character.toUpperCase(c) != c) return false
-      val inAlpha = (c >= 'A' && c <= 'Z') || (c >= 'А' && c <= 'Я')
-      if (inAlpha) { run += 1; if (run >= 5) hasRun = true }
-      else run = 0
-      i += 1
-    }
-    hasRun && text == text.toUpperCase
   }
 
   /** alphabetPattern [A-Za-zА-Яа-я0-9]{5,} as an allocation-free scan
@@ -615,8 +594,11 @@ object Segmenter {
     false
   }
 
-  /** text == text.toUpperCase && it contains a >=5 run of [A-ZА-Я]
-    * (:929-934). Char-level scan first: any char whose char-uppercase
+  /** text == text.toUpperCase && it contains a >=5 run of [A-ZА-Я]:
+    * the whole-paragraph caps test (:929-934) and the DOC dialect's
+    * per-run one (:849-852), whose second condition (a >=5 [A-ZА-Я] run
+    * after uppercasing) is the same test given the first. Char-level
+    * scan first: any char whose char-uppercase
     * differs proves the string-level mapping changes too (safe false);
     * only the rare all-identity case pays the full toUpperCase compare
     * (string-level mappings like ß->SS that char-level misses).

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -215,13 +215,11 @@ object Components {
     // (count, xor-of-hashes): order-independent, overflow-free (ANSI-safe),
     // and collision-proof against duplicate cancellation because the edge
     // set is distinct
-    def checksum(e: DataFrame): (Long, Long) = {
-      val r = e.agg(count(lit(1)),
-        coalesce(expr("bit_xor(xxhash64(hi, lo))"), lit(0L))).first()
-      (r.getLong(0), r.getLong(1))
-    }
+    val sigAggs = Seq(count(lit(1)),
+      coalesce(expr("bit_xor(xxhash64(hi, lo))"), lit(0L)))
+    def sigOf(r: Row): (Long, Long) = (r.getLong(0), r.getLong(1))
 
-    var sig = checksum(edges)
+    var sig = sigOf(edges.agg(sigAggs.head, sigAggs.tail: _*).first())
     val inputEdges = sig._1
     val roundEdgeCounts = scala.collection.mutable.ArrayBuffer[Long]()
     var converged = false
@@ -256,17 +254,11 @@ object Components {
       // `ls` three times and `ls` references `edges` twice, so without a
       // cut the logical plan grows ~5x per round and Catalyst analysis
       // goes exponential (minutes by round ~10 even on a 64-node chain).
-      // Eager localCheckpoint materializes the round AND restarts the
-      // plan from a LogicalRDD; on a real cluster configure a reliable
-      // checkpoint dir (setCheckpointDir) and swap in .checkpoint() if
-      // executor loss during the (short) loop must be survivable.
-      // lazy: the checksum action right below computes every partition,
-      // so it materializes the round's checkpoint as a side effect (the
-      // eager form paid a dedicated job per round)
-      val next = moved.unionByName(own).distinct()
-        .localCheckpoint(false)
-
-      val nextSig = checksum(next)
+      // The checkpoint restarts the plan from a LogicalRDD, and the
+      // round's checksum materializes it ([[Dedup.checkpointBy]]).
+      val (next, nextRow) =
+        Dedup.checkpointBy(moved.unionByName(own).distinct(), sigAggs: _*)
+      val nextSig = sigOf(nextRow)
       ls.unpersist()
       // the (count, xor) signature is a filter, not the proof: on a
       // signature match, confirm the fixpoint EXACTLY with a set-diff of

@@ -90,10 +90,10 @@ object Curation {
     // themselves — a silent cast-to-null would no-op the whole operator
     val base = corpus.select(col(idCol).as("_id"),
       split(TextStats.normalize(col(textCol)), " ").as("_tk"))
-    // covered positions carry the checkpoint (NOT the corpus-sized
-    // window frame): its footprint is proportional to the CONTAMINATED
-    // windows only, and the lineage cut is what makes the toks join
-    // below an honest two-sided join rather than a self-join
+    // covered positions carry the checkpoint (eager, [[Dedup.checkpointBy]];
+    // NOT the corpus-sized window frame): its footprint is proportional
+    // to the CONTAMINATED windows only, and the lineage cut is what makes
+    // the toks join below an honest two-sided join rather than a self-join
     val covered = Dedup.windowKeyRows(base, n)
       .join(broadcast(bKeys), "_wk")
       .select(col("_id"),
@@ -246,19 +246,7 @@ object Curation {
     */
   def unigramLogProb(df: DataFrame, textCol: String, idCol: String,
                      vocab: Int = 4096): DataFrame = {
-    val toks = df.select(col(idCol),
-        explode(split(TextStats.normalize(col(textCol)), " ")).as("_tok"))
-      .filter(col("_tok") =!= "")
-    // LAZY localCheckpoint, not persist: persist would pin the token
-    // counts in CacheManager for the session lifetime (ContextCleaner
-    // does not collect cached plans — ADVICE r03); checkpoint blocks are
-    // dropped once the result frame is unreachable. Lazy because the
-    // total-count action right below computes every partition and
-    // materializes the checkpoint as a side effect (one job instead of
-    // the eager form's materialize-then-count two).
-    val counts = toks.groupBy("_tok").agg(count(lit(1)).as("_c"))
-      .localCheckpoint(false)
-    val total = counts.agg(coalesce(sum("_c"), lit(0L))).first().getLong(0)
+    val (toks, counts, total) = tokenCounts(df, textCol, idCol)
     val result =
       if (total == 0L) {
         // preserve the id column's TYPE in the empty result (a literal
@@ -277,6 +265,21 @@ object Curation {
             count(lit(1)).as("n_tokens"))
       }
     result
+  }
+
+  /** The front of both LM scorers: the non-empty normalized tokens
+    * `(idCol, _tok)`, their corpus counts `(_tok, _c)` checkpointed by
+    * the total ([[Dedup.checkpointBy]]), and that total.
+    */
+  private def tokenCounts(df: DataFrame, textCol: String,
+      idCol: String): (DataFrame, DataFrame, Long) = {
+    val toks = df.select(col(idCol),
+        explode(split(TextStats.normalize(col(textCol)), " ")).as("_tok"))
+      .filter(col("_tok") =!= "")
+    val (counts, total) = Dedup.checkpointBy(
+      toks.groupBy("_tok").agg(count(lit(1)).as("_c")),
+      coalesce(sum("_c"), lit(0L)))
+    (toks, counts, total.getLong(0))
   }
 
   /** Interpolated bigram language-model scoring (Jelinek-Mercer): per
@@ -301,12 +304,7 @@ object Curation {
     */
   def bigramLogProb(df: DataFrame, textCol: String, idCol: String,
                     vocab: Int = 4096, lambda: Double = 0.7): DataFrame = {
-    val toks = df.select(col(idCol),
-        explode(split(TextStats.normalize(col(textCol)), " ")).as("_tok"))
-      .filter(col("_tok") =!= "")
-    val counts = toks.groupBy("_tok").agg(count(lit(1)).as("_c"))
-      .localCheckpoint(false) // same lifecycle+laziness as unigramLogProb
-    val total = counts.agg(coalesce(sum("_c"), lit(0L))).first().getLong(0)
+    val (_, counts, total) = tokenCounts(df, textCol, idCol)
     if (total == 0L)
       return df.select(col(idCol), lit(0.0).as("bigram_logprob"),
         lit(0L).as("n_pairs")).limit(0)
@@ -375,21 +373,19 @@ object Curation {
     // token array in three separate scans (corpus stats, hit extraction,
     // and the per-doc length rejoin — each re-running normalize+split
     // over the full text). This projects the narrow per-doc summary
-    // (id, len, query-term hits) in a single scan and materializes it
-    // (eager localCheckpoint, the [[Dedup.collapse]] lifecycle
-    // discipline) for its three consumers. The checkpoint rows are
-    // ~tens of bytes per doc (hits are query terms only), so at corpus
-    // scale this trades a cheap cache for two full text scans.
-    val base = df.select(col(idCol),
+    // (id, len, query-term hits) in a single scan and materializes it by
+    // its corpus stats (N, avgLen) ([[Dedup.checkpointBy]]) for its
+    // three consumers. The checkpoint rows are ~tens of bytes per doc
+    // (hits are query terms only), so at corpus scale this trades a
+    // cheap cache for two full text scans.
+    val (base, stats) = Dedup.checkpointBy(df.select(col(idCol),
         Dedup.bindOnce(split(TextStats.normalize(col(textCol)), " "), tk =>
           struct(
             size(filter(tk, t => t =!= "")).as("len"),
             filter(tk, t => array_contains(termArr, t)).as("hits")))
           .as("_s"))
-      .select(col(idCol), col("_s.len").as("_len"), col("_s.hits").as("_h"))
-      .localCheckpoint(false) // lazy: the stats action materializes it
-    val stats = base.agg(count(lit(1)).as("n"),
-      avg("_len").as("avgLen")).first()
+      .select(col(idCol), col("_s.len").as("_len"), col("_s.hits").as("_h")),
+      count(lit(1)), avg("_len"))
     val n = stats.getLong(0)
     val avgLen = stats.getDouble(1)
     val hits = base.select(col(idCol), explode(col("_h")).as("_term"))

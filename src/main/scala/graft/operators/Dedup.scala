@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Observation}
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row}
 import org.apache.spark.sql.functions._
 
 /** Deduplication operators for web-scale corpora.
@@ -81,27 +81,42 @@ object Dedup {
 
   // ---------- shared scale plumbing ----------
 
-  /** Result of [[collapse]]: `reps` is backed by the MATERIALIZED
-    * collapse aggregate (every downstream scan — banding, verify rejoin,
-    * eligibility — reads the checkpointed blocks instead of recomputing
-    * the collapse shuffle). Materialization is a lazy
-    * `localCheckpoint` (the count action right after computes every
-    * partition, so it doubles as the materializer), NOT
-    * `Dataset.persist`: persist registers the
-    * plan in CacheManager, which holds it for the SESSION lifetime
-    * unless explicitly unpersisted (ContextCleaner never collects it),
-    * so every operator invocation would leak a cached copy of the
-    * per-rep payload (ADVICE r03). localCheckpoint blocks belong to a
-    * plain RDD that ContextCleaner unpersists once the returned frames
-    * are unreachable — cache lifetime == result lifetime. The trade is
-    * lineage truncation: an executor loss during the consuming action
-    * fails the job instead of recomputing (same contract as
-    * [[Components.connectedComponents]]; swap to reliable checkpoint for
-    * fault-tolerant production runs). `dupMapping` is None when the
-    * corpus has no exact duplicates (n rows == n distinct keys), letting
-    * callers skip the mapping join and both expansion branches entirely;
-    * when present it holds ONLY members of multi-member groups (rep's own
-    * row included) — singleton docs never enter an expansion shuffle.
+  /** Materialize `df` once and compute the global aggregate `aggs` over
+    * it, in the aggregate's own pass: a lazy `localCheckpoint` whose
+    * first consumer is that aggregate, a full pass that fills every
+    * checkpoint partition, so no separate materialization job runs.
+    * Every later scan of the returned frame reads the checkpoint blocks.
+    *
+    * The one materialization rule of the operators:
+    *   - this lazy form when a scalar over the frame is needed anyway;
+    *   - eager `localCheckpoint(true)` when the frame's first consumers
+    *     run as concurrent stages (two AQE stages of one plan would each
+    *     compute a lazy checkpoint's partitions), or when a lineage cut
+    *     is needed before any action;
+    *   - `persist` only with its `unpersist` in the same `try/finally`;
+    *   - never a session-lifetime cache: a persisted plan stays in
+    *     CacheManager until unpersisted (ContextCleaner never collects
+    *     it, ADVICE r03), so each call would leak a cached copy.
+    * Checkpoint blocks belong to a plain RDD that ContextCleaner drops
+    * once the returned frames are unreachable, so cache lifetime equals
+    * result lifetime. The trade is lineage truncation: an executor lost
+    * during a consuming action fails the job instead of recomputing;
+    * swap in a reliable `checkpoint` for fault-tolerant production runs.
+    */
+  private[operators] def checkpointBy(df: DataFrame,
+      aggs: Column*): (DataFrame, Row) = {
+    val cp = df.localCheckpoint(false)
+    (cp, cp.agg(aggs.head, aggs.tail: _*).first())
+  }
+
+  /** Result of [[collapse]]: `reps` reads the collapse aggregate
+    * materialized by [[checkpointBy]], so banding, the verify rejoin and
+    * eligibility never recompute the collapse shuffle. `dupMapping` is
+    * None when the corpus has no exact duplicates (n rows == n distinct
+    * keys), letting callers skip the mapping join and both expansion
+    * branches entirely; when present it holds ONLY members of
+    * multi-member groups (rep's own row included) — singleton docs never
+    * enter an expansion shuffle.
     */
   private[operators] final case class Collapsed(
       dupMapping: Option[DataFrame], reps: DataFrame,
@@ -114,22 +129,17 @@ object Dedup {
     * 10^9-member cluster is 10^9 narrow rows, never one driver-sized
     * row; the dup-mapping join is AQE-skew-splittable because the
     * aggregated side has one row per key, and it only carries keys whose
-    * group size exceeds 1. The aggregate is persisted and eagerly counted
-    * (a cheap cached job) — the count decides `dupMapping = None` and
-    * feeds auto-sized LSH keyspaces. Input columns: (id, gk, payload).
+    * group size exceeds 1. The aggregate is checkpointed by its
+    * `(nReps, nRows)` counts ([[checkpointBy]]): the counts decide
+    * `dupMapping = None` and feed auto-sized LSH keyspaces. Input
+    * columns: (id, gk, payload).
     */
   private[operators] def collapse(keyed: DataFrame): Collapsed = {
-    // LAZY localCheckpoint (see Collapsed scaladoc for why not persist):
-    // the counts action right below computes every partition anyway, so
-    // it materializes the checkpoint as a side effect — the eager form
-    // ran a dedicated materialization job first, one extra full pass of
-    // stage latency per operator invocation (guide §1.2: fewer passes)
-    val agg = keyed.groupBy("gk").agg(min("id").as("rep"),
+    val (agg, counts) = checkpointBy(
+      keyed.groupBy("gk").agg(min("id").as("rep"),
         min_by(col("payload"), col("id")).as("payload"),
-        count(lit(1)).as("_n"))
-      .localCheckpoint(false)
-    val counts = agg.select(count(lit(1)).as("k"),
-      coalesce(sum("_n"), lit(0L)).as("n")).first()
+        count(lit(1)).as("_n")),
+      count(lit(1)), coalesce(sum("_n"), lit(0L)))
     val (nReps, nRows) = (counts.getLong(0), counts.getLong(1))
     val reps = agg.select(col("rep").as("id"), col("payload"))
     val dupMapping =
@@ -327,8 +337,7 @@ object Dedup {
     * a semi-join whose aggregated side has one row per key, so a
     * boilerplate key shared by millions of docs is AQE-skew-splittable
     * (the [[collapse]] argument). The (doc, key) frame is materialized
-    * once (eager localCheckpoint — not persist, which would outlive the
-    * result; see [[Collapsed]]) across its three scans.
+    * once across its three scans (eager, [[checkpointBy]]).
     */
   def crossDocRepeatedWindows(df: DataFrame, textCol: String,
                               idCol: String, n: Int = 8): DataFrame = {
@@ -337,8 +346,7 @@ object Dedup {
       .select(col("id"), md5(col("_w")).as("_wk"))
     val perDocKey = wins.groupBy("id", "_wk")
       .agg(count(lit(1)).as("_m"))
-      .localCheckpoint(true) // eager: its two consumers are CONCURRENT
-      // AQE stages — lazy would lose the compute-once guarantee
+      .localCheckpoint(true)
     val crossKeys = perDocKey.groupBy("_wk")
       .agg(count(lit(1)).as("_nd"))
       .filter(col("_nd") >= 2)
@@ -377,8 +385,8 @@ object Dedup {
     * the caller's policy choice).
     *
     * Scale shape: windows travel as (id, pos, md5-key) rows; the window
-    * frame is materialized once (eager localCheckpoint, [[Collapsed]]
-    * discipline) and scanned twice (key aggregation + the drop join).
+    * frame is materialized once (eager, [[checkpointBy]]) and scanned
+    * twice (key aggregation + the drop join).
     * The keeper/frequency aggregate has one row per key, so a
     * boilerplate key in millions of docs joins skew-splittably. Token
     * removal expands DROPPED windows only (the [[Winnow]] dup-only

@@ -399,8 +399,8 @@ object Similarity {
                maxCluster: Int = 1 << 20): DataFrame = {
     // the assignment (nlist interpreted pivot cosines per row) is
     // materialized ONCE: both sides of the cluster-local self-join read
-    // the checkpoint instead of re-running listAssign per side (eager
-    // localCheckpoint, the [[Dedup.collapse]] lifecycle discipline).
+    // the checkpoint instead of re-running listAssign per side (eager,
+    // [[Dedup.checkpointBy]]).
     // Each row also carries its own l2 norm: the O(c²) pair stage then
     // pays ONE dot product per pair instead of three — sqrt(dot(v,v))
     // per row is the same IEEE value whether computed per row or per
@@ -411,7 +411,7 @@ object Similarity {
       .withColumn("_vd", col(vecCol).cast("array<double>"))
       .withColumn("_nrm", l2norm(col("_vd")))
       .drop(vecCol) // _vd supersedes it; halves the checkpoint bytes
-      .localCheckpoint(true) // eager: window + join stages run concurrently
+      .localCheckpoint(true)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("list_id").orderBy(col(idCol))
     val keepers = assigned

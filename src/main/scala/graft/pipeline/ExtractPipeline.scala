@@ -60,15 +60,9 @@ object ExtractPipeline {
     * column-pruned parquet scan. An UNMATERIALIZED input (an in-flight
     * mapPartitions Dataset — detected by the object boundary in its
     * plan) is materialized once instead of running extraction in both
-    * branches (VERDICT r02 #5). Materialization is an eager
-    * localCheckpoint, NOT persist: a persisted plan lives in
-    * CacheManager for the whole session unless explicitly unpersisted
-    * (ContextCleaner does not collect it — ADVICE r03), while
-    * checkpoint blocks are dropped once the returned frame is
-    * unreachable. Lineage is truncated at the checkpoint (executor loss
-    * during the consuming action fails the job; use the written-table
-    * path for fault-tolerant production runs — it takes this branch
-    * only for in-flight inputs anyway).
+    * branches (VERDICT r02 #5), by an eager localCheckpoint (the rule
+    * is `graft.operators.Dedup.checkpointBy`'s; the written-table path
+    * never takes this branch).
     */
   def withConvOrder(extracted: Dataset[ExtractedTurn]): DataFrame = {
     val w = Window.partitionBy("conv_id").orderBy("turn_idx")
