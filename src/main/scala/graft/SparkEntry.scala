@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
 import graft.operators.{Components, Dedup, EventOps, Similarity, TextStats}
-import graft.pipeline.{ExtractPipeline, Transcripts}
+import graft.pipeline.{ExtractPipeline, Transcripts, TurnExtractor}
 
 /** Harness contract: `entry`, `queries` and `oracleSql` (SURVEY.md §7.0).
   *
@@ -154,6 +154,13 @@ object SparkEntry {
     path
   }
 
+  /** The transcript table's conv count at `sfDir` (2000 at sf0.1, 300
+    * below): the q26/q27 queries, their oracles ([[oracleSqlFor]]) and
+    * the fixture warm-up all read the table of this size.
+    */
+  private def oracleConvs(sfDir: String): Long =
+    if (sfDir.endsWith("0.1")) 2000L else 300L
+
   /** Flagship: per-turn extraction over the deterministic transcript
     * table, with stable conversation ordering. Driver smoke-checks rows>0.
     */
@@ -191,7 +198,7 @@ object SparkEntry {
         sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
       try {
         if (java.nio.file.Files.exists(java.nio.file.Paths.get(sfDir))) {
-          oracleTurnsPath(s, if (sfDir.endsWith("0.1")) 2000L else 300L)
+          oracleTurnsPath(s, oracleConvs(sfDir))
           ensureIvfLayout(s, sfDir)
         }
       } catch {
@@ -531,17 +538,15 @@ object SparkEntry {
       // Reads the PERSISTED deterministic transcript table so the DuckDB
       // oracle re-derives the kernel's output from the same raw bytes
       // (VERDICT r02 #4).
-      val nConvs = if (dir.endsWith("0.1")) 2000L else 300L
-      val turns = s.read.parquet(oracleTurnsPath(s, nConvs))
+      val turns = s.read.parquet(oracleTurnsPath(s, oracleConvs(dir)))
       ExtractPipeline.extractNarrow(turns)
         .select(col("conv_id"), col("turn_idx"), col("nParas"),
           col("nBytes"), col("error"), col("extractedText"))
     }),
 
     "q27_extract_conv_order" -> ((s, dir) => {
-      val nConvs = if (dir.endsWith("0.1")) 2000L else 300L
       val extracted = ExtractPipeline.extractNarrow(
-        s.read.parquet(oracleTurnsPath(s, nConvs)))
+        s.read.parquet(oracleTurnsPath(s, oracleConvs(dir))))
       ExtractPipeline.withConvOrder(extracted)
         .select(col("conv_id"), col("turn_idx"), col("turn_rank"),
           col("conv_char_offset"))
@@ -703,8 +708,7 @@ object SparkEntry {
       import s2.implicits._
       t(s, dir, "documents").select("doc_id", "text").as[(Long, String)]
         .flatMap { case (id, text) =>
-          val md = graft.core.Segmenter.segment(
-            graft.core.Tokenizer.tokenize(text))
+          val md = TurnExtractor.segment(text)
           md.spans.map(sp => (id, sp.kind, sp.offset, sp.length))
         }
         .toDF("doc_id", "kind", "offset", "length")
@@ -877,8 +881,7 @@ object SparkEntry {
       import s2.implicits._
       t(s, dir, "documents").select("doc_id", "text").as[(Long, String)]
         .map { case (id, text) =>
-          val md = graft.core.Segmenter.segment(
-            graft.core.Tokenizer.tokenize(text))
+          val md = TurnExtractor.segment(text)
           (id, md.documents.map(_.paragraphs.size).sum,
             graft.core.Segmenter.extractedText(md).length)
         }
@@ -1466,8 +1469,7 @@ object SparkEntry {
     * oracles follow the verification scale — VERDICT r03 #5).
     */
   def oracleSqlFor(sfDir: String): Map[String, String] = {
-    val nConvs = if (sfDir.endsWith("0.1")) 2000L else 300L
-    val extractDer = extractDerivation(nConvs)
+    val extractDer = extractDerivation(oracleConvs(sfDir))
     val m = Map(
     "q26_extract_transcripts" ->
       (extractDer +

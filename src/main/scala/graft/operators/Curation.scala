@@ -16,7 +16,7 @@ object Curation {
   /** Non-distinct word n-grams of normalized text (codegen'd; the
     * multiset counterpart of [[Dedup.wordShingles]]).
     */
-  def wordNgrams(c: Column, n: Int): Column =
+  private def wordNgrams(c: Column, n: Int): Column =
     Dedup.bindOnce(split(TextStats.normalize(c), " "), tokens =>
       filter(
         transform(tokens, (_, i) =>
@@ -50,15 +50,12 @@ object Curation {
   def decontaminate(corpus: DataFrame, benchmark: DataFrame,
                     textCol: String, idCol: String,
                     shingleK: Int = 8): DataFrame = {
-    val bKeys = benchmark
-      .select(explode(Dedup.wordShingles(col(textCol), shingleK)).as("_sh"))
-      .select(md5(col("_sh")).as("_shk"))
-      .distinct()
+    val bKeys = benchmarkKeys(benchmark, textCol, shingleK)
     val contaminated = corpus
       .select(col(idCol),
         explode(Dedup.wordShingles(col(textCol), shingleK)).as("_sh"))
-      .select(col(idCol), md5(col("_sh")).as("_shk"))
-      .join(broadcast(bKeys), "_shk")
+      .select(col(idCol), md5(col("_sh")).as("_wk"))
+      .join(broadcast(bKeys), "_wk")
       .select(idCol)
       .distinct()
     corpus.join(contaminated, Seq(idCol), "left_anti")
@@ -71,48 +68,29 @@ object Curation {
     * the rest of the text — the form that preserves training data when
     * contamination is a quoted snippet inside an otherwise-clean doc.
     *
-    * Scale shape: benchmark keys are distinct md5 shingles, broadcast
-    * (the [[decontaminate]] discipline — the corpus side is scanned,
-    * never shuffled, for the match); only CONTAMINATED docs explode
-    * their token streams for the rebuild (left-semi against the
-    * matched-id set), so the expensive half is proportional to the
-    * contaminated slice, not the corpus. Clean docs pass through as
-    * their normalized text. Output: (idCol, text_clean); a fully
-    * covered doc yields "".
+    * Scale shape: the cut windows are those whose key is in the
+    * broadcast benchmark key set (the [[decontaminate]] discipline —
+    * the corpus side is scanned, never shuffled, for the match); the
+    * covering, the contaminated-docs-only rebuild and the clean-doc
+    * pass-through are [[Dedup.removeWindows]]'s, which also states the
+    * output.
     */
   def removeContaminatedSpans(corpus: DataFrame, benchmark: DataFrame,
                               textCol: String, idCol: String,
                               n: Int = 8): DataFrame = {
-    val bKeys = benchmark
-      .select(explode(Dedup.wordShingles(col(textCol), n)).as("_sh"))
-      .select(md5(col("_sh")).as("_wk")).distinct()
-    // no id cast: string/UUID ids (the web-corpus norm) must join as
-    // themselves — a silent cast-to-null would no-op the whole operator
-    val base = corpus.select(col(idCol).as("_id"),
-      split(TextStats.normalize(col(textCol)), " ").as("_tk"))
-    // covered positions carry the checkpoint (eager, [[Dedup.checkpointBy]];
-    // NOT the corpus-sized window frame): its footprint is proportional
-    // to the CONTAMINATED windows only, and the lineage cut is what makes
-    // the toks join below an honest two-sided join rather than a self-join
-    val covered = Dedup.windowKeyRows(base, n)
-      .join(broadcast(bKeys), "_wk")
-      .select(col("_id"),
-        explode(sequence(col("_pos"), col("_pos") + (n - 1))).as("_cpos"))
-      .distinct()
-      .localCheckpoint(true)
-    val contaminatedIds = covered.select("_id").distinct()
-    val toks = base.join(contaminatedIds, Seq("_id"), "left_semi")
-      .select(col("_id"), posexplode(col("_tk")).as(Seq("_pos", "_tok")))
-    val rebuilt = contaminatedIds.join(
-        Dedup.rebuildWithoutCovered(toks, covered), Seq("_id"), "left")
-      .select(col("_id"),
-        coalesce(col("text_clean"), lit("")).as("_clean"))
-    corpus.select(col(idCol), col(idCol).as("_id"),
-        TextStats.normalize(col(textCol)).as("_norm"))
-      .join(rebuilt, Seq("_id"), "left")
-      .select(col(idCol),
-        coalesce(col("_clean"), col("_norm")).as("text_clean"))
+    val bKeys = benchmarkKeys(benchmark, textCol, n)
+    Dedup.removeWindows(corpus, textCol, idCol, n)(
+      _.join(broadcast(bKeys), "_wk"))
   }
+
+  /** The distinct md5 keys `_wk` of the benchmark's word k-shingles:
+    * the broadcast side of [[decontaminate]] and
+    * [[removeContaminatedSpans]].
+    */
+  private def benchmarkKeys(benchmark: DataFrame, textCol: String,
+      k: Int): DataFrame =
+    benchmark.select(explode(Dedup.wordShingles(col(textCol), k)).as("_sh"))
+      .select(md5(col("_sh")).as("_wk")).distinct()
 
   /** Deterministic content-stable sampling: keep rows whose
     * md5(key || salt) hex prefix sorts below `hexThreshold` — the keep
@@ -387,6 +365,10 @@ object Curation {
       .select(col(idCol), col("_s.len").as("_len"), col("_s.hits").as("_h")),
       count(lit(1)), avg("_len"))
     val n = stats.getLong(0)
+    // an empty corpus has no avgLen (avg over no rows is NULL); its
+    // empty result keeps the id column's type, as in [[unigramLogProb]]
+    if (n == 0L)
+      return df.select(col(idCol), lit(0.0).as("bm25")).limit(0)
     val avgLen = stats.getDouble(1)
     val hits = base.select(col(idCol), explode(col("_h")).as("_term"))
       .groupBy(idCol, "_term").agg(count(lit(1)).as("_tf"))

@@ -42,6 +42,11 @@ import org.apache.spark.sql.functions._
   * cluster size (a verified 10^4-member cluster IS ~5*10^7 pairs). When a
   * summarized report is enough, use the `*Groups` surfaces, which label
   * members without expanding their pairs.
+  *
+  * Substring-level dedup (the window family) has one skeleton too:
+  * [[windowKeyRows]] is the one window-key recipe of its three
+  * operators, and [[removeWindows]] the one span-removal path of the
+  * two that cut windows; each cutter supplies only which windows go.
   */
 object Dedup {
 
@@ -320,6 +325,80 @@ object Dedup {
     repPairs.unionByName(dupPairs)
   }
 
+  /** Positional n-token window keys over a (_id, _tk) frame: one row
+    * per window start, `(_id, _pos, _wk = md5(space-joined window))`.
+    * Window start positions exist only when the doc has >= n tokens (an
+    * unguarded sequence(0, size-n) would COUNT DOWN for short docs —
+    * Spark's sequence defaults to step -1 when start > stop). The one
+    * window-key recipe of the three window operators
+    * ([[crossDocRepeatedWindows]] and the two [[removeWindows]]
+    * callers), so their keys cannot drift apart.
+    */
+  private def windowKeyRows(base: DataFrame, n: Int): DataFrame =
+    base.select(col("_id"),
+        posexplode(when(size(col("_tk")) >= n,
+          transform(sequence(lit(0), size(col("_tk")) - n),
+            j => md5(array_join(slice(col("_tk"), j + 1, lit(n)), " "))))
+          .otherwise(array())))
+      .toDF("_id", "_pos", "_wk")
+
+  /** The span-removal skeleton of the two window-cutting operators,
+    * [[removeRepeatedWindows]] and [[Curation.removeContaminatedSpans]]
+    * (the removal mechanics of Lee et al. ACL'22). `cut` receives the
+    * `(_id, _pos, _wk)` window frame ([[windowKeyRows]]) of the
+    * NORMALIZED token streams ([[TextStats.normalize]]) and returns the
+    * windows to remove, with at least `_id` and `_pos`; every token
+    * covered by a cut window is removed. Output: (idCol, text_clean),
+    * the surviving tokens joined by single spaces, which the q59/q76
+    * oracles replay in DuckDB byte for byte. A fully covered document
+    * yields "" (row kept; dropping it is the caller's policy choice);
+    * a document with no cut window, or fewer than `n` tokens, passes
+    * through as its normalized text.
+    *
+    * Ids keep their own type: string/UUID ids (the web-corpus norm)
+    * must join as themselves, where a cast to long would null every id
+    * and silently no-op the operator.
+    *
+    * Scale shape: only CUT windows expand into covered positions, so
+    * the covered frame is proportional to the removed spans, not the
+    * corpus. It carries the checkpoint (eager, [[checkpointBy]]), whose
+    * lineage cut makes the rebuild's anti-join an honest two-sided join
+    * rather than a self-join. Only the documents owning a covered
+    * position pay the token explode and the full-width rebuild (the
+    * token stream is left-semi'd to the affected ids); at corpus scale
+    * the overwhelmingly common document passes through untouched. The
+    * per-doc collect in the rebuild is bounded by the doc's own token
+    * count, the same bound as holding the row's text.
+    */
+  private[operators] def removeWindows(df: DataFrame, textCol: String,
+      idCol: String, n: Int)(cut: DataFrame => DataFrame): DataFrame = {
+    val base = df.select(col(idCol).as("_id"),
+      split(TextStats.normalize(col(textCol)), " ").as("_tk"))
+    val covered = cut(windowKeyRows(base, n))
+      .select(col("_id"),
+        explode(sequence(col("_pos"), col("_pos") + (n - 1))).as("_cpos"))
+      .distinct()
+      .localCheckpoint(true)
+    val affectedIds = covered.select("_id").distinct()
+    val toks = base.join(affectedIds, Seq("_id"), "left_semi")
+      .select(col("_id"), posexplode(col("_tk")).as(Seq("_pos", "_tok")))
+    val rebuilt = toks.join(covered,
+        toks("_id") === covered("_id") && col("_pos") === col("_cpos"),
+        "left_anti")
+      .groupBy("_id")
+      .agg(array_join(transform(
+        array_sort(collect_list(struct(col("_pos").as("p"),
+          col("_tok").as("t")))), s => s.getField("t")), " ")
+        .as("_clean"))
+    val cleaned = affectedIds.join(rebuilt, Seq("_id"), "left")
+      .select(col("_id"), coalesce(col("_clean"), lit("")).as("_clean"))
+    df.select(col(idCol), col(idCol).as("_id"),
+        TextStats.normalize(col(textCol)).as("_norm"))
+      .join(cleaned, Seq("_id"), "left")
+      .select(col(idCol),
+        coalesce(col("_clean"), col("_norm")).as("text_clean"))
+  }
+
   // ---------- cross-document repeated windows ----------
 
   /** Cross-document repeated-window report — the detection half of
@@ -341,9 +420,9 @@ object Dedup {
     */
   def crossDocRepeatedWindows(df: DataFrame, textCol: String,
                               idCol: String, n: Int = 8): DataFrame = {
-    val wins = df.select(col(idCol).cast("long").as("id"),
-        explode(Curation.wordNgrams(col(textCol), n)).as("_w"))
-      .select(col("id"), md5(col("_w")).as("_wk"))
+    val wins = windowKeyRows(df.select(col(idCol).cast("long").as("_id"),
+        split(TextStats.normalize(col(textCol)), " ").as("_tk")), n)
+      .select(col("_id").as("id"), col("_wk"))
     val perDocKey = wins.groupBy("id", "_wk")
       .agg(count(lit(1)).as("_m"))
       .localCheckpoint(true)
@@ -372,105 +451,29 @@ object Dedup {
     * is the detection half). A positional word `n`-gram window whose
     * content occurs in at least one OTHER document is cut from every
     * document except the keeper (the minimum id among the documents
-    * containing that window — "keep first occurrence corpus-wide");
-    * every token covered by at least one cut window is removed.
-    *
-    * Operates on NORMALIZED token streams (lowercase, collapsed
-    * whitespace — [[TextStats.normalize]]): output `text_clean` is the
-    * surviving tokens joined by single spaces, which makes the operator
-    * exactly mirrorable in SQL (the q59 oracle replays it in DuckDB and
-    * byte-checks the text). Documents with fewer than `n` tokens have
-    * no windows and pass through normalized-unchanged; a fully-covered
-    * document yields an empty `text_clean` (row kept — dropping it is
-    * the caller's policy choice).
+    * containing that window — "keep first occurrence corpus-wide", in
+    * the id's own ordering: numeric for longs, lexicographic for
+    * strings); every token covered by at least one cut window is
+    * removed ([[removeWindows]], which also states the output).
     *
     * Scale shape: windows travel as (id, pos, md5-key) rows; the window
     * frame is materialized once (eager, [[checkpointBy]]) and scanned
-    * twice (key aggregation + the drop join).
-    * The keeper/frequency aggregate has one row per key, so a
-    * boilerplate key in millions of docs joins skew-splittably. Token
-    * removal expands DROPPED windows only (the [[Winnow]] dup-only
-    * rule) into covered positions, and ONLY the documents owning a
-    * covered position pay the token explode + full-width rebuild (the
-    * toks stream is left-semi'd to affected ids, exactly the
-    * [[Curation.removeContaminatedSpans]] discipline) — every other
-    * document passes through as its normalized text, so the expensive
-    * half is proportional to the duplicated spans, not the corpus. The
-    * per-doc collect in the rebuild is bounded by the doc's own token
-    * count, the same bound as holding the row's text.
-    * Output: (idCol, text_clean).
+    * twice (key aggregation + the drop join). The keeper/frequency
+    * aggregate has one row per key, so a boilerplate key in millions of
+    * docs joins skew-splittably. Only DROPPED windows are cut (the
+    * [[Winnow]] dup-only rule), so the rebuild is proportional to the
+    * duplicated spans, not the corpus.
     */
-  /** Positional n-token window keys over a (_id, _tk) frame: one row
-    * per window start, `(_id, _pos, _wk = md5(space-joined window))`.
-    * Window start positions exist only when the doc has >= n tokens (an
-    * unguarded sequence(0, size-n) would COUNT DOWN for short docs —
-    * Spark's sequence defaults to step -1 when start > stop). Shared by
-    * [[removeRepeatedWindows]] and
-    * [[Curation.removeContaminatedSpans]] so the window-key recipe
-    * cannot drift between the two removal operators.
-    */
-  private[operators] def windowKeyRows(base: DataFrame, n: Int): DataFrame =
-    base.select(col("_id"),
-        posexplode(when(size(col("_tk")) >= n,
-          transform(sequence(lit(0), size(col("_tk")) - n),
-            j => md5(array_join(slice(col("_tk"), j + 1, lit(n)), " "))))
-          .otherwise(array())))
-      .toDF("_id", "_pos", "_wk")
-
-  /** Token rows minus covered positions, reassembled to one
-    * `(_id, text_clean)` row per doc in token order — the shared
-    * rebuild half of the two removal operators. `toks` is
-    * (_id, _pos, _tok); `covered` is (_id, _cpos) and must not share
-    * live lineage with `toks` (callers checkpoint one side).
-    */
-  private[operators] def rebuildWithoutCovered(toks: DataFrame,
-                                               covered: DataFrame): DataFrame =
-    toks.join(covered,
-        toks("_id") === covered("_id") && col("_pos") === col("_cpos"),
-        "left_anti")
-      .groupBy("_id")
-      .agg(array_join(transform(
-        array_sort(collect_list(struct(col("_pos").as("p"),
-          col("_tok").as("t")))), s => s.getField("t")), " ")
-        .as("text_clean"))
-
   def removeRepeatedWindows(df: DataFrame, textCol: String, idCol: String,
-                            n: Int = 8): DataFrame = {
-    // ids keep their own type (string/UUID ids would cast to null and
-    // blank every document); the keeper rule is min in the id's own
-    // ordering — numeric for longs, lexicographic for strings
-    val base = df.select(col(idCol).as("_id"),
-      split(TextStats.normalize(col(textCol)), " ").as("_tk"))
-    val winRows = windowKeyRows(base, n).localCheckpoint(true)
-    val keys = winRows.select("_id", "_wk").distinct()
-      .groupBy("_wk").agg(min("_id").as("_keeper"), count(lit(1)).as("_nd"))
-      .filter(col("_nd") >= 2)
-      .select("_wk", "_keeper")
-    // covered positions are proportional to DUPLICATED spans, not the
-    // corpus — they carry the checkpoint, and only docs that appear
-    // here pay the token-explode + full-width rebuild below (the
-    // [[Curation.removeContaminatedSpans]] discipline: at corpus scale
-    // the overwhelmingly common doc has no repeated window and passes
-    // through as its normalized text)
-    val covered = winRows.join(keys, "_wk")
-      .filter(col("_id") =!= col("_keeper"))
-      .select(col("_id"), explode(sequence(col("_pos"),
-        col("_pos") + (n - 1))).as("_cpos"))
-      .distinct()
-      .localCheckpoint(true)
-    val affectedIds = covered.select("_id").distinct()
-    val toks = base.join(affectedIds, Seq("_id"), "left_semi")
-      .select(col("_id"), posexplode(col("_tk")).as(Seq("_pos", "_tok")))
-    val rebuilt = affectedIds.join(
-        rebuildWithoutCovered(toks, covered), Seq("_id"), "left")
-      .select(col("_id"),
-        coalesce(col("text_clean"), lit("")).as("_clean"))
-    df.select(col(idCol), col(idCol).as("_id"),
-        TextStats.normalize(col(textCol)).as("_norm"))
-      .join(rebuilt, Seq("_id"), "left")
-      .select(col(idCol),
-        coalesce(col("_clean"), col("_norm")).as("text_clean"))
-  }
+                            n: Int = 8): DataFrame =
+    removeWindows(df, textCol, idCol, n) { wins =>
+      val winRows = wins.localCheckpoint(true)
+      val keys = winRows.select("_id", "_wk").distinct()
+        .groupBy("_wk").agg(min("_id").as("_keeper"), count(lit(1)).as("_nd"))
+        .filter(col("_nd") >= 2)
+        .select("_wk", "_keeper")
+      winRows.join(keys, "_wk").filter(col("_id") =!= col("_keeper"))
+    }
 
   // ---------- shingles / jaccard ----------
 

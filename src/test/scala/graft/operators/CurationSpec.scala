@@ -259,6 +259,17 @@ class CurationSpec extends AnyFunSuite {
     assert(!out.contains(3L) && !out.contains(4L))
   }
 
+  test("bm25 on an empty corpus is empty and keeps the id column's type") {
+    // avg over zero rows is NULL: the corpus stats have no avgLen
+    val s = spark
+    import s.implicits._
+    val df = Seq.empty[(Long, String)].toDF("doc_id", "text")
+    val out = Curation.bm25(df, "text", "doc_id", Seq("window"))
+    assert(out.collect().isEmpty)
+    assert(out.schema("doc_id").dataType == df.schema("doc_id").dataType)
+    assert(out.columns.toSeq == Seq("doc_id", "bm25"))
+  }
+
   test("mixtureSample keeps each stratum near its fraction, drops unlisted") {
     val s = spark
     import s.implicits._

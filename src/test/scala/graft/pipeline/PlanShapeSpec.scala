@@ -155,17 +155,25 @@ class PlanShapeSpec extends AnyFunSuite {
         s"six seven eight tail $i"
       else s"clean document number $i with its own unique words here"))
       .toDF("doc_id", "text")
-    val out = graft.operators.Dedup
-      .removeRepeatedWindows(d, "text", "doc_id", n = 8)
-    val plan = out.queryExecution.executedPlan.toString
-    // the rebuild gate: token explode only for ids with covered positions
-    assert(plan.contains("LeftSemi"), plan)
-    // the window-key frame and covered positions are checkpointed away
-    // (Scan ExistingRDD), so the ONLY Generate left in the consuming
-    // plan is the toks posexplode — and it is under the semi join. A
-    // second Generate would mean a full-corpus explode crept back in.
-    assert("Generate".r.findAllIn(plan).size == 1, plan)
-    assert(plan.contains("Scan ExistingRDD"), plan)
+    val benchmark = Seq("shared dup window one two three four five six " +
+      "seven eight").toDF("text")
+    // both callers of the one span-removal skeleton (Dedup.removeWindows)
+    val outs = Seq(
+      "removeRepeatedWindows" -> graft.operators.Dedup
+        .removeRepeatedWindows(d, "text", "doc_id", n = 8),
+      "removeContaminatedSpans" -> graft.operators.Curation
+        .removeContaminatedSpans(d, benchmark, "text", "doc_id", n = 8))
+    for ((op, out) <- outs) {
+      val plan = s"$op: " + out.queryExecution.executedPlan.toString
+      // the rebuild gate: token explode only for ids with covered positions
+      assert(plan.contains("LeftSemi"), plan)
+      // the covered positions are checkpointed away (Scan ExistingRDD),
+      // so the ONLY Generate left in the consuming plan is the toks
+      // posexplode — and it is under the semi join. A second Generate
+      // would mean a full-corpus explode crept back in.
+      assert("Generate".r.findAllIn(plan).size == 1, plan)
+      assert(plan.contains("Scan ExistingRDD"), plan)
+    }
   }
 
   test("q72 curation pipeline: verdict + sample join sides broadcast, " +
