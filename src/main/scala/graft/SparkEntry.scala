@@ -209,12 +209,23 @@ object SparkEntry {
   }
 
   /** The q61 IVF layout table (embeddings written partitioned by
-    * list_id), built once per sf dir; content is a pure function of the
-    * embeddings table + the deterministic pivot sample.
+    * list_id), built once per embeddings table; content is a pure
+    * function of the embeddings table + the deterministic pivot sample.
+    * The cache dir is keyed by the md5 of the table's canonical path and
+    * its file listing (name, size, mtime), so another table, or this
+    * one rewritten in place, gets a layout of its own.
     */
   private def ensureIvfLayout(s: SparkSession, dir: String): String = {
-    val suffix = dir.replaceAll("[^0-9.]", "")
-    val layout = s"/tmp/graft_ivf_layout_$suffix"
+    import scala.jdk.CollectionConverters._
+    val table = new java.io.File(dir, "embeddings.parquet").getCanonicalFile
+    val walk = java.nio.file.Files.walk(table.toPath)
+    val listing =
+      try walk.iterator().asScala.map(_.toFile).filter(_.isFile)
+        .map(f => s"$f\t${f.length}\t${f.lastModified}").toSeq.sorted
+      finally walk.close()
+    val key = org.apache.commons.codec.digest.DigestUtils
+      .md5Hex((table.getPath +: listing).mkString("\n"))
+    val layout = s"/tmp/graft_ivf_layout_$key"
     if (!java.nio.file.Files.exists(
         java.nio.file.Paths.get(layout, "_SUCCESS"))) {
       val e = t(s, dir, "embeddings")
@@ -448,9 +459,7 @@ object SparkEntry {
     // ---------- similarity search ----------
     "q18_knn_brute" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
-      val qvec = emb.filter(col("vec_id") === 0)
-        .select(col("embedding").cast("array<double>"))
-        .first().getSeq[Double](0)
+      val qvec = Similarity.queryVector(emb, "embedding", "vec_id", 0)
       Similarity.bruteForceTopK(
         emb.filter(col("vec_id") =!= 0), "embedding", "vec_id", qvec, 10)
     }),
@@ -498,8 +507,7 @@ object SparkEntry {
       // oracle of bucketing + probing + ranking.
       val emb = t(s, dir, "embeddings")
       val q0 = emb.filter(col("vec_id") === 0).select(col("embedding"))
-      val qvec = q0.select(col("embedding").cast("array<double>"))
-        .first().getSeq[Double](0)
+      val qvec = Similarity.queryVector(emb, "embedding", "vec_id", 0)
       val copies = s.range(1, 16).crossJoin(q0)
         .select((col("id") + 2000000).as("vec_id"), col("embedding"))
       val corpus = emb.filter(col("vec_id") =!= 0)
@@ -848,9 +856,7 @@ object SparkEntry {
       // embedding), exact cosine re-rank inside — the partition-layout
       // scale path next to q23's LSH probe (see Similarity.ivfIndex)
       val e = t(s, dir, "embeddings")
-      val qv = e.filter(col("vec_id") === 0)
-        .select(col("embedding").cast("array<double>"))
-        .first().getSeq[Double](0)
+      val qv = Similarity.queryVector(e, "embedding", "vec_id", 0)
       val pivots = Similarity.samplePivots(e, "embedding", "vec_id", 16)
       Similarity.ivfTopK(e, "embedding", "vec_id", qv, 10, pivots, nprobe = 4)
     }),
@@ -910,9 +916,7 @@ object SparkEntry {
       // regression turns this CORRECTNESS row red. Same result set as
       // q46 (layout changes the physical path, not the answer).
       val e = t(s, dir, "embeddings")
-      val qv = e.filter(col("vec_id") === 0)
-        .select(col("embedding").cast("array<double>"))
-        .first().getSeq[Double](0)
+      val qv = Similarity.queryVector(e, "embedding", "vec_id", 0)
       val pivots = Similarity.samplePivots(e, "embedding", "vec_id", 16)
       val layout = ensureIvfLayout(s, dir)
       val result = Similarity.ivfTopKIndexed(s.read.parquet(layout),
@@ -1030,9 +1034,7 @@ object SparkEntry {
       val dq = e.select(col("vec_id"),
         Similarity.dequantize(Similarity.quantizeInt8(col("embedding")))
           .as("dq"))
-      val qv = e.filter(col("vec_id") === 0)
-        .select(col("embedding").cast("array<double>"))
-        .first().getSeq[Double](0)
+      val qv = Similarity.queryVector(e, "embedding", "vec_id", 0)
       val pivots = Similarity.samplePivots(dq, "dq", "vec_id", 16)
       Similarity.ivfTopK(dq, "dq", "vec_id", qv, 10, pivots, nprobe = 4)
     }),

@@ -5,14 +5,25 @@ import org.apache.spark.sql.functions._
 
 /** Similarity search over embedding columns (`Array[Float]`).
   *
-  * Baseline: brute-force cosine top-k — a single codegen'd scan with
-  * `zip_with`/`aggregate` (no UDF, no collect). Scale path: random
-  * hyperplane LSH — candidates meet only in sign-pattern buckets, so the
-  * scan narrows by ~2^bits before the exact re-rank.
+  * One skeleton, each rule written once:
+  *  - one column cosine rule, [[cosineNormed]] (0 when either norm is
+  *    0); [[cosine]] feeds it fresh norms, [[semDedup]] the norms its
+  *    rows carry;
+  *  - one top-k tail, [[bruteForceTopK]] (6dp-rounded cosine, `cos`
+  *    desc, id asc, `limit k`): [[annTopK]] is it over the probed LSH
+  *    sign-pattern buckets, [[ivfTopKIndexed]] over the probed
+  *    `list_id`s;
+  *  - one driver-side dot, `dotS`: the query's LSH bucket, the probe
+  *    lists' norms and the refined pivots' norms;
+  *  - one query-vector fetch, [[queryVector]], which names a missing row
+  *    instead of failing on an empty result.
+  *
+  * Baseline: brute force, a single codegen'd scan (no UDF, no collect).
+  * Scale paths narrow that scan: random-hyperplane LSH by ~2^bits,
+  * IVF to nprobe/nlist of the corpus.
   */
 object Similarity {
 
-  /** Dot product of two array columns (codegen'd). */
   /** Native codegen'd dot product in DOUBLE ([[graft.functions.DotProduct]];
     * the HOF `aggregate(zip_with(...))` form it replaces is interpreted
     * per call — the r05-measured hot scalar of the similarity tier).
@@ -20,7 +31,8 @@ object Similarity {
     * per ELEMENT before multiplying, matching the DuckDB oracles'
     * `CAST(embedding AS DOUBLE[])` exactly (the old float-typed HOF
     * multiplied in float first — a ~1e-8 cross-engine gap the 6dp
-    * rounding had to absorb).
+    * rounding had to absorb). On array<double> inputs the cast is a
+    * no-op that Catalyst removes.
     */
   def dot(a: Column, b: Column): Column =
     graft.functions.DotProduct.dotCol(
@@ -28,15 +40,29 @@ object Similarity {
 
   def l2norm(a: Column): Column = sqrt(dot(a, a))
 
+  /** Cosine similarity from given l2 norms; 0 when either norm is 0. */
+  def cosineNormed(a: Column, na: Column, b: Column, nb: Column): Column =
+    when(na * nb === 0, lit(0.0)).otherwise(dot(a, b) / (na * nb))
+
   /** Cosine similarity; 0 when either vector is all-zero. */
-  def cosine(a: Column, b: Column): Column = {
-    val d = dot(a, b)
-    val n = l2norm(a) * l2norm(b)
-    when(n === 0, lit(0.0)).otherwise(d / n)
+  def cosine(a: Column, b: Column): Column =
+    cosineNormed(a, l2norm(a), b, l2norm(b))
+
+  /** The `array<double>` vector of the row whose `idCol` is `id`, for
+    * use as a query vector. Throws an IllegalArgumentException naming
+    * the id when no such row exists or its vector is NULL.
+    */
+  def queryVector(df: DataFrame, vecCol: String, idCol: String,
+                  id: Long): Seq[Double] = {
+    val rows = df.filter(col(idCol) === id)
+      .select(col(vecCol).cast("array<double>")).take(1)
+    require(rows.nonEmpty && !rows(0).isNullAt(0),
+      s"no query vector: no row with $idCol = $id and a non-NULL $vecCol")
+    rows(0).getSeq[Double](0)
   }
 
-  /** Brute-force cosine top-k against a literal query vector.
-    * Deterministic tie-break on the id column.
+  /** Brute-force cosine top-k against a literal query vector: the one
+    * top-k tail of the family. Deterministic tie-break on the id column.
     */
   def bruteForceTopK(df: DataFrame, vecCol: String, idCol: String,
                      query: Seq[Double], k: Int): DataFrame = {
@@ -90,18 +116,13 @@ object Similarity {
               seed: Long = 7L): DataFrame = {
     val planes = hyperplanes(query.length, bits, seed)
     // query bucket + hamming-1 neighborhood, computed driver-side (tiny)
+    val q = query.toArray
     val qBucket = planes.zipWithIndex.map { case (p, i) =>
-      val d = p.zip(query).map { case (a, b) => a * b }.sum
-      if (d >= 0) 1L << i else 0L
+      if (dotS(p, q) >= 0) 1L << i else 0L
     }.sum
     val probes = qBucket +: (0 until bits).map(i => qBucket ^ (1L << i))
-    val q = array(query.map(lit): _*)
-    df.withColumn("bucket", lshBucket(col(vecCol), planes))
-      .filter(col("bucket").isin(probes: _*))
-      .select(col(idCol),
-        round(cosine(col(vecCol).cast("array<double>"), q), 6).as("cos"))
-      .orderBy(col("cos").desc, col(idCol))
-      .limit(k)
+    bruteForceTopK(df.filter(lshBucket(col(vecCol), planes).isin(probes: _*)),
+      vecCol, idCol, query, k)
   }
 
   // ---------- IVF (inverted-file) ANN ----------
@@ -196,13 +217,13 @@ object Similarity {
     * by cosine distance, ties to the lower index.
     */
   def probeLists(query: Seq[Double], pivots: Array[Array[Double]],
-                 nprobe: Int): Seq[Int] =
+                 nprobe: Int): Seq[Int] = {
+    val q = query.toArray
     pivots.zipWithIndex.map { case (p, i) =>
-      val d = dotS(p, query.toArray)
-      val n = math.sqrt(p.map(x => x * x).sum) *
-        math.sqrt(query.map(x => x * x).sum)
-      (if (n == 0) 1.0 else 1.0 - d / n, i)
+      val n = math.sqrt(dotS(p, p)) * math.sqrt(dotS(q, q))
+      (if (n == 0) 1.0 else 1.0 - dotS(p, q) / n, i)
     }.sortBy { case (d, i) => (d, i) }.take(nprobe).map(_._2).toSeq
+  }
 
   /** IVF top-k over a frame that ALREADY carries `list_id` — the
     * layout-written path ([[ivfIndex]] scaladoc): when the frame is a
@@ -217,15 +238,12 @@ object Similarity {
                      pivots: Array[Array[Double]],
                      nprobe: Int = 4): DataFrame = {
     val probes = probeLists(query, pivots, nprobe)
-    val q = array(query.map(lit): _*)
-    indexed
-      .filter(col("list_id").isin(probes.map(Integer.valueOf): _*))
-      .select(col(idCol),
-        round(cosine(col(vecCol).cast("array<double>"), q), 6).as("cos"))
-      .orderBy(col("cos").desc, col(idCol))
-      .limit(k)
+    bruteForceTopK(
+      indexed.filter(col("list_id").isin(probes.map(Integer.valueOf): _*)),
+      vecCol, idCol, query, k)
   }
 
+  /** Product sum from 0.0, left to right: the one driver-side dot. */
   private def dotS(a: Array[Double], b: Array[Double]): Double = {
     var s = 0.0; var i = 0
     while (i < a.length) { s += a(i) * b(i); i += 1 }
@@ -272,7 +290,7 @@ object Similarity {
       ps = ps.indices.map { i =>
         means.get(i) match {
           case Some(m) =>
-            val n = math.sqrt(m.map(x => x * x).sum)
+            val n = math.sqrt(dotS(m, m))
             if (n > 0) m.map(_ / n) else ps(i)
           case None => ps(i)
         }
@@ -404,9 +422,9 @@ object Similarity {
     // Each row also carries its own l2 norm: the O(c²) pair stage then
     // pays ONE dot product per pair instead of three — sqrt(dot(v,v))
     // per row is the same IEEE value whether computed per row or per
-    // pair, and the pair-level n = norm_a * norm_b multiplication is
-    // unchanged, so cosine values (and the 6dp-rounded compare) are
-    // bit-identical to the [[cosine]] form (pinned by IvfSpec).
+    // pair, and the pair goes through the same [[cosineNormed]] rule, so
+    // cosine values (and the 6dp-rounded compare) are bit-identical to
+    // the [[cosine]] form (pinned by IvfSpec).
     val assigned = ivfIndex(df.select(col(idCol), col(vecCol)), vecCol, pivots)
       .withColumn("_vd", col(vecCol).cast("array<double>"))
       .withColumn("_nrm", l2norm(col("_vd")))
@@ -419,12 +437,8 @@ object Similarity {
       .where(col("_rk") <= maxCluster)
       .select(col("list_id"), col(idCol).as("_keep_id"),
         col("_vd").as("_keep_vd"), col("_nrm").as("_keep_nrm"))
-    val pairCos = {
-      val n = col("_nrm") * col("_keep_nrm")
-      when(n === 0, lit(0.0))
-        .otherwise(graft.functions.DotProduct.dotCol(col("_vd"),
-          col("_keep_vd")) / n)
-    }
+    val pairCos = cosineNormed(col("_vd"), col("_nrm"),
+      col("_keep_vd"), col("_keep_nrm"))
     val drops = assigned.join(keepers, "list_id")
       .where(col(idCol) > col("_keep_id") && round(pairCos, 6) >= tau)
       .select(col(idCol)).distinct()
@@ -442,7 +456,6 @@ object Similarity {
     require(bits <= 32, "bits must fit the per-table key")
     val base = df.select(col(idCol).cast("long").as("id"),
       col(vecCol).cast("array<double>").as("v"))
-    val dim = base.select(size(col("v"))).first().getInt(0)
 
     // exact collapse on identical vectors (128-bit key: no false merges);
     // the vector payload rides the collapse agg — no recovery join
@@ -450,6 +463,11 @@ object Similarity {
       base.select(col("id"), md5(to_json(col("v"))).as("gk"),
         col("v").as("payload")))
     val reps = collapsed.reps
+    // the dimension is read off the checkpointed reps, not the input;
+    // with no reps there is nothing to hash and any dimension serves
+    val dim =
+      if (collapsed.nReps == 0) 1
+      else reps.select(size(col("payload"))).first().getInt(0)
     val effBits =
       if (bits > 0) bits
       else autoBits(collapsed.nReps, math.max(1, maxBucket / 32))

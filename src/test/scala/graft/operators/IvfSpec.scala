@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.SparkTestSession
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -166,29 +167,29 @@ class IvfSpec extends AnyFunSuite {
   test("a probe over an ivfIndex parquet layout partition-prunes") {
     val pivots = Similarity.samplePivots(clustered, "embedding", "vec_id", 8)
     val dir = java.nio.file.Files.createTempDirectory("graft_ivf").toString
-    Similarity.ivfIndex(clustered, "embedding", pivots)
-      .write.mode("overwrite").partitionBy("list_id").parquet(dir)
-    val indexed = spark.read.parquet(dir)
-    val probed = indexed.filter(col("list_id").isin(0, 1))
-    val plan = probed.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters") &&
-      plan.replaceAll("\\s", "").contains("list_id"), plan)
-    // pruned scan reads only the probed lists
-    val lists = probed.select("list_id").distinct()
-      .collect().map(_.getInt(0)).toSet
-    assert(lists.subsetOf(Set(0, 1)))
-    // the layout-written query path (ivfTopKIndexed) returns exactly
-    // what the inline-assignment path computes — layout changes the
-    // physical plan, never the answer (q61's contract)
-    val qv = clustered.filter(col("vec_id") === 0)
-      .select(col("embedding").cast("array<double>"))
-      .first().getSeq[Double](0)
-    val viaLayout = Similarity.ivfTopKIndexed(indexed, "embedding",
-        "vec_id", qv, 5, pivots, nprobe = 3)
-      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    val inline = Similarity.ivfTopK(clustered, "embedding",
-        "vec_id", qv, 5, pivots, nprobe = 3)
-      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    assert(viaLayout == inline)
+    try {
+      Similarity.ivfIndex(clustered, "embedding", pivots)
+        .write.mode("overwrite").partitionBy("list_id").parquet(dir)
+      val indexed = spark.read.parquet(dir)
+      val probed = indexed.filter(col("list_id").isin(0, 1))
+      val plan = probed.queryExecution.executedPlan.toString
+      assert(plan.contains("PartitionFilters") &&
+        plan.replaceAll("\\s", "").contains("list_id"), plan)
+      // pruned scan reads only the probed lists
+      val lists = probed.select("list_id").distinct()
+        .collect().map(_.getInt(0)).toSet
+      assert(lists.subsetOf(Set(0, 1)))
+      // the layout-written query path (ivfTopKIndexed) returns exactly
+      // what the inline-assignment path computes — layout changes the
+      // physical plan, never the answer (q61's contract)
+      val qv = Similarity.queryVector(clustered, "embedding", "vec_id", 0)
+      val viaLayout = Similarity.ivfTopKIndexed(indexed, "embedding",
+          "vec_id", qv, 5, pivots, nprobe = 3)
+        .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+      val inline = Similarity.ivfTopK(clustered, "embedding",
+          "vec_id", qv, 5, pivots, nprobe = 3)
+        .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+      assert(viaLayout == inline)
+    } finally FileUtils.deleteDirectory(new java.io.File(dir))
   }
 }

@@ -1,8 +1,9 @@
 #!/usr/bin/env python3
-"""Local replica of the driver's DuckDB oracle compare: for each query dir
-under OUTDIR, load the Spark parquet result and run the oracle SQL from
-oracle_sql.json against the same sf tables, sort columns by name, sort
-rows, and compare values. Usage: compare_oracle.py SFDIR OUTDIR"""
+"""Local replica of the driver's DuckDB oracle compare: for each query in
+oracle_sql.json or with a dir under OUTDIR, load the Spark parquet result
+and run the oracle SQL against the same sf tables, sort columns by name,
+sort rows, and compare values. A query with an oracle but no output (it
+threw before writing) is a failure. Usage: compare_oracle.py SFDIR OUTDIR"""
 import sys, os, json, glob
 import duckdb
 
@@ -15,13 +16,11 @@ for t in ["region", "nation", "customer", "supplier", "part", "orders",
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
 
 oracle = json.load(open(f"{outdir}/oracle_sql.json"))
-fails = 0
-for name in sorted(os.listdir(outdir)):
+fails = ok = 0
+dirs = {n for n in os.listdir(outdir) if os.path.isdir(os.path.join(outdir, n))}
+for name in sorted(dirs | set(oracle)):
     qdir = os.path.join(outdir, name)
-    if not os.path.isdir(qdir):
-        continue
-    files = glob.glob(f"{qdir}/*.parquet")
-    if not files:
+    if not glob.glob(f"{qdir}/*.parquet"):
         print(f"{name}: NO SPARK OUTPUT")
         fails += 1
         continue
@@ -56,5 +55,6 @@ for name in sorted(os.listdir(outdir)):
         fails += 1
     else:
         print(f"{name}: OK ({len(g)} rows)")
-print("FAILURES:", fails)
+        ok += 1
+print("OK:", ok, "FAILURES:", fails)
 sys.exit(1 if fails else 0)
