@@ -209,29 +209,31 @@ object SparkEntry {
   }
 
   /** The q61 IVF layout table (embeddings written partitioned by
-    * list_id), built once per embeddings table; content is a pure
-    * function of the embeddings table + the deterministic pivot sample.
-    * The cache dir is keyed by the md5 of the table's canonical path and
-    * its file listing (name, size, mtime), so another table, or this
-    * one rewritten in place, gets a layout of its own.
+    * list_id); content is a pure function of the embeddings table + the
+    * deterministic pivot sample. Each table has one layout dir, named by
+    * the md5 of its canonical path. The dir's `_SUCCESS` marker holds the
+    * md5 of the table's file listing (name, size, mtime), so a table
+    * rewritten in place rebuilds its layout over the stale one.
     */
   private def ensureIvfLayout(s: SparkSession, dir: String): String = {
     import scala.jdk.CollectionConverters._
+    import org.apache.commons.codec.digest.DigestUtils.md5Hex
     val table = new java.io.File(dir, "embeddings.parquet").getCanonicalFile
     val walk = java.nio.file.Files.walk(table.toPath)
     val listing =
       try walk.iterator().asScala.map(_.toFile).filter(_.isFile)
         .map(f => s"$f\t${f.length}\t${f.lastModified}").toSeq.sorted
       finally walk.close()
-    val key = org.apache.commons.codec.digest.DigestUtils
-      .md5Hex((table.getPath +: listing).mkString("\n"))
-    val layout = s"/tmp/graft_ivf_layout_$key"
-    if (!java.nio.file.Files.exists(
-        java.nio.file.Paths.get(layout, "_SUCCESS"))) {
+    val digest = md5Hex(listing.mkString("\n"))
+    val layout = s"/tmp/graft_ivf_layout_${md5Hex(table.getPath)}"
+    val marker = java.nio.file.Paths.get(layout, "_SUCCESS")
+    if (!java.nio.file.Files.exists(marker) ||
+        java.nio.file.Files.readString(marker) != digest) {
       val e = t(s, dir, "embeddings")
       val pivots = Similarity.samplePivots(e, "embedding", "vec_id", 16)
       Similarity.ivfIndex(e, "embedding", pivots)
         .write.partitionBy("list_id").mode("overwrite").parquet(layout)
+      java.nio.file.Files.writeString(marker, digest)
     }
     layout
   }
@@ -710,14 +712,15 @@ object SparkEntry {
         "lang", "doc_id", 10)),
 
     // the span surface of the kernel (kind, offset, length rows): prose
-    // docs have the closed form "one header span covering the line"
+    // docs have the closed form "one header span covering the line"; a
+    // NULL text extracts as "" and has no spans, as the oracle drops it
     "q44_extract_spans" -> ((s, dir) => {
       val s2 = s
       import s2.implicits._
       t(s, dir, "documents").select("doc_id", "text").as[(Long, String)]
         .flatMap { case (id, text) =>
-          val md = TurnExtractor.segment(text)
-          md.spans.map(sp => (id, sp.kind, sp.offset, sp.length))
+          TurnExtractor.extract(null, 0, text).spans
+            .map(sp => (id, sp.kind, sp.offset, sp.length))
         }
         .toDF("doc_id", "kind", "offset", "length")
     }),
@@ -882,14 +885,15 @@ object SparkEntry {
     }),
 
     "q28_extract_documents" -> ((s, dir) => {
-      // kernel over the documents table: prose in, paragraphs out
+      // kernel over the documents table: prose in, paragraphs out. A
+      // NULL text extracts as "" and reads (0, 0); the oracle's CASE
+      // answers (1, NULL) there, but no generated table has a NULL text
       val s2 = s
       import s2.implicits._
       t(s, dir, "documents").select("doc_id", "text").as[(Long, String)]
         .map { case (id, text) =>
-          val md = TurnExtractor.segment(text)
-          (id, md.documents.map(_.paragraphs.size).sum,
-            graft.core.Segmenter.extractedText(md).length)
+          val e = TurnExtractor.extract(null, 0, text)
+          (id, e.nParas, e.extractedText.length)
         }
         .toDF("doc_id", "n_paras", "extracted_len")
     }),
@@ -1367,30 +1371,6 @@ object SparkEntry {
     })
   )
 
-  /** Shared q26/q27 derivation: DuckDB independently re-computes the
-    * extraction kernel's output for every generator turn class from the
-    * RAW turn text in the persisted transcript table (the same parquet
-    * the Spark queries read — see oracleTurnsPath):
-    *
-    *   - HTML turns (fixed nav/h1/p/p/footer template): nav+footer are
-    *     boilerplate (WSDM'10 container rule), content = h1 header + two
-    *     p bodies joined with \n;
-    *   - markup turns (^C header, prose, #N(1,0)/#N(1,1) list items,
-    *     **bold**, prose): header + body with list prefixes "1. " and
-    *     "1.1. "; the bold line starts a second paragraph iff it passes
-    *     the >=5-alphanumerics gate (DocumentParser.java:909-912), and a
-    *     second DOCUMENT iff it additionally matches ^приложение
-    *     (isSubDocument, :680-693) — either way the concatenated text is
-    *     identical, only nParas differs;
-    *   - prose turns (single- or multi-line): one paragraph, extracted
-    *     text = input verbatim (first line header, rest body, \n joins).
-    *
-    * The derivation is parameterized by the conv count (VERDICT r03
-    * #5): the driver's correctness gate dumps oracles at its sfDir via
-    * [[oracleSqlFor]], so the flagship oracle covers the sf0.1 table
-    * (2000 convs) when verification runs there, not only the sf0.01
-    * smoke count.
-    */
   /** The q67 interpolated-bigram LM replayed in SQL, shared by the
     * q67 (per-doc score) and q70 (bucketed) oracles — the CTE chain ends
     * at `sc(id, lp)`: one row per adjacent token pair with its
@@ -1429,6 +1409,30 @@ object SparkEntry {
          LEFT JOIN voc v2 ON pr.w2 = v2.w
        )"""
 
+  /** Shared q26/q27 derivation: DuckDB independently re-computes the
+    * extraction kernel's output for every generator turn class from the
+    * RAW turn text in the persisted transcript table (the same parquet
+    * the Spark queries read — see oracleTurnsPath):
+    *
+    *   - HTML turns (fixed nav/h1/p/p/footer template): nav+footer are
+    *     boilerplate (WSDM'10 container rule), content = h1 header + two
+    *     p bodies joined with \n;
+    *   - markup turns (^C header, prose, #N(1,0)/#N(1,1) list items,
+    *     **bold**, prose): header + body with list prefixes "1. " and
+    *     "1.1. "; the bold line starts a second paragraph iff it passes
+    *     the >=5-alphanumerics gate (DocumentParser.java:909-912), and a
+    *     second DOCUMENT iff it additionally matches ^приложение
+    *     (isSubDocument, :680-693) — either way the concatenated text is
+    *     identical, only nParas differs;
+    *   - prose turns (single- or multi-line): one paragraph, extracted
+    *     text = input verbatim (first line header, rest body, \n joins).
+    *
+    * The derivation is parameterized by the conv count (VERDICT r03
+    * #5): the driver's correctness gate dumps oracles at its sfDir via
+    * [[oracleSqlFor]], so the flagship oracle covers the sf0.1 table
+    * (2000 convs) when verification runs there, not only the sf0.01
+    * smoke count.
+    */
   private def extractDerivation(nConvs: Long): String =
     s"""WITH raw AS (
          SELECT conv_id, turn_idx, text

@@ -39,7 +39,8 @@ object ExtractPipeline {
     import turns.sparkSession.implicits._
     turns.select(col("conv_id"), col("turn_idx"), col("text"))
       .as[TurnLite]
-      .mapPartitions(_.map(TurnExtractor.extract(_: TurnLite)))
+      .mapPartitions(_.map(t =>
+        TurnExtractor.extract(t.conv_id, t.turn_idx, t.text)))
   }
 
   /** Bucket column: stable function of conv_id only, so one conversation

@@ -28,7 +28,7 @@ object TurnExtractor {
     * cannot decide; -1 means "fits, byte count not measured" so callers
     * skip the scan on the hot path.
     */
-  @inline private[graft] def byteGate(text: String): Long = {
+  @inline private def byteGate(text: String): Long = {
     val chars = text.length
     if (chars.toLong * 3 <= maxTurnBytes) -1L       // bytes <= 3*chars: fits
     else {
@@ -40,7 +40,7 @@ object TurnExtractor {
   /** UTF-8 byte length without materializing the byte array (the
     * getBytes copy was a top allocation site at 10^6 turns/sec).
     */
-  def utf8Length(s: String): Long = {
+  private def utf8Length(s: String): Long = {
     var n = 0L
     var i = 0
     while (i < s.length) {
@@ -54,12 +54,11 @@ object TurnExtractor {
     n
   }
 
-  /** The kernel's routing, shared by this typed path and the
-    * `ExtractStats` expression: HTML strip or line markup, then the
-    * segmentation state machine. Byte gate and error handling stay with
-    * each caller.
+  /** The kernel's routing: HTML strip or line markup, then the
+    * segmentation state machine. Byte gate and error handling are
+    * `extract`'s.
     */
-  def segment(text: String): MultiDoc =
+  private def segment(text: String): MultiDoc =
     Segmenter.segment(
       if (HtmlExtract.looksLikeHtml(text)) HtmlExtract.tokenize(text)
       else Tokenizer.tokenize(text))
@@ -67,9 +66,10 @@ object TurnExtractor {
   def extract(turn: Turn): ExtractedTurn =
     extract(turn.conv_id, turn.turn_idx, turn.text)
 
-  def extract(turn: TurnLite): ExtractedTurn =
-    extract(turn.conv_id, turn.turn_idx, turn.text)
-
+  /** The one entry point of the kernel for every Spark surface (the
+    * typed pipeline, the `extract_stats` expression and the queries).
+    * NULL text extracts as "".
+    */
   def extract(convId: String, turnIdx: Int, rawText: String): ExtractedTurn = {
     val text = if (rawText == null) "" else rawText
     val tooLargeBytes = byteGate(text)

@@ -1,7 +1,6 @@
 package graft
 
 import java.io.File
-import java.nio.file.Files
 
 import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.DataFrame
@@ -37,10 +36,9 @@ class QueryVectorSpec extends AnyFunSuite {
       .filter(_.getName.startsWith("graft_ivf_layout_"))
 
   test("q61's IVF layout is keyed by the embeddings table, not its dir's digits") {
-    val base = Files.createTempDirectory("graft-ivf-key").toFile
     SparkEntry.queries // fixtures first: their layout is not this test's
     val before = ivfLayouts()
-    try {
+    try SparkTestSession.withTempDir("graft-ivf-key") { base =>
       // the same digits and dots: only the letters `a` and `b` differ
       val a = new File(base, "a/sf0.01").getPath
       val b = new File(base, "b/sf0.01").getPath
@@ -50,28 +48,25 @@ class QueryVectorSpec extends AnyFunSuite {
       writeEmbeddings(b, 200, 8, 2)
       agree(a)
       agree(b)
-      // a table rewritten in place is indexed again
+      // a table rewritten in place is indexed again, over its old layout
       writeEmbeddings(a, 200, 8, 3)
       agree(a)
-    } finally {
-      (ivfLayouts() -- before).foreach(FileUtils.deleteDirectory)
-      FileUtils.deleteDirectory(base)
-    }
+      assert((ivfLayouts() -- before).size == 2)
+    } finally (ivfLayouts() -- before).foreach(FileUtils.deleteDirectory)
   }
 
   test("over an empty embeddings table the query-vector fetch names the row") {
-    val dir = Files.createTempDirectory("graft-emb-empty").toFile
-    try {
-      writeEmbeddings(dir.getPath, 0, 8, 1)
+    SparkTestSession.withTempDir("graft-emb-empty") { dir =>
+      writeEmbeddings(dir, 0, 8, 1)
       for (q <- Seq("q18_knn_brute", "q23_ann_lsh", "q46_ivf_ann",
           "q61_ivf_layout", "q74_ivf_sq8")) {
-        val e = intercept[IllegalArgumentException](run(q, dir.getPath))
+        val e = intercept[IllegalArgumentException](run(q, dir))
         assert(e.getMessage.contains("vec_id = 0"), s"$q: ${e.getMessage}")
       }
       // no vectors, no pairs: q24 returns its schema with 0 rows
-      val q24 = run("q24_cosine_neardups", dir.getPath)
+      val q24 = run("q24_cosine_neardups", dir)
       assert(q24.columns.toSeq == Seq("id_a", "id_b", "cos"))
       assert(q24.collect().isEmpty)
-    } finally FileUtils.deleteDirectory(dir)
+    }
   }
 }

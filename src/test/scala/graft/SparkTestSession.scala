@@ -16,4 +16,13 @@ object SparkTestSession {
     s.sparkContext.setLogLevel("WARN")
     s
   }
+
+  /** Runs `f` on a fresh temp dir named `<prefix><random>` and deletes
+    * the dir afterwards, whether `f` returns or throws.
+    */
+  def withTempDir[A](prefix: String)(f: String => A): A = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix).toFile
+    try f(dir.getPath)
+    finally org.apache.commons.io.FileUtils.deleteDirectory(dir)
+  }
 }

@@ -1,7 +1,6 @@
 package graft.operators
 
 import graft.SparkTestSession
-import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -166,8 +165,7 @@ class IvfSpec extends AnyFunSuite {
 
   test("a probe over an ivfIndex parquet layout partition-prunes") {
     val pivots = Similarity.samplePivots(clustered, "embedding", "vec_id", 8)
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivf").toString
-    try {
+    SparkTestSession.withTempDir("graft_ivf") { dir =>
       Similarity.ivfIndex(clustered, "embedding", pivots)
         .write.mode("overwrite").partitionBy("list_id").parquet(dir)
       val indexed = spark.read.parquet(dir)
@@ -190,6 +188,6 @@ class IvfSpec extends AnyFunSuite {
           "vec_id", qv, 5, pivots, nprobe = 3)
         .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
       assert(viaLayout == inline)
-    } finally FileUtils.deleteDirectory(new java.io.File(dir))
+    }
   }
 }

@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import graft.SparkTestSession
+import graft.SparkTestSession.withTempDir
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
@@ -31,20 +32,22 @@ class ExtractPipelineSpec extends AnyFunSuite {
 
   test("extraction output equals kernel output per turn (any parallelism)") {
     val turns = Transcripts.generate(spark, 40).repartition(8)
-    val dir = Files.createTempDirectory("graft-extract-in").toString + "/t"
-    turns.write.parquet(dir)
     val local = turns.collect().map(TurnExtractor.extract)
     assert(local.nonEmpty)
-    // the same turns in memory and as a parquet read (the column-pruned
-    // scan `runCheckpointed` and q26 take)
-    for ((input, viaSpark) <- Seq(
-        "in-memory Dataset[Turn]" -> ExtractPipeline.extractNarrow(turns),
-        "parquet read" -> ExtractPipeline.extractNarrow(spark.read.parquet(dir)))) {
-      val got = viaSpark.collect().map(e => (e.conv_id, e.turn_idx) -> e).toMap
-      assert(got.size == local.length, input)
-      for (e <- local) {
-        assert(got((e.conv_id, e.turn_idx)) == e,
-          s"$input: mismatch at ${e.conv_id}/${e.turn_idx}")
+    withTempDir("graft-extract-in") { base =>
+      val dir = s"$base/t"
+      turns.write.parquet(dir)
+      // the same turns in memory and as a parquet read (the column-pruned
+      // scan `runCheckpointed` and q26 take)
+      for ((input, viaSpark) <- Seq(
+          "in-memory Dataset[Turn]" -> ExtractPipeline.extractNarrow(turns),
+          "parquet read" -> ExtractPipeline.extractNarrow(spark.read.parquet(dir)))) {
+        val got = viaSpark.collect().map(e => (e.conv_id, e.turn_idx) -> e).toMap
+        assert(got.size == local.length, input)
+        for (e <- local) {
+          assert(got((e.conv_id, e.turn_idx)) == e,
+            s"$input: mismatch at ${e.conv_id}/${e.turn_idx}")
+        }
       }
     }
     assert(local.forall(_.error == null))
@@ -119,135 +122,141 @@ class ExtractPipelineSpec extends AnyFunSuite {
     // round-robin repartition scrambles the generator's (conv_id,
     // turn_idx) order, so file order must come from the write's own sort
     val turns = Transcripts.generate(spark, 30).repartition(8)
-    val clean = Files.createTempDirectory("graft-clean").toString
-    val resumed = Files.createTempDirectory("graft-resumed").toString
+    withTempDir("graft-resume") { base =>
+      val clean = s"$base/clean"
+      val resumed = s"$base/resumed"
+      ExtractPipeline.runCheckpointed(spark, turns, clean, nBuckets = 4,
+        inputFingerprint = "seed=42/n=30")
+      ExtractPipeline.runCheckpointed(spark, turns, resumed, nBuckets = 4,
+        inputFingerprint = "seed=42/n=30")
+      // emulate a run that lost one bucket: delete its manifest + data,
+      // then resume
+      val fs = org.apache.hadoop.fs.FileSystem.getLocal(
+        spark.sparkContext.hadoopConfiguration)
+      val victim = new org.apache.hadoop.fs.Path(s"$resumed/_manifest/bucket-00003.json")
+      assert(fs.exists(victim))
+      fs.delete(victim, false)
+      fs.delete(new org.apache.hadoop.fs.Path(s"$resumed/bucket=3"), true)
+      // resume: must rebuild exactly the missing bucket
+      ExtractPipeline.runCheckpointed(spark, turns, resumed, nBuckets = 4,
+        inputFingerprint = "seed=42/n=30")
 
-    ExtractPipeline.runCheckpointed(spark, turns, clean, nBuckets = 4,
-      inputFingerprint = "seed=42/n=30")
-    ExtractPipeline.runCheckpointed(spark, turns, resumed, nBuckets = 4,
-      inputFingerprint = "seed=42/n=30")
-    // emulate a run that lost one bucket: delete its manifest + data,
-    // then resume
-    val fs = org.apache.hadoop.fs.FileSystem.getLocal(
-      spark.sparkContext.hadoopConfiguration)
-    val victim = new org.apache.hadoop.fs.Path(s"$resumed/_manifest/bucket-00003.json")
-    assert(fs.exists(victim))
-    fs.delete(victim, false)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$resumed/bucket=3"), true)
-    // resume: must rebuild exactly the missing bucket
-    ExtractPipeline.runCheckpointed(spark, turns, resumed, nBuckets = 4,
-      inputFingerprint = "seed=42/n=30")
-
-    def snap(dir: String) =
-      ExtractPipeline.readCommitted(spark, dir)
-        .select("conv_id", "turn_idx", "extractedText", "nParas", "nBytes")
-        .collect()
-        .map(r => (r.getString(0), r.getInt(1), r.getString(2), r.getInt(3), r.getLong(4)))
-        .sortBy(t => (t._1, t._2)).toSeq
-    assert(snap(clean) == snap(resumed))
-    assert(snap(clean).nonEmpty)
-    val cat = new HadoopManifestCatalog(clean, spark.sparkContext.hadoopConfiguration)
-    assert(cat.committedBuckets() == Set(0, 1, 2, 3))
-    for (dir <- Seq(clean, resumed)) {
-      // every written file holds its rows in (conv_id, turn_idx) order
-      assert(outOfOrder(dir) == 0L, dir)
-      // lineage surface: each bucket's manifest rows/bytes equal that
-      // bucket's own count / sum(nBytes) in the committed table
-      val (recorded, held) = manifestVsTable(dir, 4)
-      assert(recorded == held, dir)
+      def snap(dir: String) =
+        ExtractPipeline.readCommitted(spark, dir)
+          .select("conv_id", "turn_idx", "extractedText", "nParas", "nBytes")
+          .collect()
+          .map(r => (r.getString(0), r.getInt(1), r.getString(2), r.getInt(3), r.getLong(4)))
+          .sortBy(t => (t._1, t._2)).toSeq
+      assert(snap(clean) == snap(resumed))
+      assert(snap(clean).nonEmpty)
+      val cat = new HadoopManifestCatalog(clean, spark.sparkContext.hadoopConfiguration)
+      assert(cat.committedBuckets() == Set(0, 1, 2, 3))
+      for (dir <- Seq(clean, resumed)) {
+        // every written file holds its rows in (conv_id, turn_idx) order
+        assert(outOfOrder(dir) == 0L, dir)
+        // lineage surface: each bucket's manifest rows/bytes equal that
+        // bucket's own count / sum(nBytes) in the committed table
+        val (recorded, held) = manifestVsTable(dir, 4)
+        assert(recorded == held, dir)
+      }
+      val manifest = ExtractPipeline.readManifest(spark, clean).collect()
+      assert(manifest.forall(_.getAs[String]("inputFingerprint") == "seed=42/n=30"))
     }
-    val manifest = ExtractPipeline.readManifest(spark, clean).collect()
-    assert(manifest.forall(_.getAs[String]("inputFingerprint") == "seed=42/n=30"))
   }
 
   test("checkpointed run reads each input row once") {
     import spark.implicits._
-    val in = Files.createTempDirectory("graft-read-once-in").toString + "/t"
-    Transcripts.generate(spark, 30).write.parquet(in)
-    val nTurns = spark.read.parquet(in).count()
-    val reads = spark.sparkContext.longAccumulator("input-rows-read")
-    val turns = spark.read.parquet(in).as[Turn].map { t => reads.add(1); t }
-    val out = Files.createTempDirectory("graft-read-once-out").toString
-    ExtractPipeline.runCheckpointed(spark, turns, out, nBuckets = 16)
-    assert(reads.value == nTurns)
+    withTempDir("graft-read-once") { base =>
+      val in = s"$base/in"
+      Transcripts.generate(spark, 30).write.parquet(in)
+      val nTurns = spark.read.parquet(in).count()
+      val reads = spark.sparkContext.longAccumulator("input-rows-read")
+      val turns = spark.read.parquet(in).as[Turn].map { t => reads.add(1); t }
+      ExtractPipeline.runCheckpointed(spark, turns, s"$base/out", nBuckets = 16)
+      assert(reads.value == nTurns)
+    }
   }
 
   test("re-run over fully committed output is a no-op") {
     val turns = Transcripts.generate(spark, 10)
-    val dir = Files.createTempDirectory("graft-noop").toString
-    // 64 buckets over 10 conversations: most buckets get no rows
-    ExtractPipeline.runCheckpointed(spark, turns, dir, nBuckets = 64)
-    val cat = new HadoopManifestCatalog(dir, spark.sparkContext.hadoopConfiguration)
-    assert(cat.committedBuckets() == (0 until 64).toSet)
-    val (recorded, held) = manifestVsTable(dir, 64)
-    val empty = held.collect { case (b, (0L, _)) => b }.toSet
-    assert(empty.size >= 54)
-    assert(empty.forall(b => recorded(b) == ((0L, 0L))))
-    assert(recorded == held)
+    withTempDir("graft-noop") { dir =>
+      // 64 buckets over 10 conversations: most buckets get no rows
+      ExtractPipeline.runCheckpointed(spark, turns, dir, nBuckets = 64)
+      val cat = new HadoopManifestCatalog(dir, spark.sparkContext.hadoopConfiguration)
+      assert(cat.committedBuckets() == (0 until 64).toSet)
+      val (recorded, held) = manifestVsTable(dir, 64)
+      val empty = held.collect { case (b, (0L, _)) => b }.toSet
+      assert(empty.size >= 54)
+      assert(empty.forall(b => recorded(b) == ((0L, 0L))))
+      assert(recorded == held)
 
-    // every file under the table (data and manifests), with size + mtime
-    def state() = {
-      val walk = Files.walk(java.nio.file.Paths.get(dir))
-      try walk.iterator().asScala.filter(Files.isRegularFile(_))
-        .map(p => (p.toString, Files.size(p), Files.getLastModifiedTime(p)))
-        .toSet
-      finally walk.close()
+      // every file under the table (data and manifests), with size + mtime
+      def state() = {
+        val walk = Files.walk(java.nio.file.Paths.get(dir))
+        try walk.iterator().asScala.filter(Files.isRegularFile(_))
+          .map(p => (p.toString, Files.size(p), Files.getLastModifiedTime(p)))
+          .toSet
+        finally walk.close()
+      }
+      val before = state()
+      ExtractPipeline.runCheckpointed(spark, turns, dir, nBuckets = 64)
+      assert(state() == before)
     }
-    val before = state()
-    ExtractPipeline.runCheckpointed(spark, turns, dir, nBuckets = 64)
-    assert(state() == before)
   }
 
   test("manifest re-commit: a POSIX rename replaces the bucket file, a " +
     "contract rename refuses it, and neither loses the record") {
-    // commits bucket 5 twice (rows 10, then 20) through a local FS built
-    // from `impl`; returns the dir and whether the second commit threw
-    def twice(impl: Class[_]): (String, Boolean) = {
-      val conf = new org.apache.hadoop.conf.Configuration(
-        spark.sparkContext.hadoopConfiguration)
-      conf.set("fs.file.impl", impl.getName)
-      conf.setBoolean("fs.file.impl.disable.cache", true)
-      val dir = Files.createTempDirectory("graft-recommit").toString
-      val cat = new HadoopManifestCatalog(dir, conf)
-      cat.commit(ManifestEntry(5, 10L, 100L, "fp", "v"))
-      val refused =
-        try { cat.commit(ManifestEntry(5, 20L, 200L, "fp", "v")); false }
-        catch { case _: java.io.IOException => true }
-      (dir, refused)
-    }
-    def files(dir: String): Seq[String] = {
-      val ls = Files.list(java.nio.file.Paths.get(dir, "_manifest"))
-      try ls.iterator().asScala.map(_.getFileName.toString)
-        .filterNot(_.startsWith(".")).toSeq.sorted // checksum sidecars
-      finally ls.close()
-    }
-    def rows(dir: String): Seq[Long] =
-      ExtractPipeline.readManifest(spark, dir).collect()
-        .map(_.getAs[Long]("rows")).toSeq
+    withTempDir("graft-recommit") { base =>
+      // commits bucket 5 twice (rows 10, then 20) through a local FS built
+      // from `impl`; returns the dir and whether the second commit threw
+      def twice(impl: Class[_]): (String, Boolean) = {
+        val conf = new org.apache.hadoop.conf.Configuration(
+          spark.sparkContext.hadoopConfiguration)
+        conf.set("fs.file.impl", impl.getName)
+        conf.setBoolean("fs.file.impl.disable.cache", true)
+        val dir = s"$base/${impl.getSimpleName}"
+        val cat = new HadoopManifestCatalog(dir, conf)
+        cat.commit(ManifestEntry(5, 10L, 100L, "fp", "v"))
+        val refused =
+          try { cat.commit(ManifestEntry(5, 20L, 200L, "fp", "v")); false }
+          catch { case _: java.io.IOException => true }
+        (dir, refused)
+      }
+      def files(dir: String): Seq[String] = {
+        val ls = Files.list(java.nio.file.Paths.get(dir, "_manifest"))
+        try ls.iterator().asScala.map(_.getFileName.toString)
+          .filterNot(_.startsWith(".")).toSeq.sorted // checksum sidecars
+        finally ls.close()
+      }
+      def rows(dir: String): Seq[Long] =
+        ExtractPipeline.readManifest(spark, dir).collect()
+          .map(_.getAs[Long]("rows")).toSeq
 
-    // Hadoop's LocalFileSystem renames with File.renameTo (POSIX rename)
-    val (replaced, refused) =
-      twice(classOf[org.apache.hadoop.fs.LocalFileSystem])
-    assert(!refused)
-    assert(files(replaced) == Seq("bucket-00005.json"))
-    assert(rows(replaced) == Seq(20L))
-    // HDFS, and the Hive local FS on Spark's classpath, follow the
-    // FileSystem contract: no rename onto an existing file
-    val (kept, refusedContract) =
-      twice(classOf[ExtractPipelineSpec.ContractLocalFileSystem])
-    assert(refusedContract)
-    assert(files(kept).filter(_.endsWith(".json")) == Seq("bucket-00005.json"))
-    assert(rows(kept) == Seq(10L))
+      // Hadoop's LocalFileSystem renames with File.renameTo (POSIX rename)
+      val (replaced, refused) =
+        twice(classOf[org.apache.hadoop.fs.LocalFileSystem])
+      assert(!refused)
+      assert(files(replaced) == Seq("bucket-00005.json"))
+      assert(rows(replaced) == Seq(20L))
+      // HDFS, and the Hive local FS on Spark's classpath, follow the
+      // FileSystem contract: no rename onto an existing file
+      val (kept, refusedContract) =
+        twice(classOf[ExtractPipelineSpec.ContractLocalFileSystem])
+      assert(refusedContract)
+      assert(files(kept).filter(_.endsWith(".json")) == Seq("bucket-00005.json"))
+      assert(rows(kept) == Seq(10L))
+    }
   }
 
   test("manifest JSON escapes quotes and backslashes in the fingerprint") {
     val fp = "a\"b\\c"
-    val dir = Files.createTempDirectory("graft-escape").toString
-    ExtractPipeline.runCheckpointed(spark, Transcripts.generate(spark, 5),
-      dir, nBuckets = 4, inputFingerprint = fp)
-    val got = ExtractPipeline.readManifest(spark, dir).collect()
-      .map(_.getAs[String]("inputFingerprint")).toSeq
-    assert(got == Seq.fill(4)(fp), got)
+    withTempDir("graft-escape") { dir =>
+      ExtractPipeline.runCheckpointed(spark, Transcripts.generate(spark, 5),
+        dir, nBuckets = 4, inputFingerprint = fp)
+      val got = ExtractPipeline.readManifest(spark, dir).collect()
+        .map(_.getAs[String]("inputFingerprint")).toSeq
+      assert(got == Seq.fill(4)(fp), got)
+    }
   }
 }
 

@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import graft.SparkTestSession
+import graft.SparkTestSession.withTempDir
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -14,15 +15,16 @@ class PlanShapeSpec extends AnyFunSuite {
   private val sf = "/root/testdata/sf0.001"
 
   test("extractNarrow prunes the parquet scan to 3 columns, no shuffle") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-planshape")
-      .toString + "/in"
-    Transcripts.generate(spark, 5).write.mode("overwrite").parquet(dir)
-    val raw = spark.read.parquet(dir)
-    val plan = ExtractPipeline.extractNarrow(raw)
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("ReadSchema: struct<conv_id:string,turn_idx:int,text:string>"),
-      plan)
-    assert(!plan.contains("Exchange"), "extraction stage must not shuffle")
+    withTempDir("graft-planshape") { base =>
+      val dir = s"$base/in"
+      Transcripts.generate(spark, 5).write.mode("overwrite").parquet(dir)
+      val raw = spark.read.parquet(dir)
+      val plan = ExtractPipeline.extractNarrow(raw)
+        .queryExecution.executedPlan.toString
+      assert(plan.contains("ReadSchema: struct<conv_id:string,turn_idx:int,text:string>"),
+        plan)
+      assert(!plan.contains("Exchange"), "extraction stage must not shuffle")
+    }
   }
 
   test("filter pushdown reaches the scan") {
@@ -106,16 +108,17 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(!phys.contains("MapPartitions"),
       "extraction must not run inside the consuming plan")
     // a materialized table input must NOT be cached
-    val dir = java.nio.file.Files.createTempDirectory("graft-convorder")
-      .toString + "/t"
-    ExtractPipeline.extractNarrow(Transcripts.generate(spark, 3))
-      .write.mode("overwrite").parquet(dir)
-    import spark.implicits._
-    val fromTable = ExtractPipeline.withConvOrder(
-      spark.read.parquet(dir).as[ExtractedTurn])
-    assert(!fromTable.queryExecution.executedPlan.toString
-      .contains("Scan ExistingRDD"),
-      "table input must stay a pruned scan, not a checkpoint copy")
+    withTempDir("graft-convorder") { base =>
+      val dir = s"$base/t"
+      ExtractPipeline.extractNarrow(Transcripts.generate(spark, 3))
+        .write.mode("overwrite").parquet(dir)
+      import spark.implicits._
+      val fromTable = ExtractPipeline.withConvOrder(
+        spark.read.parquet(dir).as[ExtractedTurn])
+      assert(!fromTable.queryExecution.executedPlan.toString
+        .contains("Scan ExistingRDD"),
+        "table input must stay a pruned scan, not a checkpoint copy")
+    }
   }
 
   test("q26 flagship extraction plan has no Exchange") {

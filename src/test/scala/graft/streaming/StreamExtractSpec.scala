@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.SparkTestSession
+import graft.SparkTestSession.withTempDir
 import graft.pipeline.Transcripts
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
@@ -12,33 +13,34 @@ class StreamExtractSpec extends AnyFunSuite {
   test("streaming decode: corrupt files become error rows, the stream " +
     "survives and picks up late arrivals") {
     import graft.sources.OoxmlCorpus
-    val dir = Files.createTempDirectory("graft-stream-decode").toString
-    def put(name: String, bytes: Array[Byte]): Unit =
-      Files.write(java.nio.file.Paths.get(s"$dir/$name"), bytes)
-    put("doc_00001.docx", OoxmlCorpus.docxBytes(1))
-    put("doc_00002.pdf", OoxmlCorpus.corruptPdfBytes(2))
-    put("doc_00003.txt", OoxmlCorpus.garbageBytes(3))
-    val schema = spark.read.format("binaryFile").load(dir).schema
-    val stream = spark.readStream.format("binaryFile").schema(schema)
-      .load(dir)
-    val q = StreamExtract.decodeStream(stream).writeStream
-      .format("memory").queryName("decoded").outputMode("append").start()
-    try {
-      q.processAllAvailable()
-      def got(): Seq[(String, String)] = spark.table("decoded").collect()
-        .map(r => (r.getString(1), r.getString(2))).toSeq.sorted
-      assert(got() ==
-        Seq("docx" -> "ok", "pdf" -> "error", "text" -> "ok").sorted)
-      // the corrupt file did NOT kill the stream: late files still land
-      put("doc_00004.xls", OoxmlCorpus.xlsBytes(4))
-      q.processAllAvailable()
-      assert(got() == Seq("docx" -> "ok", "pdf" -> "error", "text" -> "ok",
-        "xls" -> "ok").sorted)
-      // and n_units carries the per-format unit counts
-      val units = spark.table("decoded").collect()
-        .map(r => (r.getString(1), r.getLong(3))).toMap
-      assert(units("docx") > 0 && units("xls") > 0 && units("pdf") == 0)
-    } finally q.stop()
+    withTempDir("graft-stream-decode") { dir =>
+      def put(name: String, bytes: Array[Byte]): Unit =
+        Files.write(java.nio.file.Paths.get(s"$dir/$name"), bytes)
+      put("doc_00001.docx", OoxmlCorpus.docxBytes(1))
+      put("doc_00002.pdf", OoxmlCorpus.corruptPdfBytes(2))
+      put("doc_00003.txt", OoxmlCorpus.garbageBytes(3))
+      val schema = spark.read.format("binaryFile").load(dir).schema
+      val stream = spark.readStream.format("binaryFile").schema(schema)
+        .load(dir)
+      val q = StreamExtract.decodeStream(stream).writeStream
+        .format("memory").queryName("decoded").outputMode("append").start()
+      try {
+        q.processAllAvailable()
+        def got(): Seq[(String, String)] = spark.table("decoded").collect()
+          .map(r => (r.getString(1), r.getString(2))).toSeq.sorted
+        assert(got() ==
+          Seq("docx" -> "ok", "pdf" -> "error", "text" -> "ok").sorted)
+        // the corrupt file did NOT kill the stream: late files still land
+        put("doc_00004.xls", OoxmlCorpus.xlsBytes(4))
+        q.processAllAvailable()
+        assert(got() == Seq("docx" -> "ok", "pdf" -> "error", "text" -> "ok",
+          "xls" -> "ok").sorted)
+        // and n_units carries the per-format unit counts
+        val units = spark.table("decoded").collect()
+          .map(r => (r.getString(1), r.getLong(3))).toMap
+        assert(units("docx") > 0 && units("xls") > 0 && units("pdf") == 0)
+      } finally q.stop()
+    }
   }
 
   test("q79 brace glob: one parent, plain basenames only") {
@@ -90,42 +92,41 @@ class StreamExtractSpec extends AnyFunSuite {
   test("streaming decode: oversized files become error rows without a " +
     "content read") {
     import graft.sources.OoxmlCorpus
-    val dir = Files.createTempDirectory("graft-stream-oversize").toString
-    Files.write(java.nio.file.Paths.get(s"$dir/big.docx"),
-      OoxmlCorpus.docxBytes(1))
-    Files.write(java.nio.file.Paths.get(s"$dir/small.txt"),
-      OoxmlCorpus.garbageBytes(1)) // 214 bytes, under the cap below
-    val schema = spark.read.format("binaryFile").load(dir).schema
-    val stream = spark.readStream.format("binaryFile").schema(schema)
-      .load(dir)
-    val q = StreamExtract.decodeStream(stream, maxBytes = 300).writeStream
-      .format("memory").queryName("decoded_ovr").outputMode("append")
-      .start()
-    try {
-      q.processAllAvailable()
-      val rows = spark.table("decoded_ovr").collect().map { r =>
-        val name = r.getString(0).substring(r.getString(0).lastIndexOf('/') + 1)
-        (name, r.getString(1), r.getString(2))
-      }.toSeq.sorted
-      assert(rows == Seq(("big.docx", "oversize", "error"),
-        ("small.txt", "text", "ok")).sorted, rows)
-    } finally q.stop()
+    withTempDir("graft-stream-oversize") { dir =>
+      Files.write(java.nio.file.Paths.get(s"$dir/big.docx"),
+        OoxmlCorpus.docxBytes(1))
+      Files.write(java.nio.file.Paths.get(s"$dir/small.txt"),
+        OoxmlCorpus.garbageBytes(1)) // 214 bytes, under the cap below
+      val schema = spark.read.format("binaryFile").load(dir).schema
+      val stream = spark.readStream.format("binaryFile").schema(schema)
+        .load(dir)
+      val q = StreamExtract.decodeStream(stream, maxBytes = 300).writeStream
+        .format("memory").queryName("decoded_ovr").outputMode("append")
+        .start()
+      try {
+        q.processAllAvailable()
+        val rows = spark.table("decoded_ovr").collect().map { r =>
+          val name = r.getString(0).substring(r.getString(0).lastIndexOf('/') + 1)
+          (name, r.getString(1), r.getString(2))
+        }.toSeq.sorted
+        assert(rows == Seq(("big.docx", "oversize", "error"),
+          ("small.txt", "text", "ok")).sorted, rows)
+      } finally q.stop()
+    }
   }
 
   test("streaming extraction equals batch extraction") {
-    import spark.implicits._
-    val dir = Files.createTempDirectory("graft-stream-in").toString
     val turns = Transcripts.generate(spark, 20)
-    turns.write.mode("overwrite").parquet(dir)
-
-    val schema = spark.read.parquet(dir).schema
-    val stream = spark.readStream.schema(schema).parquet(dir)
-    val q = graft.pipeline.ExtractPipeline.extractNarrow(stream)
-      .select("conv_id", "turn_idx", "nParas", "nBytes")
-      .writeStream.outputMode("append")
-      .format("memory").queryName("stream_out").start()
-    q.processAllAvailable()
-    q.stop()
+    withTempDir("graft-stream-in") { dir =>
+      turns.write.mode("overwrite").parquet(dir)
+      val schema = spark.read.parquet(dir).schema
+      val stream = spark.readStream.schema(schema).parquet(dir)
+      val q = graft.pipeline.ExtractPipeline.extractNarrow(stream)
+        .select("conv_id", "turn_idx", "nParas", "nBytes")
+        .writeStream.outputMode("append")
+        .format("memory").queryName("stream_out").start()
+      try q.processAllAvailable() finally q.stop()
+    }
     val streamed = spark.table("stream_out")
       .collect().map(r => (r.getString(0), r.getInt(1)) ->
         (r.getInt(2), r.getLong(3))).toMap
@@ -138,21 +139,21 @@ class StreamExtractSpec extends AnyFunSuite {
 
   test("streaming dedup drops exact duplicates within the watermark") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-stream-dedup").toString
     def ts(min: Int) = new java.sql.Timestamp(1735689600000L + min * 60000L)
-    Seq(
-      graft.pipeline.Turn("c1", 0, "user", "hello world", null, ts(0)),
-      graft.pipeline.Turn("c1", 1, "user", "HELLO   world", null, ts(1)),
-      graft.pipeline.Turn("c2", 0, "user", "hello world", null, ts(2)),
-      graft.pipeline.Turn("c2", 1, "user", "different text", null, ts(3)))
-      .toDF().write.mode("overwrite").parquet(dir)
-    val schema = spark.read.parquet(dir).schema
-    val stream = spark.readStream.schema(schema).parquet(dir)
-    val q = StreamExtract.dedupStream(stream)
-      .writeStream.outputMode("append")
-      .format("memory").queryName("dedup_out").start()
-    q.processAllAvailable()
-    q.stop()
+    withTempDir("graft-stream-dedup") { dir =>
+      Seq(
+        graft.pipeline.Turn("c1", 0, "user", "hello world", null, ts(0)),
+        graft.pipeline.Turn("c1", 1, "user", "HELLO   world", null, ts(1)),
+        graft.pipeline.Turn("c2", 0, "user", "hello world", null, ts(2)),
+        graft.pipeline.Turn("c2", 1, "user", "different text", null, ts(3)))
+        .toDF().write.mode("overwrite").parquet(dir)
+      val schema = spark.read.parquet(dir).schema
+      val stream = spark.readStream.schema(schema).parquet(dir)
+      val q = StreamExtract.dedupStream(stream)
+        .writeStream.outputMode("append")
+        .format("memory").queryName("dedup_out").start()
+      try q.processAllAvailable() finally q.stop()
+    }
     val texts = spark.table("dedup_out")
       .collect().map(_.getAs[String]("text")).sorted
     // "hello world" / "HELLO   world" / "hello world" share one
@@ -191,16 +192,16 @@ class StreamExtractSpec extends AnyFunSuite {
 
   test("stateful conversation progress accumulates per conv") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-stream-state").toString
-    Transcripts.generate(spark, 8).write.mode("overwrite").parquet(dir)
-    val schema = spark.read.parquet(dir).schema
-    val turns = spark.readStream.schema(schema).parquet(dir)
-      .as[graft.pipeline.Turn]
-    val q = StreamExtract.conversationProgressEvicting(turns)
-      .writeStream.outputMode("update")
-      .format("memory").queryName("state_out").start()
-    q.processAllAvailable()
-    q.stop()
+    withTempDir("graft-stream-state") { dir =>
+      Transcripts.generate(spark, 8).write.mode("overwrite").parquet(dir)
+      val schema = spark.read.parquet(dir).schema
+      val turns = spark.readStream.schema(schema).parquet(dir)
+        .as[graft.pipeline.Turn]
+      val q = StreamExtract.conversationProgressEvicting(turns)
+        .writeStream.outputMode("update")
+        .format("memory").queryName("state_out").start()
+      try q.processAllAvailable() finally q.stop()
+    }
     val got = spark.table("state_out")
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     val expected = Transcripts.generate(spark, 8).collect()
