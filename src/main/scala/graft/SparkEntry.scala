@@ -123,6 +123,33 @@ object SparkEntry {
     parents.head + names.mkString("/{", ",", "}")
   }
 
+  /** The decode-status corpora of q69 and q79 as `(kind, dir)`: the
+    * four corrupt families and the clean docx corpus, under one parent.
+    */
+  private def statusCorpora(): Seq[(String, String)] = {
+    import graft.sources.OoxmlCorpus._
+    Seq("bad_pdf" -> ensureCorruptPdf(), "bad_cfb" -> ensureCorruptCfb(),
+      "bad_zip" -> ensureCorruptZip(), "garbage" -> ensureGarbage(),
+      "clean" -> ensureDocx())
+  }
+
+  /** [[graft.streaming.StreamExtract.decodeStream]]'s rows as q69/q79's
+    * `(kind, file_id, format, status)`: `kind` is the corpus whose dir
+    * basename equals the file's parent dir, `file_id` the `n` of its
+    * `doc_<n>` name.
+    */
+  private def statusRows(decoded: DataFrame,
+      corpora: Seq[(String, String)]): DataFrame = {
+    val kinds = corpora.map { case (kind, d) =>
+      d.substring(d.lastIndexOf('/') + 1) -> kind }.toMap
+    val segs = split(col("path"), "/")
+    decoded.select(
+      element_at(typedLit(kinds), element_at(segs, -2)).as("kind"),
+      regexp_extract(element_at(segs, -1), "doc_(\\d+)", 1).cast("int")
+        .as("file_id"),
+      col("format"), col("status"))
+  }
+
   /** Recursive delete of a local directory (absent is fine). */
   private def deleteTree(dir: String): Unit = {
     val root = java.nio.file.Paths.get(dir)
@@ -377,8 +404,7 @@ object SparkEntry {
       val r = st.agg(
         coalesce(sum(when(col("_f") && col("_o"), 1L)), lit(0L)),
         coalesce(sum(when(col("_f") && !col("_o"), 1L)), lit(0L))).first()
-      val s2 = s
-      import s2.implicits._
+      import s.implicits._
       Seq((r.getLong(0), r.getLong(1))).toDF("n_both", "n_f_only")
     }),
 
@@ -533,8 +559,7 @@ object SparkEntry {
     // the same logic in SQL — the DuckDB oracles of these queries are
     // exactly that re-expression and translate to Spark SQL directly.
     "q25_langid_ngram" -> ((s, dir) => {
-      val s2 = s
-      import s2.implicits._
+      import s.implicits._
       t(s, dir, "documents").select("doc_id", "text").as[(Long, String)]
         .map { case (id, text) => (id, operators.LangId.detect(text)) }
         .toDF("doc_id", "lang_guess")
@@ -584,8 +609,7 @@ object SparkEntry {
 
     "q29_multimodal_features" -> ((s, dir) => {
       val assets = operators.Multimodal.generate(s, 300)
-      val s2 = s
-      import s2.implicits._
+      import s.implicits._
       operators.Multimodal.extractFeatures(assets, 8)
         .groupByKey(_.modality)
         .mapGroups { (m, it) =>
@@ -601,8 +625,7 @@ object SparkEntry {
       // deterministically from documents.doc_id — the SAME derivation in
       // the DuckDB oracle, which re-parses it with the date regex and
       // month-containment mapping, so the dialect itself is oracled
-      val s2 = s
-      import s2.implicits._
+      import s.implicits._
       val months = Seq("января", "марта", "мая", "07", "декабря")
       t(s, dir, "documents").select(col("doc_id")).as[Long]
         .map { id =>
@@ -618,8 +641,7 @@ object SparkEntry {
     // ---------- dead-path scalar dialects (X5/X7), oracled over
     // doc_id-derived text like q30 ----------
     "q36_doc_numbers" -> ((s, dir) => {
-      val s2 = s
-      import s2.implicits._
+      import s.implicits._
       t(s, dir, "documents").select(col("doc_id")).as[Long]
         .map { id =>
           val num = if (id % 10 == 0) "---" else s"$id-ФЗ"
@@ -631,8 +653,7 @@ object SparkEntry {
     }),
 
     "q37_name_short" -> ((s, dir) => {
-      val s2 = s
-      import s2.implicits._
+      import s.implicits._
       t(s, dir, "documents").select(col("doc_id")).as[Long]
         .map { id =>
           val cell =
@@ -661,8 +682,7 @@ object SparkEntry {
     // re-runs the regex (both engines are greedy on the \s* tails;
     // outputs are trimmed on both sides to normalize them)
     "q39_person_mentions" -> ((s, dir) => {
-      val s2 = s
-      import s2.implicits._
+      import s.implicits._
       t(s, dir, "documents").select(col("doc_id")).as[Long]
         .map { id =>
           val surnames =
@@ -715,8 +735,7 @@ object SparkEntry {
     // docs have the closed form "one header span covering the line"; a
     // NULL text extracts as "" and has no spans, as the oracle drops it
     "q44_extract_spans" -> ((s, dir) => {
-      val s2 = s
-      import s2.implicits._
+      import s.implicits._
       t(s, dir, "documents").select("doc_id", "text").as[(Long, String)]
         .flatMap { case (id, text) =>
           TurnExtractor.extract(null, 0, text).spans
@@ -888,8 +907,7 @@ object SparkEntry {
       // kernel over the documents table: prose in, paragraphs out. A
       // NULL text extracts as "" and reads (0, 0); the oracle's CASE
       // answers (1, NULL) there, but no generated table has a NULL text
-      val s2 = s
-      import s2.implicits._
+      import s.implicits._
       t(s, dir, "documents").select("doc_id", "text").as[(Long, String)]
         .map { case (id, text) =>
           val e = TurnExtractor.extract(null, 0, text)
@@ -945,8 +963,7 @@ object SparkEntry {
         graft.sources.OoxmlCorpus.ensureXls(),
         graft.sources.OoxmlCorpus.ensureXlsx(),
         graft.sources.OoxmlCorpus.ensurePdf())
-      val s2 = s
-      import s2.implicits._
+      import s.implicits._
       binaryFiles(s, "doc_*", dirs: _*)
         .flatMap { case (_, fileId, bytes) =>
           import graft.sources.BinaryDispatch._
@@ -986,32 +1003,15 @@ object SparkEntry {
     "q69_decode_status" -> ((s, dir) => {
       // corrupt-input totality over the mixed binary corpus: at 10^8+
       // files some bytes ARE corrupt, and the scan's per-row contract is
-      // safeDecode — an (ok|error) row per file, never a dead job. The
-      // corrupt corpora are STRUCTURALLY failed (every id shares the
-      // same structural hole, pinned per-id by DecodeFuzzSpec), which is
-      // what lets the oracle state every row in closed form.
-      val dirs = Seq(
-        graft.sources.OoxmlCorpus.ensureCorruptPdf(),
-        graft.sources.OoxmlCorpus.ensureCorruptCfb(),
-        graft.sources.OoxmlCorpus.ensureCorruptZip(),
-        graft.sources.OoxmlCorpus.ensureGarbage(),
-        graft.sources.OoxmlCorpus.ensureDocx())
-      val s2 = s
-      import s2.implicits._
-      binaryFiles(s, "doc_*", dirs: _*)
-        .map { case (path, fileId, bytes) =>
-          val segs = path.split('/')
-          val kind = segs(segs.length - 2) match {
-            case d if d.startsWith("graft_badpdf_corpus") => "bad_pdf"
-            case d if d.startsWith("graft_badcfb_corpus") => "bad_cfb"
-            case d if d.startsWith("graft_badzip_corpus") => "bad_zip"
-            case d if d.startsWith("graft_garbage_corpus") => "garbage"
-            case _ => "clean"
-          }
-          val r = graft.sources.BinaryDispatch.safeDecode(bytes)
-          (kind, fileId, r.format, r.status)
-        }
-        .toDF("kind", "file_id", "format", "status")
+      // decodeStream's — an (ok|error) row per file, never a dead job,
+      // oversized files included. The corrupt corpora are STRUCTURALLY
+      // failed (every id shares the same structural hole, pinned per-id
+      // by DecodeFuzzSpec), which is what lets the oracle state every
+      // row in closed form.
+      val corpora = statusCorpora()
+      statusRows(graft.streaming.StreamExtract.decodeStream(
+        s.read.format("binaryFile").load(braceGlob(corpora.map(_._2)))),
+        corpora)
     }),
 
     "q70_quality_buckets" -> ((s, dir) => {
@@ -1105,39 +1105,22 @@ object SparkEntry {
     }),
 
     "q79_stream_decode" -> ((s, dir) => {
-      // the q69 totality contract carried onto the STREAMING ingest
-      // path (VERDICT r04 #8): the same corrupt corpora consumed
-      // through a real binaryFile readStream -> decodeStream ->
-      // Trigger.AvailableNow -> foreachBatch appending into a parquet
-      // table — the landing-zone deployment shape. The stream must
-      // TERMINATE with every corrupt file landed as an error ROW
-      // (never a dead stream), and the oracle is q69's closed form
-      // restated over decodeStream's output.
-      val dirs = Seq(
-        graft.sources.OoxmlCorpus.ensureCorruptPdf(),
-        graft.sources.OoxmlCorpus.ensureCorruptCfb(),
-        graft.sources.OoxmlCorpus.ensureCorruptZip(),
-        graft.sources.OoxmlCorpus.ensureGarbage(),
-        graft.sources.OoxmlCorpus.ensureDocx())
-      // file streaming sources need an explicit schema; binaryFile's is
-      // FIXED by the format (path, modificationTime, length, content —
-      // BinaryFileFormat.schema), so state it literally instead of
-      // paying a batch listing probe per call
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("path",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("modificationTime",
-          org.apache.spark.sql.types.TimestampType),
-        org.apache.spark.sql.types.StructField("length",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("content",
-          org.apache.spark.sql.types.BinaryType)))
+      // q69 carried onto the STREAMING ingest path (VERDICT r04 #8):
+      // the same corpora, decodeStream and statusRows, with a real
+      // binaryFile readStream as the source and Trigger.AvailableNow ->
+      // foreachBatch appending into a parquet table as the sink — the
+      // landing-zone deployment shape. The stream must TERMINATE with
+      // every corrupt file landed as an error ROW (never a dead
+      // stream); the oracle is q69's closed form.
+      val corpora = statusCorpora()
       // ONE glob source instead of five unioned readStreams: the same
       // file set, but one directory listing + one file-source log per
       // micro-batch instead of five (guide §6 — listing cost scales
       // with source count; the union form paid it 5x per trigger)
-      val files = s.readStream.format("binaryFile").schema(schema)
-        .load(braceGlob(dirs))
+      val files = s.readStream.format("binaryFile")
+        .schema(org.apache.spark.sql.execution.datasources.binaryfile
+          .BinaryFileFormat.schema)
+        .load(braceGlob(corpora.map(_._2)))
       // scratch output + checkpoint on /dev/shm (the same RAM-backed
       // scratch the bench's spark.local.dir uses): the micro-batch's
       // parquet append + commit-log fsyncs are the stream's I/O floor,
@@ -1163,16 +1146,7 @@ object SparkEntry {
           .foreachBatch(sink)
           .start()
         q.awaitTermination()
-        val seg = element_at(split(col("path"), "/"), -2)
-        val landed = s.read.parquet(out).select(
-          when(seg.startsWith("graft_badpdf_corpus"), "bad_pdf")
-            .when(seg.startsWith("graft_badcfb_corpus"), "bad_cfb")
-            .when(seg.startsWith("graft_badzip_corpus"), "bad_zip")
-            .when(seg.startsWith("graft_garbage_corpus"), "garbage")
-            .otherwise("clean").as("kind"),
-          regexp_extract(element_at(split(col("path"), "/"), -1),
-            "doc_(\\d+)", 1).cast("int").as("file_id"),
-          col("format"), col("status"))
+        val landed = statusRows(s.read.parquet(out), corpora)
         s.createDataFrame(java.util.Arrays.asList(landed.collect(): _*),
           landed.schema)
       } finally {
@@ -1284,8 +1258,7 @@ object SparkEntry {
       // functions of (id, x, y) / (id, t), and PNG/PCM are lossless).
       // The decode runs in executors (range -> flatMap), one row per
       // asset: (modality, asset_id, d1..d5)
-      val s2 = s
-      import s2.implicits._
+      import s.implicits._
       def r6(x: Double): Double =
         BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
       s.range(30).flatMap { boxed =>
@@ -1307,8 +1280,7 @@ object SparkEntry {
       // kernel P2-P8 (grid selection, cell assignment, skip-row title
       // quirk, cross-page row stitch) -> stakeholders. Even-id files
       // are FlateDecode-compressed, odd uncompressed — same answer.
-      val s2 = s
-      import s2.implicits._
+      import s.implicits._
       binaryFiles(s, "doc_*.pdf", graft.sources.OoxmlCorpus.ensurePdf())
         .flatMap { case (_, fileId, bytes) =>
           val (pages, w) = graft.sources.PdfDecode.pagesWithWidth(bytes)

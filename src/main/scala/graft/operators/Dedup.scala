@@ -801,7 +801,8 @@ object Dedup {
   /** The SimHash leg's front: signature map -> exact collapse on the
     * signature -> chunk-pair keys -> bounded candidate pairs -> exact
     * hamming [[verifyPairs]] on the rep signatures. Every signature
-    * group is eligible; its internal pairs carry hamming 0.
+    * group is eligible; its internal pairs carry hamming 0. A document
+    * without tokens gets no signature and is in no pair or group.
     */
   private def simhashRepPairs(df: DataFrame, textCol: String, idCol: String,
       maxHamming: Int, maxBucket: Int,
@@ -814,10 +815,12 @@ object Dedup {
     val sigs = df.select(col(idCol).cast("long").as("id"),
         col(textCol).as("text"))
       .as[(Long, String)]
-      .map { case (id, text) =>
+      // a NULL or blank text has no tokens and so no signature: signature
+      // 0 would pair it with every other token-less document at hamming 0
+      .flatMap { case (id, text) =>
         val toks = if (text == null) Array.empty[String]
                    else text.toLowerCase.split("\\s+").filter(_.nonEmpty)
-        (id, simhash64(toks))
+        if (toks.isEmpty) None else Some((id, simhash64(toks)))
       }
       .toDF("id", "sig")
 

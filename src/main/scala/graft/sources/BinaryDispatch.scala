@@ -17,7 +17,7 @@ import graft.core.{MultiDoc, PdfTable, SheetTable}
   */
 object BinaryDispatch {
 
-  sealed trait Decoded
+  sealed trait Decoded { def format: String }
   final case class DecodedDoc(format: String, md: MultiDoc) extends Decoded
   final case class DecodedSheets(format: String,
                                  sheets: Seq[SheetTable.Sheet]) extends Decoded
@@ -89,13 +89,7 @@ object BinaryDispatch {
     if (bytes == null) return SafeDecoded("null", "error", "NullContent", None)
     try {
       val d = decode(bytes)
-      val fmt = d match {
-        case DecodedDoc(f, _) => f
-        case DecodedSheets(f, _) => f
-        case DecodedPdf(f, _) => f
-        case DecodedText(f, _) => f
-      }
-      SafeDecoded(fmt, "ok", "", Some(d))
+      SafeDecoded(d.format, "ok", "", Some(d))
     } catch {
       case scala.util.control.NonFatal(e) =>
         SafeDecoded(coarseSniff(bytes), "error",

@@ -1075,10 +1075,7 @@ object PdfDecode {
   }
 
   /** PDF bytes -> kernel pages (S4 + P1, real). */
-  def pages(bytes: Array[Byte]): Seq[Page] = {
-    val (pd, _) = pageData(bytes)
-    pd.map(p => interpret(p.content, p.fonts, p.rotate, p.mediaW, p.mediaH))
-  }
+  def pages(bytes: Array[Byte]): Seq[Page] = pagesWithWidth(bytes)._1
 
   /** One-parse form: pages AND media width from a single object scan —
     * what [[graft.sources.BinaryDispatch.decode]] uses (calling

@@ -13,8 +13,8 @@ import graft.pipeline.Turn
   * `ExtractPipeline.extractNarrow` applied to a `readStream` frame; this
   * object holds only what a stream adds on top: a watermark-evicting
   * per-conversation progress tracker, exact dedup bounded by the
-  * watermark, and a binary decode stream whose corrupt files become
-  * error rows.
+  * watermark, and a binary decode (batch or streaming) whose corrupt
+  * files become error rows.
   */
 object StreamExtract {
 
@@ -83,19 +83,16 @@ object StreamExtract {
       .dropDuplicatesWithinWatermark("_fp")
       .drop("_fp")
 
-  /** Streaming binary decode: [[graft.sources.BinaryDispatch.safeDecode]]
-    * under a `binaryFile` readStream — a landing-zone directory of raw
-    * document files becomes an append stream of per-file decode rows
-    * `(path, format, status, n_units)`. Stateless per file (no watermark,
-    * no state store); a corrupt file yields an error ROW, never a dead
-    * stream — the q69 corpus-scan contract carried to the streaming
-    * ingest path. `n_units` is the format's natural unit count
-    * (paragraphs / sheet rows / stakeholders / chars), the cheap signal
-    * a landing-zone monitor alerts on.
-    *
-    * Input contract: a `binaryFile`-shaped frame with `path`, `content`
-    * and `length` columns (a hand-built (path, content) frame works
-    * too — `length` is derived from the content bytes when absent).
+  /** Binary decode: [[graft.sources.BinaryDispatch.safeDecode]] over a
+    * `binaryFile` frame, batch or streaming — a directory of raw
+    * document files becomes per-file decode rows
+    * `(path, format, status, n_units)`. It is the one decode-status path:
+    * the batch query q69 runs it over `read`, the streaming query q79
+    * over `readStream` (a landing zone as an append stream). Stateless
+    * per file (no watermark, no state store); a corrupt file yields an
+    * error ROW, never a dead job or stream. `n_units` is the format's
+    * natural unit count (paragraphs / sheet rows / stakeholders /
+    * chars), the cheap signal a landing-zone monitor alerts on.
     *
     * Files over `maxBytes` become error rows WITHOUT their content ever
     * being read: the length predicate is pushed into the binaryFile
@@ -106,18 +103,11 @@ object StreamExtract {
     * .maxLength` limit for the same reason: a cap above that limit
     * would re-expose the source-level throw it exists to prevent.
     */
-  def decodeStream(files0: DataFrame,
+  def decodeStream(files: DataFrame,
                    maxBytes: Long = 512L * 1024 * 1024): DataFrame = {
-    val s = files0.sparkSession
+    val s = files.sparkSession
     import s.implicits._
     import graft.sources.BinaryDispatch._
-    val files =
-      if (files0.columns.contains("length")) files0
-      // null content -> length 0 (NOT null: a null length fails BOTH
-      // branch filters and the row would silently vanish); the row
-      // reaches safeDecode, which reports it as an error row
-      else files0.withColumn("length",
-        coalesce(octet_length(col("content")).cast("long"), lit(0L)))
     val sourceMax = s.conf
       .getOption("spark.sql.sources.binaryFile.maxLength")
       .map(_.toLong).getOrElse(Int.MaxValue.toLong)

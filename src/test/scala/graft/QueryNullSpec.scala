@@ -72,4 +72,41 @@ class QueryNullSpec extends AnyFunSuite {
       }
     }
   }
+
+  test("q22 puts NULL and blank texts in no SimHash pair or group") {
+    import spark.implicits._
+    val prose = "key agg row scan slow fast table value part hash join"
+    val docs = Seq[(Long, Option[String])](
+      (2L, None), // self-dupped by q22: its copy is NULL too
+      (51L, Some(prose)),
+      (52L, Some(prose.toUpperCase.replace(" ", "  "))), // planted pair
+      (53L, Some("batch window spark order data column agg merge vector")),
+      (54L, None),
+      (55L, Some("")),
+      (56L, Some(" \t ")),
+      (57L, Some("\n")))
+    withTempDir("graft-q22-null") { dir =>
+      docs.toDF("doc_id", "text").write.parquet(s"$dir/documents.parquet")
+      val got = SparkEntry.queries("q22_simhash_neardups")(spark, dir)
+        .select("id_a", "id_b").as[(Long, Long)].collect().toSet
+      // the oracle's closed form: all pairs at hamming <= 3 among the
+      // documents that have tokens
+      val sigs = docs.collect { case (id, Some(t)) if t.trim.nonEmpty =>
+        id -> graft.operators.Dedup.simhash64(
+          t.toLowerCase.split("\\s+").filter(_.nonEmpty).toSeq)
+      }
+      val want = (for {
+        (a, sa) <- sigs; (b, sb) <- sigs
+        if a < b && java.lang.Long.bitCount(sa ^ sb) <= 3
+      } yield (a, b)).toSet
+      assert(want.contains((51L, 52L)))
+      assert(got == want, got)
+    }
+    val groups = graft.operators.Dedup.simhashNearDupGroups(
+        docs.toDF("doc_id", "text"), "text", "doc_id")
+      .as[(Long, Long)].collect().toMap
+    assert(groups.keySet.intersect(Set(2L, 54L, 55L, 56L, 57L)).isEmpty,
+      groups)
+    assert(groups(51L) == groups(52L))
+  }
 }

@@ -3,6 +3,7 @@ package graft.streaming
 import graft.SparkTestSession
 import graft.SparkTestSession.withTempDir
 import graft.pipeline.Transcripts
+import org.apache.spark.sql.execution.datasources.binaryfile.BinaryFileFormat
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
 
@@ -19,9 +20,8 @@ class StreamExtractSpec extends AnyFunSuite {
       put("doc_00001.docx", OoxmlCorpus.docxBytes(1))
       put("doc_00002.pdf", OoxmlCorpus.corruptPdfBytes(2))
       put("doc_00003.txt", OoxmlCorpus.garbageBytes(3))
-      val schema = spark.read.format("binaryFile").load(dir).schema
-      val stream = spark.readStream.format("binaryFile").schema(schema)
-        .load(dir)
+      val stream = spark.readStream.format("binaryFile")
+        .schema(BinaryFileFormat.schema).load(dir)
       val q = StreamExtract.decodeStream(stream).writeStream
         .format("memory").queryName("decoded").outputMode("append").start()
       try {
@@ -58,7 +58,8 @@ class StreamExtractSpec extends AnyFunSuite {
     // it is oracled against (10 bad_pdf/bad_cfb/bad_zip errors, 10
     // garbage-ok, 40 clean-docx-ok). awaitTermination inside the entry
     // doubles as the termination assertion: a corrupt file that killed
-    // the stream would hang or throw here, not mis-count.
+    // the stream would hang or throw here, not mis-count. The batch
+    // query q69 must land the same rows.
     val shm = java.nio.file.Paths.get("/dev/shm")
     val scratch =
       if (Files.isDirectory(shm)) shm
@@ -72,10 +73,11 @@ class StreamExtractSpec extends AnyFunSuite {
       } finally ls.close()
     }
     val before = q79Dirs()
-    val rows = graft.SparkEntry.queries("q79_stream_decode")(spark, "")
+    def run(q: String) = graft.SparkEntry.queries(q)(spark, "")
       .collect()
       .map(r => (r.getString(0), r.getInt(1), r.getString(2),
         r.getString(3)))
+    val rows = run("q79_stream_decode")
     // the stream's output and checkpoint dirs are gone once the result
     // is collected
     assert((q79Dirs() -- before).isEmpty, q79Dirs() -- before)
@@ -87,6 +89,7 @@ class StreamExtractSpec extends AnyFunSuite {
     assert(byKind("garbage").forall(r => r._3 == "text" && r._4 == "ok"))
     assert(byKind("clean").forall(r => r._3 == "docx" && r._4 == "ok"))
     assert(byKind("clean").map(_._2).sorted.toSeq == (0 until 40))
+    assert(run("q69_decode_status").sorted.toSeq == rows.sorted.toSeq)
   }
 
   test("streaming decode: oversized files become error rows without a " +
@@ -97,9 +100,8 @@ class StreamExtractSpec extends AnyFunSuite {
         OoxmlCorpus.docxBytes(1))
       Files.write(java.nio.file.Paths.get(s"$dir/small.txt"),
         OoxmlCorpus.garbageBytes(1)) // 214 bytes, under the cap below
-      val schema = spark.read.format("binaryFile").load(dir).schema
-      val stream = spark.readStream.format("binaryFile").schema(schema)
-        .load(dir)
+      val stream = spark.readStream.format("binaryFile")
+        .schema(BinaryFileFormat.schema).load(dir)
       val q = StreamExtract.decodeStream(stream, maxBytes = 300).writeStream
         .format("memory").queryName("decoded_ovr").outputMode("append")
         .start()
